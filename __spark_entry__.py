@@ -2,7 +2,7 @@
 
 entry(spark): flagship end-to-end pipeline — deterministic image+geotag
 synthesis over a grid road map, tile assignment, broadcast-index radius
-join, and the per-trace Viterbi matcher (applyInPandas kernel).
+join, and the per-trace Viterbi matcher (mapInPandas kernel).
 
 queries()/oracle_sql(): one entry per implemented operator family from
 SURVEY.md §2 (see barefoot_spark/entry_queries.py). SQL-expressible ops

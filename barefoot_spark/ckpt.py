@@ -34,14 +34,17 @@ class StageRunner:
     def __init__(self, spark: SparkSession, base_dir: str):
         self.spark = spark
         self.base = base_dir.rstrip("/")
+        # resolved once: py4j walks ``jvm.org.apache.hadoop.fs.Path`` one
+        # package segment at a time, each a reflective lookup on the JVM
+        # (~1.6 ms per walk vs ~0.2 ms for a call on the resolved class)
+        self._Path = spark._jvm.org.apache.hadoop.fs.Path
         fs, path = self._fs(self.base)
         fs.mkdirs(path)
 
     def _fs(self, path: str):
         """(FileSystem, Path) for a possibly-scheme-qualified path —
         resolves hdfs://, s3a://, file:, and bare local paths alike."""
-        jvm = self.spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(path)
+        jpath = self._Path(path)
         return (jpath.getFileSystem(self.spark._jsc.hadoopConfiguration()),
                 jpath)
 

@@ -1,4 +1,4 @@
-"""HMM map matching: per-trace Viterbi kernel as an applyInPandas group op.
+"""HMM map matching: per-trace Viterbi kernel run per partition by mapInPandas.
 
 Re-implements the semantics of barefoot's matcher stack —
 candidate search + emission (matcher/Matcher.java:185-238), Minset
@@ -6,8 +6,11 @@ pruning (matcher/Minset.java:71-114), per-predecessor shortest-path
 transitions (matcher/Matcher.java:248-351), edge-based Dijkstra
 (topology/Dijkstra.java:90-295), HMM forward step
 (markov/Filter.java:114-244), and KState estimate/backtrack
-(markov/KState.java:177-301) — as one numpy kernel executed per trace
-group inside ``df.groupBy("trace_id").applyInPandas``.
+(markov/KState.java:177-301) — as one numpy kernel per trace. The
+samples are hash-repartitioned by ``trace_id`` (partition count sized by
+work, ``session.repartition_by_work``) and ``mapInPandas`` runs the kernel
+once per partition, looping over its whole traces with one shared route
+cache.
 
 Spark-first shape (the reference's own Spark recipe, wiki/Home.md:716-770,
 modernized): the road index is a broadcast variable, traces are the
@@ -32,6 +35,7 @@ from pyspark.sql.types import (
 
 from .. import geo
 from ..index import RoadIndex
+from ..session import repartition_by_work
 
 MATCH_SCHEMA = StructType([
     StructField("trace_id", StringType()),
@@ -563,7 +567,6 @@ def forward_step(idx: RoadIndex, params: MatcherParams, prev_vector,
     Returns the new candidate vector (possibly empty)."""
     cost_vec = idx.cost_vector(params.routing_cost)
     bound_vec = idx.cost_dist
-    tp_vec = idx.cost_timeprio
     sig2 = params.sigma ** 2
     sqrt_2pi_sig2 = np.sqrt(2 * np.pi * sig2)
     sigA2 = params.sigma_a ** 2
@@ -776,14 +779,6 @@ def match_trace(idx: RoadIndex, trace_id, sample_ids, times_ms, lats, lons,
                 lats, lons = lats[keep_m], lons[keep_m]
                 azimuths = azimuths[keep_m]
 
-    cost_vec = idx.cost_vector(params.routing_cost)
-    bound_vec = idx.cost_dist
-    tp_vec = idx.cost_timeprio
-    sig2 = params.sigma ** 2
-    sqrt_2pi_sig2 = np.sqrt(2 * np.pi * sig2)
-    sigA2 = params.sigma_a ** 2
-    sqrt_2pi_sigA = np.sqrt(2 * np.pi * sigA2)
-
     # thinning (Matcher.java:376-380) needs the last *kept* sample, so the
     # kept set is decided sequentially; radius search runs vectorized on
     # the kept samples afterwards.
@@ -872,9 +867,14 @@ def match_traces(samples: DataFrame, idx_bc, params: MatcherParams | None = None
     """samples(trace_id, sample_id, time, lat, lon[, azimuth]) ->
     matched rows. idx_bc: ``sc.broadcast(RoadIndex)``.
 
-    Scale notes: the only shuffle is the groupBy(trace_id); salt upstream
-    if trace sizes are skewed (SURVEY.md §4). The index rides the
-    broadcast, never the shuffle.
+    Scale notes: the only shuffle is a hash repartition by trace_id, then
+    one ``mapInPandas`` kernel call per partition. Its partition count is
+    sized by work (``session.repartition_by_work``: ~ROWS_PER_TASK samples
+    per task, capped by cores and traces), because AQE would coalesce
+    this small-in-bytes, CPU-heavy exchange into one task;
+    ``num_partitions`` overrides it. Salt upstream if trace sizes are
+    skewed (SURVEY.md §4). The index rides the broadcast, never the
+    shuffle.
     """
     params = params or MatcherParams()
     if "azimuth" not in samples.columns:
@@ -902,7 +902,6 @@ def match_traces(samples: DataFrame, idx_bc, params: MatcherParams | None = None
                 route_cache=route_cache))
         yield pd.DataFrame(rows, columns=[f.name for f in MATCH_SCHEMA.fields])
 
-    parts = [num_partitions] if num_partitions else []
     cols = ["trace_id", "sample_id", "time", "lat", "lon", "azimuth"]
-    return samples.select(*cols).repartition(*parts, "trace_id") \
-        .mapInPandas(kernel, MATCH_SCHEMA)
+    return repartition_by_work(samples.select(*cols), "trace_id",
+                               num_partitions).mapInPandas(kernel, MATCH_SCHEMA)

@@ -131,11 +131,10 @@ def main():
     # 3. Viterbi match. Trace generation is driver-side python (~33ms/
     # trace), so synthesize once into a parquet cache that every run at
     # every parallelism level reads — the two levels consume the
-    # byte-identical input file. Partition count is FIXED across levels
+    # byte-identical input file. The input layout is fixed across levels
     # (the way a real dataset's partitioning stays fixed as executors
-    # are added): ~62 traces/partition keeps the per-partition route
-    # cache warm, and >1 wave per level lets greedy scheduling smooth
-    # the binomial skew of hashing trace_ids into partitions.
+    # are added); the match runs the default path, so the Viterbi task
+    # count is the one ``repartition_by_work`` picks at this level.
     import pandas as pd
     cache = os.path.join(REPO, "BENCH",
                          f"_traces_{grid_n}_{n_traces}.parquet")
@@ -149,13 +148,17 @@ def main():
     samples_df = spark.createDataFrame(geotags).repartition(
         nparts, "trace_id").cache()
     n_samples = samples_df.count()
-    matched = M.match_traces(samples_df, idx_bc, num_partitions=nparts)
+    matched = M.match_traces(samples_df, idx_bc)
+    viterbi_tasks = matched.rdd.getNumPartitions()
+    print(f"viterbi_match: {viterbi_tasks} tasks for {n_samples} samples "
+          f"at local[{cpus}]", flush=True)
     dt, cs = best_of(lambda: checksum(
         matched.select("trace_id", "seq", "edge_id",
                        F.round("fraction", 9).alias("fr")),
         ["trace_id", "seq", "edge_id", "fr"]))
     results["stages"]["viterbi_match"] = {"rows": n_samples, "sec": round(dt, 3),
-                                          "rows_per_sec": round(n_samples / dt)}
+                                          "rows_per_sec": round(n_samples / dt),
+                                          "tasks": viterbi_tasks}
     results["checksums"]["viterbi_match"] = cs
 
     with open(out_path, "w") as f:
