@@ -1902,17 +1902,18 @@ def q_x0001_match(spark, sf_dir):
     1194-sample Munich trace (x0001-001.json) matched by match_traces
     (broadcast index + partition kernel) on a corridor map synthesized
     from its own track, mmatch params (1 m, 500 ms) as in
-    MatcherExample.java:47-73. Rows-only (stateful HMM kernel)."""
+    MatcherExample.java:47-73. Rows-only (stateful HMM kernel). Raises
+    ``reference.FixtureMissing`` where the reference checkout is absent."""
     import json as _json
     from .index import RoadIndex
     from .operators import match as M
+    from .reference import reference_file
     from .sources import samples as SS
 
-    base = ("/root/reference/src/test/resources/com/bmwcarit/barefoot/"
-            "matcher/x0001-001")
-    arr = _json.load(open(base + ".json"))
+    arr = _json.load(open(reference_file("matcher/x0001-001.json")))
     pdf = SS.parse_sample_json(pd.Series([_json.dumps(o) for o in arr]))
-    track = np.array(_json.load(open(base + ".geojson"))["coordinates"])
+    track = np.array(_json.load(open(
+        reference_file("matcher/x0001-001.geojson")))["coordinates"])
     pts = track[::3]
     entries = [(i + 1, 100 + i, 100 + i + 1, False,
                 f"LINESTRING({pts[i][0]} {pts[i][1]}, "

@@ -26,6 +26,33 @@ _MAXIT_INV = 50
 _MAXIT_ICPT = 10  # mirrors reference Intercept.maxit (Intercept.java:62)
 
 
+def _fixed_point(step, x0, args, tol):
+    """Elementwise fixed-point iteration ``x <- step(x, *args)`` over
+    same-shape arrays. Each element stops at its own first step that
+    moves it by less than ``tol`` (or after _MAXIT_INV steps), exactly
+    like the scalar recursion, so no element's result depends on the
+    others in the call: converged elements leave the working set. 0-d
+    inputs stay numpy scalars (one element never converges partially),
+    which keeps scalar calls cheap."""
+    x, act, xa = x0, None, x0   # act: positions of the working set in x
+    for _ in range(_MAXIT_INV):
+        x_new = step(xa, *args)
+        if act is None:
+            x = x_new
+        else:
+            x.reshape(-1)[act] = x_new
+        going = ~(np.abs(x_new - xa) < tol)
+        if not going.any():
+            break
+        if going.all():
+            xa = x_new
+            continue
+        act = np.flatnonzero(going) if act is None else act[going]
+        xa = x_new[going]
+        args = tuple(v[going] for v in args)
+    return x
+
+
 def inverse(lat1, lon1, lat2, lon2):
     """Geodesic inverse problem, fully vectorized Vincenty.
 
@@ -37,7 +64,6 @@ def inverse(lat1, lon1, lat2, lon2):
     lon1 = np.asarray(lon1, dtype=np.float64)
     lat2 = np.asarray(lat2, dtype=np.float64)
     lon2 = np.asarray(lon2, dtype=np.float64)
-    shape = np.broadcast(lat1, lon1, lat2, lon2).shape
     lat1, lon1, lat2, lon2 = np.broadcast_arrays(lat1, lon1, lat2, lon2)
 
     f = WGS84_F
@@ -50,33 +76,32 @@ def inverse(lat1, lon1, lat2, lon2):
     # iterate only the fixed point lambda; derive the other geodesic
     # quantities once from the converged lambda (cuts the per-iteration
     # array-op count roughly in half — this is the hottest kernel)
-    lam = L.copy()
     cU1cU2 = cosU1 * cosU2
     sU1sU2 = sinU1 * sinU2
     sU1cU2 = sinU1 * cosU2
     cU1sU2 = cosU1 * sinU2
-    for _ in range(_MAXIT_INV):
+
+    def step(lam, L, cosU2, cU1sU2, sU1cU2, sU1sU2, cU1cU2):
         sl, cl = np.sin(lam), np.cos(lam)
         ss = np.hypot(cosU2 * sl, cU1sU2 - sU1cU2 * cl)
         cs = sU1sU2 + cU1cU2 * cl
         sig = np.arctan2(ss, cs)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            sa = np.where(ss != 0, cU1cU2 * sl / np.where(ss == 0, 1, ss), 0.0)
-            c2a = 1.0 - sa * sa
-            c2sm = np.where(c2a != 0, cs - 2 * sU1sU2 / np.where(c2a == 0, 1, c2a), 0.0)
+        sa = np.where(ss != 0, cU1cU2 * sl / np.where(ss == 0, 1, ss), 0.0)
+        c2a = 1.0 - sa * sa
+        c2sm = np.where(c2a != 0, cs - 2 * sU1sU2 / np.where(c2a == 0, 1, c2a), 0.0)
         C = f / 16 * c2a * (4 + f * (4 - 3 * c2a))
-        lam_new = L + (1 - C) * f * sa * (
+        return L + (1 - C) * f * sa * (
             sig + C * ss * (c2sm + C * cs * (-1 + 2 * c2sm * c2sm)))
-        done = np.all(np.abs(lam_new - lam) < 1e-12)
-        lam = lam_new
-        if done:
-            break
 
-    sl, cl = np.sin(lam), np.cos(lam)
-    sin_sig = np.hypot(cosU2 * sl, cU1sU2 - sU1cU2 * cl)
-    cos_sig = sU1sU2 + cU1cU2 * cl
-    sigma = np.arctan2(sin_sig, cos_sig)
+    # one errstate for the whole recursion: entering it costs more than
+    # an iteration's arithmetic on the small arrays the matcher passes
     with np.errstate(divide="ignore", invalid="ignore"):
+        lam = _fixed_point(step, L,
+                           (L, cosU2, cU1sU2, sU1cU2, sU1sU2, cU1cU2), 1e-12)
+        sl, cl = np.sin(lam), np.cos(lam)
+        sin_sig = np.hypot(cosU2 * sl, cU1sU2 - sU1cU2 * cl)
+        cos_sig = sU1sU2 + cU1cU2 * cl
+        sigma = np.arctan2(sin_sig, cos_sig)
         sin_alpha = np.where(sin_sig != 0,
                              cU1cU2 * sl / np.where(sin_sig == 0, 1, sin_sig), 0.0)
         cos2_alpha = 1.0 - sin_alpha * sin_alpha
@@ -127,18 +152,16 @@ def direct(lat1, lon1, azi1, s12):
     A = 1 + u2 / 16384 * (4096 + u2 * (-768 + u2 * (320 - 175 * u2)))
     B = u2 / 1024 * (256 + u2 * (-128 + u2 * (74 - 47 * u2)))
 
-    sigma = s12 / (WGS84_B * A)
-    for _ in range(_MAXIT_INV):
+    sigma0 = s12 / (WGS84_B * A)
+
+    def step(sigma, sigma1, B, sigma0):
         cos_2sigm = np.cos(2 * sigma1 + sigma)
         ss, cs = np.sin(sigma), np.cos(sigma)
         dsig = B * ss * (cos_2sigm + B / 4 * (
             cs * (-1 + 2 * cos_2sigm ** 2)
             - B / 6 * cos_2sigm * (-3 + 4 * ss ** 2) * (-3 + 4 * cos_2sigm ** 2)))
-        sigma_new = s12 / (WGS84_B * A) + dsig
-        if np.all(np.abs(sigma_new - sigma) < 1e-13):
-            sigma = sigma_new
-            break
-        sigma = sigma_new
+        return sigma0 + dsig
+    sigma = _fixed_point(step, sigma0, (sigma1, B, sigma0), 1e-13)
 
     ss, cs = np.sin(sigma), np.cos(sigma)
     cos_2sigm = np.cos(2 * sigma1 + sigma)
@@ -209,7 +232,11 @@ def _inverse_scalar_s12(lat1, lon1, lat2, lon2):
 def distance(lat1, lon1, lat2, lon2):
     """Geodesic distance in meters (Geography.java:27-30). Tiny batches
     (<= 8 elements, all-scalar broadcast inputs) take the scalar fast
-    path; everything else runs the vectorized kernel."""
+    path; everything else runs the vectorized kernel. The two paths run
+    the same recursion but differ by about 1e-11 (math-module versus
+    numpy transcendentals), so a pair's distance here depends on the
+    size of the call; use ``_inverse_scalar_s12`` or ``inverse`` where
+    it must not."""
     a1 = np.asarray(lat1, dtype=np.float64)
     o1 = np.asarray(lon1, dtype=np.float64)
     a2 = np.asarray(lat2, dtype=np.float64)

@@ -1,4 +1,4 @@
-"""HMM map matching: per-trace Viterbi kernel run per partition by mapInPandas.
+"""HMM map matching: lock-step Viterbi kernel run per partition by mapInPandas.
 
 Re-implements the semantics of barefoot's matcher stack —
 candidate search + emission (matcher/Matcher.java:185-238), Minset
@@ -6,23 +6,29 @@ pruning (matcher/Minset.java:71-114), per-predecessor shortest-path
 transitions (matcher/Matcher.java:248-351), edge-based Dijkstra
 (topology/Dijkstra.java:90-295), HMM forward step
 (markov/Filter.java:114-244), and KState estimate/backtrack
-(markov/KState.java:177-301) — as one numpy kernel per trace. The
-samples are hash-repartitioned by ``trace_id`` (partition count sized by
-work, ``session.repartition_by_work``) and ``mapInPandas`` runs the kernel
-once per partition, looping over its whole traces with one shared route
-cache.
+(markov/KState.java:177-301) — as numpy kernels. The samples are
+hash-repartitioned by ``trace_id`` (partition count sized by work,
+``session.repartition_by_work``) and ``mapInPandas`` runs the kernel
+once per partition, with one shared route cache for all its traces.
 
 Spark-first shape (the reference's own Spark recipe, wiki/Home.md:716-770,
 modernized): the road index is a broadcast variable, traces are the
-shuffle key, and all per-trace math is numpy over Arrow batches. Batch
-work that spans samples (radius search, emission) is vectorized over the
-whole trace at once; only the inherently sequential forward recursion
-iterates per time step.
+shuffle key, and all math is numpy over Arrow batches. Work that spans
+samples (radius search, Minset, emission distance) is vectorized over a
+whole trace at once. The forward recursion is sequential in time but
+independent across traces, so ``forward_steps`` advances a group of up
+to LOCKSTEP_TRACES traces by one sample per call, over flat arrays with
+per-trace offsets: numpy's per-call cost is paid once per step of the
+group, not once per step of every trace. Only routing (one search per
+trace and predecessor) and the per-pair path walk stay Python loops.
+A trace's rows never depend on the traces it shares steps with;
+``match_trace`` is the same kernel with a group of one.
 """
 
 from __future__ import annotations
 
 import heapq
+import math
 from dataclasses import dataclass
 
 import numpy as np
@@ -398,44 +404,56 @@ def minset(idx: RoadIndex, eidx: np.ndarray, frac: np.ndarray):
     """Remove semantically redundant candidates: drop fraction≈0 points
     reachable from an in-set candidate, and fraction≈1 points none of
     whose successors are missing from the set."""
-    order = np.argsort(eidx)
-    eidx, frac = eidx[order], frac[order]
+    _grp, eidx, frac = _minset_groups(
+        idx, np.zeros(len(eidx), dtype=np.int64), eidx, frac)
+    return eidx, frac
+
+
+def _minset_groups(idx: RoadIndex, grp, eidx, frac):
+    """``minset`` of every candidate set of a trace in one pass: set
+    ``g`` is the candidates with ``grp == g`` and sets never see each
+    other's members. Returns (grp, eidx, frac) of the kept candidates,
+    sorted by (grp, eidx)."""
+    grp = np.asarray(grp, dtype=np.int64)
+    eidx = np.asarray(eidx, dtype=np.int64)
+    order = np.lexsort((eidx, grp))
+    grp, eidx, frac = grp[order], eidx[order], np.asarray(frac)[order]
     n = len(eidx)
-    rf = _round(frac)
     if n == 0:
-        return eidx, frac
+        return grp, eidx, frac
+    rf = _round(frac)
+    # (set, edge) keys, ascending: membership is one searchsorted
+    n_edges = len(idx.succ_offsets) - 1
+    key = grp * n_edges + eidx
 
     # vectorized over all (candidate, successor) pairs at once: the
     # original per-candidate loop has no loop-carried dependency
     # (removal marks don't feed back into miss counting)
     starts = idx.succ_offsets[eidx]
-    ends = idx.succ_offsets[eidx + 1]
-    counts = ends - starts
+    counts = idx.succ_offsets[eidx + 1] - starts
     total = int(counts.sum())
+    removed = np.zeros(n, dtype=bool)
     if total:
         # gather successors of every candidate: ranges [starts, ends)
         src = np.repeat(np.arange(n), counts)
-        flat = np.concatenate([idx.successors[s:e]
-                               for s, e in zip(starts, ends)]) \
-            if n < 64 else idx.successors[
-                np.concatenate([np.arange(s, e) for s, e in zip(starts, ends)])]
-        pos = np.searchsorted(eidx, flat)
+        flat = idx.successors[np.arange(total)
+                              + np.repeat(starts - (np.cumsum(counts) - counts),
+                                          counts)]
+        flat_key = grp[src] * n_edges + flat
+        pos = np.searchsorted(key, flat_key)
         pos_c = np.minimum(pos, n - 1)
-        in_set = (pos < n) & (eidx[pos_c] == flat)
+        in_set = (pos < n) & (key[pos_c] == flat_key)
         hit = pos_c[in_set]
         zero_hit = rf[hit] == 0.0
-        removed = np.zeros(n, dtype=bool)
         removed[hit[zero_hit]] = True
         misses = np.bincount(src, weights=~in_set, minlength=n)
         misses += np.bincount(src[in_set], weights=zero_hit, minlength=n)
     else:
-        removed = np.zeros(n, dtype=bool)
         misses = np.zeros(n)
 
-    ones = (rf == 1.0) & ~removed & (misses == 0)
-    removed |= ones
+    removed |= (rf == 1.0) & ~removed & (misses == 0)
     keep = ~removed
-    return eidx[keep], frac[keep]
+    return grp[keep], eidx[keep], frac[keep]
 
 
 # ---------------------------------------------------------------------------
@@ -465,32 +483,19 @@ def _candidates_for_trace(idx: RoadIndex, lats, lons, params: MatcherParams):
     tuples (eidx, frac, lat, lon, azi, dz) — ONE batched geodesic pass
     for the whole trace instead of per-step little-array calls (the
     per-call Vincenty overhead on 5-element arrays dominated the kernel
-    before this batching)."""
+    before this batching). Minset runs once over all samples' sets."""
     pt, base, frac, _dist = idx.radius(lats, lons, params.max_radius)
     spt, seidx, sfrac, _src = idx.split(pt, base, frac)
-    kept = []
-    for i in range(len(lats)):
-        sel = spt == i
-        ei, fr = minset(idx, seidx[sel], sfrac[sel])
-        kept.append((ei, fr))
-    all_ei = np.concatenate([k[0] for k in kept]) if kept else np.zeros(0, np.int64)
-    all_fr = np.concatenate([k[1] for k in kept]) if kept else np.zeros(0)
+    spt, all_ei, all_fr = _minset_groups(idx, spt, seidx, sfrac)
     if len(all_ei):
         clat, clon, cazi = idx.edge_point(all_ei, all_fr)
-        counts = np.array([len(k[0]) for k in kept])
-        s_lat = np.repeat(lats, counts)
-        s_lon = np.repeat(lons, counts)
-        dz_all = geo.distance(s_lat, s_lon, clat, clon)
+        dz_all = geo.distance(np.asarray(lats)[spt], np.asarray(lons)[spt],
+                              clat, clon)
     else:
         clat = clon = cazi = dz_all = np.zeros(0)
-    out = []
-    pos = 0
-    for ei, fr in kept:
-        n = len(ei)
-        out.append((ei, fr, clat[pos:pos + n], clon[pos:pos + n],
-                    cazi[pos:pos + n], dz_all[pos:pos + n]))
-        pos += n
-    return out
+    bounds = np.searchsorted(spt, np.arange(len(lats) + 1)).tolist()
+    return [(all_ei[s:e], all_fr[s:e], clat[s:e], clon[s:e], cazi[s:e],
+             dz_all[s:e]) for s, e in zip(bounds[:-1], bounds[1:])]
 
 
 def hmm_forward_arrays(filt_prev, seq_prev, trans, emission):
@@ -509,151 +514,204 @@ def hmm_forward_arrays(filt_prev, seq_prev, trans, emission):
     - filtprob normalized over the kept set (Filter.java:238-240);
       if every kept filtprob underflows to exactly 0 the reference
       would normalize by zero (NaN) — we re-seed from emissions
-      instead (documented deviation)."""
+      instead (documented deviation).
+
+    One trace of ``_hmm_forward_segments``."""
     filt_prev = np.asarray(filt_prev, dtype=np.float64)
-    seq_prev = np.asarray(seq_prev, dtype=np.float64)
     emission = np.asarray(emission, dtype=np.float64)
     P, C = len(filt_prev), len(emission)
-    filtprob = np.zeros(C)
-    seqprob = np.full(C, -np.inf)
-    pred = np.full(C, -1, dtype=np.int64)
-    keep = np.zeros(C, dtype=bool)
-    if P and C:
-        trans = np.asarray(trans, dtype=np.float64).reshape(P, C)
+    trans = np.asarray(trans, dtype=np.float64).reshape(P, C)
+    return _hmm_forward_segments(
+        [P], [C], _pair_layout([P], [C]), filt_prev,
+        np.asarray(seq_prev, dtype=np.float64), trans.T.ravel(), emission)
+
+
+def _pair_layout(n_pred, n_cand):
+    """Flat layout of a batch of traces, given each trace's predecessor
+    and candidate counts: trace b owns the candidates after those of
+    traces 0..b-1, and candidate j of it owns the n_pred[b] pairs
+    first[j]:first[j] + n_pred[b], one per predecessor in order.
+    Returns per candidate (seg, npr, p0, first): its trace, predecessor
+    count, the trace's first predecessor, and its first pair."""
+    p_off = np.zeros(len(n_pred) + 1, dtype=np.int64)
+    np.cumsum(n_pred, out=p_off[1:])
+    seg = np.repeat(np.arange(len(n_cand)), n_cand)
+    npr = np.repeat(np.asarray(n_pred, dtype=np.int64), n_cand)
+    first = np.cumsum(npr) - npr
+    return seg, npr, p_off[seg], first
+
+
+def _hmm_forward_segments(n_pred, n_cand, layout, filt_prev, seq_prev,
+                          trans, emission):
+    """``hmm_forward_arrays`` for a batch of independent traces in flat
+    arrays laid out by ``_pair_layout(n_pred, n_cand)``. ``trans`` holds
+    each trace's (P_b, C_b) matrix candidate by candidate. Every
+    reduction runs over one candidate's or one trace's segment only, in
+    a fixed order, so no value depends on which other traces share the
+    batch. ``pred`` is the predecessor's position within its own trace."""
+    B = len(n_cand)
+    seg, npr, p0, first = layout
+    N = len(seg)
+    filtprob = np.zeros(N)
+    seqprob = np.full(N, -np.inf)
+    pred = np.full(N, -1, dtype=np.int64)
+    keep = np.zeros(N, dtype=bool)
+    has = npr > 0
+    if has.any():
+        M = len(trans)
+        pair = np.arange(M)
+        pair_c = np.repeat(np.arange(N), npr)
+        pair_p = np.repeat(p0 - first, npr) + pair
+        starts = first[has]
         ok = trans > 0
-        filt_col = (trans * filt_prev[:, None]).sum(axis=0)
+        # bincount adds each candidate's pairs in predecessor order
+        filt_col = np.bincount(pair_c, trans * filt_prev[pair_p], N)[has]
         # masked log10 (where=) computes only the positive entries — no
         # errstate needed, identical values to the np.where formulation
-        log_t = np.full((P, C), -np.inf)
+        log_t = np.full(M, -np.inf)
         np.log10(trans, out=log_t, where=ok)
-        log_e = np.full(C, -np.inf)
+        log_e = np.full(N, -np.inf)
         np.log10(emission, out=log_e, where=emission > 0)
-        seq_mat = seq_prev[:, None] + log_t + log_e[None, :]
-        best = np.argmax(seq_mat, axis=0)
-        keep = ok.any(axis=0) & (filt_col > 0)
-        filtprob = np.where(keep, filt_col * emission, 0.0)
-        seqprob = np.where(keep, seq_mat[best, np.arange(C)], -np.inf)
+        seq_pair = seq_prev[pair_p] + log_t + log_e[pair_c]
+        best_seq = np.maximum.reduceat(seq_pair, starts)
+        # first predecessor reaching the max: np.argmax's tie rule
+        best = np.minimum.reduceat(
+            np.where(seq_pair == best_seq.repeat(npr[has]), pair, M),
+            starts) - starts
+        k = np.logical_or.reduceat(ok, starts) & (filt_col > 0)
+        keep[has] = k
+        filtprob[has] = np.where(k, filt_col * emission[has], 0.0)
+        seqprob[has] = np.where(k, best_seq, -np.inf)
         # A kept candidate whose whole seq column is -inf (emission
         # underflow, or all predecessor seqprobs -inf) has no real argmax;
         # Filter.java's strict 'seqprob >' comparison leaves its
         # predecessor null — mirror that with pred = -1 so no bogus
-        # routes[0][ci] gets attached downstream.
-        pred = np.where(keep & np.isfinite(seqprob), best, -1)
-    normsum = filtprob[keep].sum()
-    if not keep.any() or P == 0 or normsum == 0.0:
-        keep = emission > 0
-        filtprob = np.where(keep, emission, 0.0)
-        seqprob = np.full(C, -np.inf)
-        np.log10(emission, out=seqprob, where=keep)
-        pred = np.full(C, -1, dtype=np.int64)
-        normsum = filtprob[keep].sum()
-    if normsum > 0:
-        filtprob = np.where(keep, filtprob / normsum, filtprob)
+        # route gets attached downstream.
+        pred[has] = np.where(k & np.isfinite(best_seq), best, -1)
+    # per-trace sums: bincount adds each segment's values in order, and
+    # the zeros of dropped candidates add exactly
+    norm = np.bincount(seg, filtprob, B)
+    reseed = ((np.bincount(seg, keep, B) == 0) | (norm == 0.0)
+              | (np.asarray(n_pred) == 0)) & (np.asarray(n_cand) > 0)
+    if reseed.any():
+        r = reseed[seg]
+        seeded = r & (emission > 0)
+        keep = np.where(r, seeded, keep)
+        filtprob = np.where(r, np.where(seeded, emission, 0.0), filtprob)
+        seqprob[r] = -np.inf
+        np.log10(emission, out=seqprob, where=seeded)
+        pred[r] = -1
+        norm = np.bincount(seg, filtprob, B)
+    norm = norm[seg]
+    np.divide(filtprob, norm, out=filtprob, where=keep & (norm > 0))
     return filtprob, seqprob, pred, keep
 
 
-def forward_step(idx: RoadIndex, params: MatcherParams, prev_vector,
-                 prev_time, t_ms: int, lat: float, lon: float, azi: float,
-                 precomputed=None, route_cache: dict | None = None):
+def forward_steps(idx: RoadIndex, params: MatcherParams, steps,
+                  route_cache: dict | None = None):
     """One HMM filter step (Filter.execute semantics,
-    markov/Filter.java:114-244): candidate search + Minset + predecessor
-    carry-over + emissions, per-predecessor bounded routing, forward
-    probabilities with argmax backpointers, HMM-break re-seed, and the
-    KState break-to-estimate chain repair. Shared by the offline trace
-    kernel and the online (streaming) matcher — their equality is the
-    reference's strongest cross-check (tracker/TrackerServerTest.java:
-    156-166).
+    markov/Filter.java:114-244) for a batch of independent traces, each
+    advanced by one sample: predecessor carry-over + emissions,
+    per-predecessor bounded routing, forward probabilities with argmax
+    backpointers, HMM-break re-seed, and the KState break-to-estimate
+    chain repair.
 
-    Returns the new candidate vector (possibly empty)."""
-    cost_vec = idx.cost_vector(params.routing_cost)
-    bound_vec = idx.cost_dist
+    ``steps`` holds one (prev_vector, prev_time, t_ms, lat, lon, azi,
+    cands) tuple per trace, ``cands`` being the sample's candidate
+    arrays from ``_candidates_for_trace``. Returns one new candidate
+    vector (possibly empty) per trace.
+
+    Candidates, predecessors and (predecessor, candidate) pairs of the
+    whole batch live in flat arrays with per-trace offsets, so each numpy
+    call serves every trace; only routing, the per-pair path walk and
+    the carry-over geodesics loop in Python. Nothing a trace gets
+    depends on the rest of the batch: carry-over distances are computed
+    per element, and every sum runs over one trace's segment
+    (``_hmm_forward_segments``)."""
+    B = len(steps)
     sig2 = params.sigma ** 2
-    sqrt_2pi_sig2 = np.sqrt(2 * np.pi * sig2)
+    sqrt_2pi_sig2 = math.sqrt(2 * math.pi * sig2)
     sigA2 = params.sigma_a ** 2
-    sqrt_2pi_sigA = np.sqrt(2 * np.pi * sigA2)
+    sqrt_2pi_sigA = math.sqrt(2 * math.pi * sigA2)
 
-    if precomputed is None:
-        pt, base, frac, _d = idx.radius(np.array([lat]), np.array([lon]),
-                                        params.max_radius)
-        _spt, seidx, sfrac, _src = idx.split(pt, base, frac)
-        ei, fr = minset(idx, seidx, sfrac)
-        if len(ei):
-            clat, clon, cazi = idx.edge_point(ei, fr)
-            dz = geo.distance(np.full(len(ei), lat), np.full(len(ei), lon),
-                              clat, clon)
-        else:
-            clat = clon = cazi = dz = np.zeros(0)
-    else:
-        ei, fr, clat, clon, cazi, dz = precomputed
-    ei = np.asarray(ei, dtype=np.int64)
-    fr = np.asarray(fr, dtype=np.float64).copy()
-    clat = np.asarray(clat, dtype=np.float64).copy()
-    clon = np.asarray(clon, dtype=np.float64).copy()
-    cazi = np.asarray(cazi, dtype=np.float64).copy()
-    dz = np.asarray(dz, dtype=np.float64).copy()
+    prevs = [s[0] or [] for s in steps]
+    cands = [s[6] for s in steps]
+    n_pred = [len(v) for v in prevs]
+    n_cand = [len(c[0]) for c in cands]
+    # fresh copies: carry-over edits them in place
+    ei, fr, clat, clon, cazi, dz = (np.concatenate([c[i] for c in cands])
+                                    for i in range(6))
+    layout = _pair_layout(n_pred, n_cand)
+    seg, npr, _, first = layout
+    ei_l, seg_l, first_l = ei.tolist(), seg.tolist(), first.tolist()
+    s_lat, s_lon, s_azi = np.array([s[3:6] for s in steps],
+                                   dtype=np.float64).T
 
-    # predecessor position carry-over (Matcher.java:200-213), batched:
-    # one geodesic pass over all matching (predecessor, candidate) pairs.
+    # predecessor position carry-over (Matcher.java:200-213): a
+    # predecessor on a candidate's edge, behind it in driving direction
+    # and within sigma, moves the candidate back onto its own position.
     # A carried candidate REUSES the predecessor's road point (the
     # reference keeps the predecessor's RoadPoint object), so no
-    # edge_point recompute — only its emission distance changes.
-    if prev_vector and len(ei):
-        pos_of = {int(e): j for j, e in enumerate(ei)}
-        hits = [(p, pos_of[p.eidx]) for p in prev_vector if p.eidx in pos_of]
-        if hits:
-            js = np.array([j for _, j in hits], dtype=np.int64)
-            p_lat = np.array([p.lat for p, _ in hits])
-            p_lon = np.array([p.lon for p, _ in hits])
-            d = geo.distance(clat[js], clon[js], p_lat, p_lon)
-            pf = np.array([p.frac for p, _ in hits])
-            fwd = idx.edge_forward[[p.eidx for p, _ in hits]]
-            carry = (d < params.sigma) & np.where(fwd, fr[js] < pf, fr[js] > pf)
-            if carry.any():
-                cj = js[carry]
-                fr[cj] = pf[carry]
-                clat[cj], clon[cj] = p_lat[carry], p_lon[carry]
-                cazi[cj] = np.array([p.azi for p, _ in hits])[carry]
-                dz[cj] = geo.distance(np.full(len(cj), lat),
-                                      np.full(len(cj), lon),
-                                      clat[cj], clon[cj])
+    # edge_point recompute — only its emission distance changes. The
+    # geodesics run per element: batch-invariant, unlike geo.distance,
+    # whose path depends on the call's size.
+    if any(n_pred) and len(ei):
+        s12 = geo._inverse_scalar_s12
+        fwd = idx.edge_forward
+        pos_of = {k: j for j, k in enumerate(zip(seg_l, ei_l))}
+        for b, prev in enumerate(prevs):
+            for p in prev:
+                j = pos_of.get((b, p.eidx))
+                if j is None:
+                    continue
+                f = fr[j]
+                if (f < p.frac if fwd[p.eidx] else f > p.frac) and \
+                        s12(clat[j], clon[j], p.lat, p.lon) < params.sigma:
+                    fr[j] = p.frac
+                    clat[j], clon[j], cazi[j] = p.lat, p.lon, p.azi
+                    dz[j] = s12(s_lat[b], s_lon[b], p.lat, p.lon)
 
-    if len(ei):
-        emission = 1 / sqrt_2pi_sig2 * np.exp(-dz * dz / (2 * sig2))
-        if not np.isnan(azi):
-            da = np.abs(azi - cazi)
-            da = np.minimum(da, 360.0 - da)
-            emission = emission * np.maximum(
-                1e-2, 1 / sqrt_2pi_sigA * np.exp(-da * da / (2 * sigA2)))
-    else:
-        emission = np.zeros(0)
+    emission = 1 / sqrt_2pi_sig2 * np.exp(-dz * dz / (2 * sig2))
+    with_azi = ~np.isnan(s_azi)
+    if with_azi.any():
+        da = np.abs(s_azi[seg] - cazi)
+        da = np.minimum(da, 360.0 - da)
+        emission = np.where(with_azi[seg], emission * np.maximum(
+            1e-2, 1 / sqrt_2pi_sigA * np.exp(-da * da / (2 * sigA2))),
+            emission)
 
-    cands = [_Cand(ei[j], fr[j], clat[j], clon[j], cazi[j]) for j in range(len(ei))]
-
-    # ------ transitions + forward step (Filter.execute) ------
-    result: list[_Cand] = []
-    if prev_vector and cands:
-        dt_ms = int(t_ms - prev_time)
+    # ------ transitions: one bounded route search per predecessor ------
+    # python-list cost views: the per-pair path walks below are ~5x
+    # faster on float lists than numpy scalar indexing; identical
+    # IEEE arithmetic either way
+    tp_list = idx.cost_list("timeprio")
+    bound_list = idx.cost_list("distance")
+    eb_list = idx.base_list()
+    el_list = idx.len_list()
+    shorten = params.shorten_turns
+    fr_l = fr.tolist()
+    pend: list[int] = []
+    pend_cost: list[float] = []
+    pend_len: list[float] = []
+    pend_beta: list[float] = []
+    routes: dict[int, list] = {}
+    c0 = 0
+    for b, prev in enumerate(prevs):
+        c1 = c0 + n_cand[b]
+        if not prev or c0 == c1:
+            c0 = c1
+            continue
+        dt_ms = int(steps[b][2] - steps[b][1])
         bound = max(1000.0, min(params.max_distance, (dt_ms // 1000) * 100.0))
         beta = max(1.0, float(dt_ms)) / 1000.0 if params.lam == 0 else 1.0 / params.lam
-        targets = [(c.eidx, c.frac) for c in cands]
-        trans = np.zeros((len(prev_vector), len(cands)))
-        routes: list[list] = [[None] * len(cands) for _ in prev_vector]
-        rlens = np.zeros((len(prev_vector), len(cands)))
-        # python-list cost views: the per-pair path walks below are ~5x
-        # faster on float lists than numpy scalar indexing; identical
-        # IEEE arithmetic either way
-        tp_list = idx.cost_list("timeprio")
-        bound_list = idx.cost_list("distance")
-        cost_rt_list = idx.cost_list(params.routing_cost)
-        eb_list = idx.base_list()
-        el_list = idx.len_list()
-        shorten = params.shorten_turns
-        pend_pi: list[int] = []
-        pend_ci: list[int] = []
-        pend_cost: list[float] = []
-        prepared = prepare_targets(idx, targets) \
-            if route_cache is not None else None
-        for pi, p in enumerate(prev_vector):
+        n_before = len(pend)
+        targets = list(zip(ei_l[c0:c1], fr_l[c0:c1]))
+        if route_cache is not None:
+            cost_rt_list = idx.cost_list(params.routing_cost)
+            prepared = prepare_targets(idx, targets)
+        else:
+            cost_vec = idx.cost_vector(params.routing_cost)
+        for pi, p in enumerate(prev):
             if route_cache is not None:
                 paths = route_ssmt_cached(idx, (p.eidx, p.frac), targets,
                                           cost_rt_list, bound_list, bound,
@@ -661,15 +719,13 @@ def forward_step(idx: RoadIndex, params: MatcherParams, prev_vector,
                                           cache_max=params.route_cache_max_edges)
             else:
                 paths = route_ssmt(idx, (p.eidx, p.frac), targets, cost_vec,
-                                   bound_vec, bound)
-            routes_pi = routes[pi]
-            rlens_pi = rlens[pi]
+                                   idx.cost_dist, bound)
             pfrac = p.frac
-            for ci, c in enumerate(cands):
+            for ci in range(c1 - c0):
                 path = paths[ci]
                 if path is None:
                     continue
-                sf, tf = pfrac, c.frac
+                sf, tf = pfrac, fr_l[c0 + ci]
                 # shorten-turns rewrite (Matcher.java:298-321)
                 if shorten and len(path) >= 2 and \
                         eb_list[path[0]] == eb_list[path[1]] and \
@@ -684,62 +740,66 @@ def forward_step(idx: RoadIndex, params: MatcherParams, prev_vector,
                         else:
                             sf = max(0.0, 1.0 - sf - 5.0 / el_list[path[1]])
                             path = path[1:]
-                pend_pi.append(pi)
-                pend_ci.append(ci)
                 # one walk, both cost vectors (bit-identical to two
                 # separate path_cost calls)
                 ca, cb = path_cost2(idx, path, sf, tf, tp_list, bound_list)
+                k = first_l[c0 + ci] + pi
+                pend.append(k)
                 pend_cost.append(ca)
-                routes_pi[ci] = path
-                rlens_pi[ci] = cb
-        if pend_pi:
-            # one vectorized exp instead of a scalar np.exp per pair
-            trans[pend_pi, pend_ci] = (1.0 / beta) * np.exp(
-                -np.asarray(pend_cost) / beta)
+                pend_len.append(cb)
+                routes[k] = path
+        pend_beta.extend([beta] * (len(pend) - n_before))
+        c0 = c1
+    trans = np.zeros(int(npr.sum()))
+    if pend:
+        # one vectorized exp over every routed pair of the batch
+        beta_p = np.array(pend_beta)
+        trans[pend] = (1.0 / beta_p) * np.exp(-np.array(pend_cost) / beta_p)
 
-        # pure forward recurrence over the whole (P x C) matrix
-        # (hmm_forward_arrays — tested against the reference's
-        # FilterTest dense-matrix oracle)
-        filt_prev = np.array([p.filtprob for p in prev_vector])
-        seq_prev = np.array([p.seqprob for p in prev_vector])
-        filtprob, seqprob, pred, keep = hmm_forward_arrays(
-            filt_prev, seq_prev, trans, emission)
-        for ci in np.flatnonzero(keep):
-            c = cands[ci]
-            c.filtprob = float(filtprob[ci])
-            c.seqprob = float(seqprob[ci])
-            if pred[ci] >= 0:
-                best = int(pred[ci])
-                c.pred = prev_vector[best]
-                c.route = routes[best][ci]
-                c.route_len = float(rlens[best, ci])
-            else:
-                c.pred = None
-                c.route = None
-                c.route_len = None
-            result.append(c)
-    elif cands:
-        # no predecessors: initial seeding through the same recurrence
-        filtprob, seqprob, pred, keep = hmm_forward_arrays(
-            np.zeros(0), np.zeros(0), np.zeros((0, len(cands))), emission)
-        for ci in np.flatnonzero(keep):
-            c = cands[ci]
-            c.filtprob = float(filtprob[ci])
-            c.seqprob = float(seqprob[ci])
-            c.pred = None
-            c.route = None
-            c.route_len = None
-            result.append(c)
+    filtprob, seqprob, pred, keep = _hmm_forward_segments(
+        n_pred, n_cand, layout,
+        np.array([p.filtprob for v in prevs for p in v], dtype=np.float64),
+        np.array([p.seqprob for v in prevs for p in v], dtype=np.float64),
+        trans, emission)
 
-    if result:
-        # KState.update: break candidates chain to previous estimate
-        # (KState.java:186-189)
-        if prev_vector:
-            prev_est = estimate(prev_vector)
+    out: list[list[_Cand]] = [[] for _ in range(B)]
+    rlen = dict(zip(pend, pend_len))
+    for j in np.flatnonzero(keep).tolist():
+        b = seg_l[j]
+        c = _Cand(ei_l[j], fr_l[j], clat[j], clon[j], cazi[j])
+        c.filtprob, c.seqprob = float(filtprob[j]), float(seqprob[j])
+        pr = int(pred[j])
+        if pr >= 0:
+            k = first_l[j] + pr
+            c.pred = prevs[b][pr]
+            c.route = routes[k]
+            c.route_len = rlen[k]
+        out[b].append(c)
+    for b, result in enumerate(out):
+        if result and prevs[b]:
+            # KState.update: break candidates chain to previous estimate
+            # (KState.java:186-189)
+            prev_est = estimate(prevs[b])
             for c in result:
                 if c.pred is None:
                     c.pred = prev_est
-    return result
+    return out
+
+
+def forward_step(idx: RoadIndex, params: MatcherParams, prev_vector,
+                 prev_time, t_ms: int, lat: float, lon: float, azi: float):
+    """One trace's HMM filter step: the sample's candidate search
+    (radius + Minset + emission distance), then ``forward_steps`` with a
+    batch of one. The online (streaming) matcher calls it per sample;
+    the offline kernel runs the same ``forward_steps`` over many traces
+    — their equality is the reference's strongest cross-check
+    (tracker/TrackerServerTest.java:156-166).
+
+    Returns the new candidate vector (possibly empty)."""
+    cands = _candidates_for_trace(idx, np.array([lat]), np.array([lon]),
+                                  params)[0]
+    return forward_steps(idx, params, [(prev_vector, prev_time, t_ms, lat,
+                                        lon, azi, cands)])[0]
 
 
 def estimate(vector):
@@ -750,105 +810,177 @@ def estimate(vector):
     return max(vector, key=lambda c: (c.filtprob, -c.eidx, -c.frac))
 
 
+# Traces one ``forward_steps`` call advances together in the partition
+# kernel. An active trace holds its candidate sets and Viterbi sequence
+# until it ends, so this caps kernel memory at this many traces instead
+# of the whole partition.
+LOCKSTEP_TRACES = 256
+
+
+class _TraceRun:
+    """One trace inside the lock-step kernel: its time-sorted, gated and
+    thinned samples with their candidate sets, and the Viterbi sequence
+    built so far."""
+
+    def __init__(self, idx: RoadIndex, params: MatcherParams, trace_id,
+                 sample_ids, times_ms, lats, lons, azimuths):
+        order = np.argsort(times_ms, kind="stable")
+        sample_ids = np.asarray(sample_ids)[order]
+        times_ms = np.asarray(times_ms, dtype=np.int64)[order]
+        lats = np.asarray(lats, dtype=np.float64)[order]
+        lons = np.asarray(lons, dtype=np.float64)[order]
+        azimuths = np.asarray(azimuths, dtype=np.float64)[order]
+
+        # duplicate-timestamp gate (MatcherSERVER semantics for offline
+        # requests, MatcherServer.java:82-86)
+        if len(times_ms) > 1:
+            dup = np.concatenate([[False], times_ms[1:] == times_ms[:-1]])
+            if dup.any():
+                if params.dup_time == "error":
+                    raise ValueError(
+                        f"multiple samples for same time (trace {trace_id}, "
+                        f"t={int(times_ms[np.flatnonzero(dup)[0]])})")
+                if params.dup_time == "drop":
+                    keep_m = ~dup   # stable sort: first-arrived sample wins
+                    sample_ids, times_ms = sample_ids[keep_m], times_ms[keep_m]
+                    lats, lons = lats[keep_m], lons[keep_m]
+                    azimuths = azimuths[keep_m]
+
+        # thinning (Matcher.java:376-380) needs the last *kept* sample, so
+        # the kept set is decided sequentially; radius search runs
+        # vectorized on the kept samples afterwards.
+        min_d = max(0.0, params.min_distance)
+        min_dt = max(0, params.min_interval_ms)
+        if min_d <= 0.0 and min_dt <= 0:
+            # both gates disabled (the defaults): nothing can thin, skip
+            # the per-sample geodesic entirely
+            kept = np.arange(len(times_ms))
+        else:
+            kept = []
+            last_t, last_lat, last_lon = None, None, None
+            for i in range(len(times_ms)):
+                if last_t is not None:
+                    if (times_ms[i] - last_t) < min_dt:
+                        continue
+                    d = float(geo.distance(lats[i], lons[i], last_lat, last_lon))
+                    if d < min_d:
+                        continue
+                kept.append(i)
+                last_t, last_lat, last_lon = times_ms[i], lats[i], lons[i]
+            kept = np.array(kept, dtype=np.int64)
+        self.trace_id = trace_id
+        self.ids, self.t = sample_ids[kept], times_ms[kept]
+        self.lat, self.lon, self.azi = lats[kept], lons[kept], azimuths[kept]
+        self.cands = (_candidates_for_trace(idx, self.lat, self.lon, params)
+                      if len(kept) else [])
+        self.step = 0
+        self.sequence: list[tuple[list[_Cand], int]] = []  # (vector, step)
+        self.prev_vector: list[_Cand] = []
+        self.prev_time = None
+
+    def done(self) -> bool:
+        return self.step >= len(self.t)
+
+    def step_input(self):
+        s = self.step
+        return (self.prev_vector, self.prev_time, int(self.t[s]),
+                float(self.lat[s]), float(self.lon[s]), float(self.azi[s]),
+                self.cands[s])
+
+    def advance(self, result):
+        if result:
+            self.sequence.append((result, self.step))
+            self.prev_vector = result
+            self.prev_time = self.t[self.step]
+        # empty vector: sample dropped (KState.java:178-180), prev kept
+        self.step += 1
+
+    def rows(self, idx: RoadIndex) -> list[tuple]:
+        """Estimate + backtrack (KState.java:265-301) as MATCH_SCHEMA rows."""
+        sequence = self.sequence
+        if not sequence:
+            return []
+        chain = []
+        it = estimate(sequence[-1][0])
+        for _ in range(len(sequence)):
+            if it is None:
+                break
+            chain.append(it)
+            it = it.pred
+        chain = chain[::-1]
+
+        rows = []
+        offset = len(sequence) - len(chain)
+        for j, c in enumerate(chain):
+            step = sequence[offset + j][1]
+            route_eids = [int(idx.edge_id[e]) for e in c.route] if c.route else []
+            rows.append((str(self.trace_id), int(step), str(self.ids[step]),
+                         int(self.t[step]), int(idx.edge_id[c.eidx]),
+                         float(c.frac), float(c.lat), float(c.lon),
+                         float(c.azi), route_eids,
+                         float(c.route_len) if c.route_len is not None else 0.0,
+                         float(c.filtprob), float(c.seqprob)))
+        return rows
+
+
+def _match_lockstep(idx: RoadIndex, params: MatcherParams, traces,
+                    route_cache: dict | None = None) -> list[tuple]:
+    """Offline match of many traces, advanced in lock step: each
+    ``forward_steps`` call moves every active trace by one sample. Up to
+    LOCKSTEP_TRACES traces are active; one that ends hands its place to
+    the next. ``traces`` yields (trace_id, sample_ids, times_ms, lats,
+    lons, azimuths); rows come back in that order."""
+    pending = iter(traces)
+    out: list[list[tuple]] = []
+    active: list[tuple[int, _TraceRun]] = []
+    while True:
+        while len(active) < LOCKSTEP_TRACES:
+            tr = next(pending, None)
+            if tr is None:
+                break
+            run = _TraceRun(idx, params, *tr)
+            out.append([])
+            if not run.done():
+                active.append((len(out) - 1, run))
+        if not active:
+            break
+        results = forward_steps(idx, params,
+                                [run.step_input() for _, run in active],
+                                route_cache)
+        still = []
+        for (i, run), result in zip(active, results):
+            run.advance(result)
+            if run.done():
+                out[i] = run.rows(idx)
+            else:
+                still.append((i, run))
+        active = still
+    return [row for rows in out for row in rows]
+
+
 def match_trace(idx: RoadIndex, trace_id, sample_ids, times_ms, lats, lons,
                 azimuths, params: MatcherParams,
                 route_cache: dict | None = None) -> list[tuple]:
-    """Offline match of one trace; returns MATCH_SCHEMA rows.
+    """Offline match of one trace; returns MATCH_SCHEMA rows. The
+    partition kernel's lock-step matcher with a batch of one trace, so
+    a trace gets the same rows alone as in any batch.
     route_cache: shared per-source-edge Dijkstra tree cache (see
     route_ssmt_cached) — safe to share across traces on the same map
     with the same cost function."""
-    order = np.argsort(times_ms, kind="stable")
-    sample_ids = np.asarray(sample_ids)[order]
-    times_ms = np.asarray(times_ms, dtype=np.int64)[order]
-    lats = np.asarray(lats, dtype=np.float64)[order]
-    lons = np.asarray(lons, dtype=np.float64)[order]
-    azimuths = np.asarray(azimuths, dtype=np.float64)[order]
+    return _match_lockstep(idx, params, [(trace_id, sample_ids, times_ms,
+                                          lats, lons, azimuths)], route_cache)
 
-    # duplicate-timestamp gate (MatcherSERVER semantics for offline
-    # requests, MatcherServer.java:82-86)
-    if len(times_ms) > 1:
-        dup = np.concatenate([[False], times_ms[1:] == times_ms[:-1]])
-        if dup.any():
-            if params.dup_time == "error":
-                raise ValueError(
-                    f"multiple samples for same time (trace {trace_id}, "
-                    f"t={int(times_ms[np.flatnonzero(dup)[0]])})")
-            if params.dup_time == "drop":
-                keep_m = ~dup   # stable sort: first-arrived sample wins
-                sample_ids, times_ms = sample_ids[keep_m], times_ms[keep_m]
-                lats, lons = lats[keep_m], lons[keep_m]
-                azimuths = azimuths[keep_m]
 
-    # thinning (Matcher.java:376-380) needs the last *kept* sample, so the
-    # kept set is decided sequentially; radius search runs vectorized on
-    # the kept samples afterwards.
-    min_d = max(0.0, params.min_distance)
-    min_dt = max(0, params.min_interval_ms)
-    if min_d <= 0.0 and min_dt <= 0:
-        # both gates disabled (the defaults): nothing can thin, skip the
-        # per-sample geodesic entirely
-        kept = np.arange(len(times_ms))
-    else:
-        kept = []
-        last_t, last_lat, last_lon = None, None, None
-        for i in range(len(times_ms)):
-            if last_t is not None:
-                if (times_ms[i] - last_t) < min_dt:
-                    continue
-                d = float(geo.distance(lats[i], lons[i], last_lat, last_lon))
-                if d < min_d:
-                    continue
-            kept.append(i)
-            last_t, last_lat, last_lon = times_ms[i], lats[i], lons[i]
-        kept = np.array(kept, dtype=np.int64)
-    if not len(kept):
-        return []
-    k_ids, k_t = sample_ids[kept], times_ms[kept]
-    k_lat, k_lon, k_azi = lats[kept], lons[kept], azimuths[kept]
-
-    cand_sets = _candidates_for_trace(idx, k_lat, k_lon, params)
-
-    sequence: list[tuple[list[_Cand], int]] = []  # (vector, step)
-    prev_vector: list[_Cand] = []
-    prev_time = None
-
-    for step in range(len(kept)):
-        result = forward_step(idx, params, prev_vector, prev_time,
-                              int(k_t[step]), float(k_lat[step]),
-                              float(k_lon[step]), float(k_azi[step]),
-                              precomputed=cand_sets[step],
-                              route_cache=route_cache)
-        if result:
-            sequence.append((result, step))
-            prev_vector = result
-            prev_time = k_t[step]
-        # empty vector: sample dropped (KState.java:178-180), prev kept
-
-    if not sequence:
-        return []
-
-    # estimate + backtrack (KState.java:265-301)
-    est = estimate(sequence[-1][0])
-    chain = []
-    it = est
-    for _ in range(len(sequence)):
-        if it is None:
-            break
-        chain.append(it)
-        it = it.pred
-    chain = chain[::-1]
-
-    rows = []
-    offset = len(sequence) - len(chain)
-    for j, c in enumerate(chain):
-        vec, step = sequence[offset + j]
-        route_eids = [int(idx.edge_id[e]) for e in c.route] if c.route else []
-        rows.append((str(trace_id), int(step), str(k_ids[step]), int(k_t[step]),
-                     int(idx.edge_id[c.eidx]), float(c.frac), float(c.lat),
-                     float(c.lon), float(c.azi), route_eids,
-                     float(c.route_len) if c.route_len is not None else 0.0,
-                     float(c.filtprob), float(c.seqprob)))
-    return rows
+def _match_partition(idx: RoadIndex, params: MatcherParams,
+                     pdf: pd.DataFrame) -> pd.DataFrame:
+    """The ``match_traces`` kernel on one partition's samples: its traces
+    in lock step (``_match_lockstep``) with one shared route cache."""
+    traces = ((tid, g["sample_id"].to_numpy(), g["time"].to_numpy(np.int64),
+               g["lat"].to_numpy(np.float64), g["lon"].to_numpy(np.float64),
+               g["azimuth"].to_numpy(np.float64))
+              for tid, g in pdf.groupby("trace_id", sort=False))
+    return pd.DataFrame(_match_lockstep(idx, params, traces, route_cache={}),
+                        columns=[f.name for f in MATCH_SCHEMA.fields])
 
 
 def dup_times(samples: DataFrame, id_col="trace_id",
@@ -883,24 +1015,13 @@ def match_traces(samples: DataFrame, idx_bc, params: MatcherParams | None = None
     def kernel(batches) -> pd.DataFrame:
         # one invocation per PARTITION (hash-partitioned by trace_id, so
         # every trace arrives whole): concatenating the partition's Arrow
-        # batches and looping traces here costs one python roundtrip per
-        # partition instead of one per trace (groupBy().applyInPandas
+        # batches and matching its traces here costs one python roundtrip
+        # per partition instead of one per trace (groupBy().applyInPandas
         # pays per-group overhead that dominates with many small traces)
-        idx = idx_bc.value
         chunks = list(batches)
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True)
-        rows = []
-        route_cache: dict = {}   # shared across the partition's traces
-        for tid, g in pdf.groupby("trace_id", sort=False):
-            rows.extend(match_trace(
-                idx, tid, g["sample_id"].to_numpy(),
-                g["time"].to_numpy(np.int64),
-                g["lat"].to_numpy(np.float64), g["lon"].to_numpy(np.float64),
-                g["azimuth"].to_numpy(np.float64), params,
-                route_cache=route_cache))
-        yield pd.DataFrame(rows, columns=[f.name for f in MATCH_SCHEMA.fields])
+        if chunks:
+            yield _match_partition(idx_bc.value, params,
+                                   pd.concat(chunks, ignore_index=True))
 
     cols = ["trace_id", "sample_id", "time", "lat", "lon", "azimuth"]
     return repartition_by_work(samples.select(*cols), "trace_id",

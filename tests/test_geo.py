@@ -42,6 +42,28 @@ def test_direct_inverse_roundtrip():
     assert np.max(np.abs(dazi)) < 1e-6
 
 
+def test_inverse_direct_batch_invariant():
+    """A pair's geodesic does not depend on the other pairs in the call:
+    one call over all pairs equals one call per pair, bitwise, for
+    short pairs in a small box (where elements converge after different
+    iteration counts) and for long random pairs."""
+    rng = np.random.default_rng(7)
+    n = 400
+    lat1 = np.concatenate([48 + rng.random(n) * 0.1, rng.uniform(-60, 60, n)])
+    lon1 = np.concatenate([11 + rng.random(n) * 0.1, rng.uniform(-179, 179, n)])
+    lat2 = np.concatenate([48 + rng.random(n) * 0.1, rng.uniform(-60, 60, n)])
+    lon2 = np.concatenate([11 + rng.random(n) * 0.1, rng.uniform(-179, 179, n)])
+    azi = rng.uniform(-180, 180, 2 * n)
+    s = np.concatenate([rng.random(n) * 5000, rng.uniform(1, 2e6, n)])
+
+    batch = np.stack(geo.inverse(lat1, lon1, lat2, lon2))
+    single = np.array([geo.inverse(*a) for a in zip(lat1, lon1, lat2, lon2)]).T
+    assert np.array_equal(batch, single)
+    batch = np.stack(geo.direct(lat1, lon1, azi, s))
+    single = np.array([geo.direct(*a) for a in zip(lat1, lon1, azi, s)]).T
+    assert np.array_equal(batch, single)
+
+
 def test_interpolate_endpoints_and_midpoint():
     lat, lon = geo.interpolate_segment(48.0, 11.0, 48.0, 11.01, 0.0)
     assert abs(float(lat) - 48.0) < 1e-12 and abs(float(lon) - 11.0) < 1e-12

@@ -221,7 +221,7 @@ def test_underflow_hmm_break_reseeds():
     assert np.isfinite(filt).all() and (filt >= 0).all() and (filt <= 1).all()
 
 
-def test_x0001_fixture_end_to_end_match():
+def test_x0001_fixture_end_to_end_match(reference_file):
     """Match the reference's REAL Munich GPS fixture (x0001-015.json,
     80 noisy 5s-interval samples) against a road map synthesized from
     the trace's own track (consecutive-sample segments = roads). The
@@ -235,9 +235,7 @@ def test_x0001_fixture_end_to_end_match():
     from barefoot_spark.index import RoadIndex
     from barefoot_spark.sources import samples as SS
 
-    path = ("/root/reference/src/test/resources/com/bmwcarit/barefoot/"
-            "matcher/x0001-015.json")
-    arr = json.load(open(path))
+    arr = json.load(open(reference_file("matcher/x0001-015.json")))
     samples = SS.parse_sample_json(pd.Series([json.dumps(o) for o in arr]))
 
     # corridor map: one road per consecutive sample pair (downsampled
@@ -593,7 +591,7 @@ def test_duplicate_timestamp_gate():
         == "order"
 
 
-def test_x0001_001_full_fixture_end_to_end():
+def test_x0001_001_full_fixture_end_to_end(reference_file):
     """The reference's FLAGSHIP fixture: all 1194 Munich samples of
     x0001-001.json matched with MatcherExample's mmatch params
     (minDistance=1 m, minInterval=500 ms — MatcherExample.java:47-73),
@@ -611,12 +609,11 @@ def test_x0001_001_full_fixture_end_to_end():
     from barefoot_spark.sources import samples as SS
     from barefoot_spark.operators import evaluate as EV
 
-    base = ("/root/reference/src/test/resources/com/bmwcarit/barefoot/"
-            "matcher/x0001-001")
-    arr = json.load(open(base + ".json"))
+    arr = json.load(open(reference_file("matcher/x0001-001.json")))
     samples = SS.parse_sample_json(pd.Series([json.dumps(o) for o in arr]))
     assert len(samples) == 1194
-    track = np.array(json.load(open(base + ".geojson"))["coordinates"])
+    track = np.array(json.load(open(
+        reference_file("matcher/x0001-001.geojson")))["coordinates"])
 
     # corridor: one road per 3 consecutive track points (~3x sample
     # spacing, so matching has to route across roads)

@@ -13,12 +13,11 @@ import pytest
 from barefoot_spark import geo
 from barefoot_spark.operators import analysis as A
 
-CSV = ("/root/reference/src/test/resources/com/bmwcarit/barefoot/"
-       "analysis/xba96de419e711691b9445d6a6307c170.csv")
+CSV = "analysis/xba96de419e711691b9445d6a6307c170.csv"
 
 
-def _load_nyc():
-    df = pd.read_csv(CSV, header=None)
+def _load_nyc(path):
+    df = pd.read_csv(path, header=None)
     # NYCSample.java:40-49: cols 10/11 = pickup lon/lat (time col 5),
     # cols 12/13 = dropoff lon/lat (time col 6); epoch seconds
     pick = pd.DataFrame({
@@ -65,8 +64,8 @@ def _bf_dbscan(lat, lon, eps_m, min_pts):
 
 
 @pytest.fixture(scope="module")
-def nyc():
-    return _load_nyc()
+def nyc(reference_file):
+    return _load_nyc(reference_file(CSV))
 
 
 def test_nyc_dbscan_matches_bruteforce_and_reference_invariants(spark, nyc):

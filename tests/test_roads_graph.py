@@ -72,12 +72,10 @@ def test_connected_components(spark):
     assert by_edge[198] != next(iter(main))
 
 
-def test_parse_reference_sample_fixture():
+def test_parse_reference_sample_fixture(reference_file):
     """Parse the reference's actual wire-format fixture (x0001-015.json,
     80 Munich samples with datetime-string times)."""
-    path = ("/root/reference/src/test/resources/com/bmwcarit/barefoot/"
-            "matcher/x0001-015.json")
-    arr = json.load(open(path))
+    arr = json.load(open(reference_file("matcher/x0001-015.json")))
     out = SS.parse_sample_json(pd.Series([json.dumps(o) for o in arr]))
     assert len(out) == 80
     assert (out["trace_id"] == "\\x0001").all()

@@ -16,7 +16,8 @@ import re
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F
 
@@ -250,7 +251,7 @@ both modes return identical rows for all three operators."""]
     lines += [probe_plan and "### radius_join probe", "```",
               probe_plan.strip()[:3000], "```", "</details>", ""]
 
-    with open("/root/repo/EXPLAIN.md", "w") as f:
+    with open(os.path.join(ROOT, "EXPLAIN.md"), "w") as f:
         f.write("\n".join(lines))
     print(f"EXPLAIN.md written; all_ok={all_ok}")
     spark.stop()

@@ -17,9 +17,11 @@ hashes) before committing.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import numpy as np  # noqa: E402
 
@@ -74,7 +76,7 @@ def main():
         out[name] = {"columns": cols, "types": types, "rows": rows}
         print(f"{name}: {len(rows)} rows x {len(cols)} cols")
 
-    with open("/root/repo/barefoot_spark/_goldens.py", "w") as fh:
+    with open(os.path.join(ROOT, "barefoot_spark", "_goldens.py"), "w") as fh:
         fh.write('"""GENERATED by tools/pin_goldens.py — pinned expected\n'
                  "rows for the kernel/media entries (deterministic seeded\n"
                  "fixtures; see that script's docstring for the stability\n"

@@ -6,16 +6,19 @@ comparison). Usage: python tools/selfcheck.py [sf_dir] [query ...]"""
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import duckdb
 import numpy as np
 import pandas as pd
 
 import __spark_entry__ as E
+from barefoot_spark.reference import FixtureMissing
 from barefoot_spark.session import build_session
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -43,7 +46,6 @@ def main():
     # default to the DRIVER's topology: the round-2 ghost-gate bug only
     # materialized at 32 buckets (defaultParallelism) and was invisible
     # at local[8] — the gate mimic must mimic the gate's parallelism
-    import os
     master = os.environ.get("SELFCHECK_MASTER", "local[32]")
     nshuf = int(master.split("[")[1].rstrip("]*")or "8") if "[" in master else 8
     spark = build_session(app="selfcheck", master=master,
@@ -61,6 +63,11 @@ def main():
         t0 = time.time()
         try:
             got = fn(spark, sf_dir).toPandas()
+        except FixtureMissing as ex:
+            # an input file absent from this host: not run, never OK
+            results[name] = {"status": "NOT_RUN", "error": str(ex)[:300]}
+            print(name, results[name])
+            continue
         except Exception as ex:
             results[name] = {"status": "SPARK_ERROR", "error": str(ex)[:300]}
             print(name, results[name])
@@ -96,8 +103,11 @@ def main():
         print(name, results[name])
 
     bad = {k: v for k, v in results.items()
-           if v["status"] not in ("OK", "ROWS_ONLY")}
-    print(json.dumps({"total": len(results), "bad": len(bad)}))
+           if v["status"] not in ("OK", "ROWS_ONLY", "NOT_RUN")}
+    not_run = sum(v["status"] == "NOT_RUN" for v in results.values())
+    print(json.dumps({"total": len(results),
+                      "passed": len(results) - len(bad) - not_run,
+                      "bad": len(bad), "not_run": not_run}))
     spark.stop()
     return 1 if bad else 0
 
