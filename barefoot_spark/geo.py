@@ -691,50 +691,6 @@ def polyline_point_azimuth(coords, offsets, frac, poly_for_point=None, lengths=N
     return out_lat, out_lon, np.where(azi < 0, azi + 360.0, azi)
 
 
-def polyline_azimuth(coords, offsets, frac, poly_for_point=None):
-    """Heading at global length-fraction f, wrapped [0,360)
-    (Geography.java:149-178)."""
-    offsets = np.asarray(offsets, dtype=np.int64)
-    frac = np.asarray(frac, dtype=np.float64)
-    if poly_for_point is None:
-        poly_for_point = np.arange(len(frac), dtype=np.int64)
-    else:
-        poly_for_point = np.asarray(poly_for_point, dtype=np.int64)
-
-    counts = (offsets[1:] - offsets[:-1] - 1)[poly_for_point]
-    pair_idx = np.repeat(np.arange(len(poly_for_point)), counts)
-    seg_local = np.concatenate([np.arange(c) for c in counts]) if len(counts) else np.zeros(0, dtype=np.int64)
-    seg_start = offsets[poly_for_point][pair_idx] + seg_local
-    lon, lat = coords[:, 0], coords[:, 1]
-    alat, alon = lat[seg_start], lon[seg_start]
-    blat, blon = lat[seg_start + 1], lon[seg_start + 1]
-    ds = distance(alat, alon, blat, blon)
-
-    npairs = len(poly_for_point)
-    total = np.zeros(npairs)
-    np.add.at(total, pair_idx, ds)
-    cum = np.zeros(len(ds) + 1)
-    np.cumsum(ds, out=cum[1:])
-    first = np.maximum(_group_first(npairs, pair_idx), 0)
-    s_before = cum[np.arange(len(ds))] - cum[first][pair_idx]
-
-    d_target = total * np.clip(frac, 0.0, 1.0)
-    reach = (s_before + ds + 1e-9) >= d_target[pair_idx]
-    pick = _group_first(npairs, pair_idx, reach)
-    last = np.maximum(_group_last(npairs, pair_idx), 0)
-    pick = np.where(pick < 0, last, pick) if len(ds) else pick
-
-    f0 = frac < 1e-10
-    f1 = frac > 1 - 1e-10
-    pick = np.where(f0, first, np.where(f1, last, pick))
-    p = pick
-    with np.errstate(divide="ignore", invalid="ignore"):
-        local_f = np.where(ds[p] > 0, (d_target - s_before[p]) / np.where(ds[p] == 0, 1, ds[p]), 0.0)
-    local_f = np.clip(local_f, 0.0, 1.0)
-    local_f = np.where(f0, 0.0, np.where(f1, frac, local_f))  # Geography.java:156-162
-    return azimuth_segment(alat[p], alon[p], blat[p], blon[p], local_f)
-
-
 def envelope(latc, lonc, radius_m):
     """Conservative (lat_min, lat_max, lon_min, lon_max) of the radius
     circle. The reference shoots four geodesic directs

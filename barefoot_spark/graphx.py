@@ -3,8 +3,8 @@
 Analogs of barefoot's Graph construction and weakly-connected
 components (topology/Graph.java:89-187). Adjacency for the routing
 kernel lives in RoadIndex (CSR, broadcast); here are the DataFrame-level
-operators: successor edge lists and component labeling via iterative
-min-label propagation over the undirected vertex graph (the reference's
+operators: successor edge lists and component labeling via
+large-star/small-star over the undirected vertex graph (the reference's
 BFS over successors+neighbors collapses to vertex connectivity).
 """
 
@@ -25,52 +25,15 @@ def successors(edges: DataFrame) -> DataFrame:
             .agg(F.sort_array(F.collect_list("succ_id")).alias("successors")))
 
 
-def connected_components(edges: DataFrame, max_rounds: int = 50) -> DataFrame:
-    """Weakly-connected components (Graph.components,
-    topology/Graph.java:131-187): vertex label = min vertex id reachable
-    over undirected edges; edges labeled by their source's component.
-    Iterative label propagation — O(diameter) rounds of two shuffles;
-    at continental scale swap in a GraphFrames-style large-star/
-    small-star variant, same contract. Returns (edge_id, component)."""
-    verts = (edges.select(F.col("source").alias("v"))
-             .union(edges.select(F.col("target").alias("v"))).distinct())
-    und = (edges.select(F.col("source").alias("a"), F.col("target").alias("b"))
-           .union(edges.select(F.col("target").alias("a"), F.col("source").alias("b")))
-           .distinct().cache())
-    labels = verts.select("v", F.col("v").alias("label"))
-    for _ in range(max_rounds):
-        nbr = (und.join(labels, und["b"] == labels["v"])
-               .groupBy("a").agg(F.min("label").alias("nbr_label")))
-        # localCheckpoint, not just cache: each round references the
-        # previous labels twice (join + convergence compare), so the
-        # logical plan doubles per round and the driver OOMs on
-        # explain-string generation past ~25 rounds without truncation
-        new_labels = (labels.join(nbr, labels["v"] == nbr["a"], "left")
-                      .select("v", F.least("label", F.coalesce("nbr_label", "label"))
-                              .alias("label")).localCheckpoint(eager=True))
-        changed = (new_labels.alias("n").join(labels.alias("o"), "v")
-                   .filter(F.col("n.label") != F.col("o.label")).limit(1).count())
-        labels = new_labels
-        if changed == 0:
-            break
-    # labels are localCheckpointed each round, so the returned plan no
-    # longer references und — release the cache instead of leaking one
-    # entry per invocation
-    und.unpersist()
-    return (edges.select("edge_id", "source")
-            .join(labels.withColumnRenamed("v", "source"), "source")
-            .select("edge_id", F.col("label").alias("component")))
-
-
 def connected_components_star(edges: DataFrame, max_rounds: int = 25) -> DataFrame:
     """Weakly-connected components via alternating large-star /
     small-star (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14) — the continental-scale path promised by
-    connected_components' contract: converges in O(log^2 n) rounds
-    regardless of graph diameter, vs O(diameter) for plain label
-    propagation, and every round is two key-partitioned shuffles with
-    map-side combine (groupBy min). Same output contract:
-    (edge_id, component = min reachable vertex id).
+    Beyond", SoCC'14; Graph.components, topology/Graph.java:131-187):
+    converges in O(log^2 n) rounds regardless of graph diameter, vs
+    O(diameter) for plain label propagation, and every round is two
+    key-partitioned shuffles with map-side combine (groupBy min).
+    Returns (edge_id, component = min vertex id reachable over
+    undirected edges); an edge is labeled by its source's component.
 
     large-star: for each undirected neighbor pair (u,v) with v > u,
     link v -> min(N(v) ∪ {v}); small-star: link each u and its smaller

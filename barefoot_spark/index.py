@@ -187,76 +187,51 @@ class RoadIndex:
         keep = dist < radius_m
         return pair_pt[keep], pair_base[keep], frac[keep], dist[keep]
 
-    def nearest(self, lat, lon, start_radius=100.0):
-        """Nearest base segment(s) per point, ties kept, expanding
-        radius x2 (QuadTreeIndex.java:131-173). Returns (point_idx,
-        base_idx, fraction, distance)."""
+    def _ring(self, lat, lon, k, start_radius):
+        """Expanding-ring search shared by nearest and knearest
+        (QuadTreeIndex.java:131-262): probe ``radius`` at start_radius,
+        doubling up to 4e7 m; a point is settled at the first ring that
+        holds >= k hits, and all its hits in that ring are kept. Only
+        hits strictly inside the ring count — the reference's guard
+        (QuadTreeIndex.java:156-165, :243-247): a segment whose envelope
+        overlaps ring r can lie beyond r while a closer one lies just
+        outside the searched envelope. Returns (point_idx, base_idx,
+        fraction, distance), ring by ring."""
         lat = np.asarray(lat, dtype=np.float64)
         lon = np.asarray(lon, dtype=np.float64)
-        n = len(lat)
-        out = {"pt": [], "base": [], "frac": [], "dist": []}
-        pending = np.arange(n)
+        pending = np.arange(len(lat))
         radius = float(start_radius)
+        acc = []
         while len(pending) and radius < 4e7:
-            pl, pn = lat[pending], lon[pending]
-            lat_min, lat_max, lon_min, lon_max = geo.envelope(pl, pn, radius)
-            pair_pt, pair_base = self._candidates_for_envelopes(lat_min, lat_max, lon_min, lon_max)
-            if len(pair_pt):
-                frac, dist = geo.polyline_intercept(
-                    self.coords, self.offsets, pl[pair_pt], pn[pair_pt],
-                    poly_for_point=pair_base)
-                best = np.full(len(pending), np.inf)
-                np.minimum.at(best, pair_pt, dist)
-                # accept only when best <= radius: envelope candidates at
-                # ring r can lie beyond r while a closer segment's
-                # envelope was not searched yet — the same guard the
-                # reference applies (QuadTreeIndex.java:156-165; the kNN
-                # variant's guard is :243-247). Without it, a point whose
-                # true nearest sits just outside the ring locks in a
-                # farther envelope-overlapping segment.
-                done = np.isfinite(best) & (best <= radius)
-                is_min = done[pair_pt] & (dist == best[pair_pt])
-                out["pt"].append(pending[pair_pt[is_min]])
-                out["base"].append(pair_base[is_min])
-                out["frac"].append(frac[is_min])
-                out["dist"].append(dist[is_min])
-                pending = pending[~done]
-            radius *= 2
-        if not out["pt"]:
-            return (np.zeros(0, np.int64),) * 2 + (np.zeros(0),) * 2
-        return (np.concatenate(out["pt"]), np.concatenate(out["base"]),
-                np.concatenate(out["frac"]), np.concatenate(out["dist"]))
-
-    def knearest(self, lat, lon, k, start_radius=100.0):
-        """k nearest base segments per point; only hits within the
-        current search radius count, so results are semantically correct
-        k-NN (guard at QuadTreeIndex.java:243-247). Returns (point_idx,
-        base_idx, fraction, distance) with <= k rows per point."""
-        lat = np.asarray(lat, dtype=np.float64)
-        lon = np.asarray(lon, dtype=np.float64)
-        n = len(lat)
-        pending = np.arange(n)
-        radius = float(start_radius)
-        acc_pt, acc_base, acc_frac, acc_dist = [], [], [], []
-        while len(pending) and radius < 4e7:
-            pl, pn = lat[pending], lon[pending]
-            pair_pt, pair_base, frac, dist = self.radius(pl, pn, radius)
-            counts = np.bincount(pair_pt, minlength=len(pending))
-            done = counts >= k
+            pair_pt, pair_base, frac, dist = self.radius(
+                lat[pending], lon[pending], radius)
+            done = np.bincount(pair_pt, minlength=len(pending)) >= k
             if done.any():
                 sel = done[pair_pt]
-                acc_pt.append(pending[pair_pt[sel]])
-                acc_base.append(pair_base[sel])
-                acc_frac.append(frac[sel])
-                acc_dist.append(dist[sel])
+                acc.append((pending[pair_pt[sel]], pair_base[sel],
+                            frac[sel], dist[sel]))
             pending = pending[~done]
             radius *= 2
-        if not acc_pt:
+        if not acc:
             return (np.zeros(0, np.int64),) * 2 + (np.zeros(0),) * 2
-        pt = np.concatenate(acc_pt)
-        base = np.concatenate(acc_base)
-        frac = np.concatenate(acc_frac)
-        dist = np.concatenate(acc_dist)
+        return tuple(np.concatenate([a[i] for a in acc]) for i in range(4))
+
+    def nearest(self, lat, lon, start_radius=100.0):
+        """Nearest base segment(s) per point, ties kept: the ring search
+        with k = 1, keeping every hit at the point's minimum distance.
+        Returns (point_idx, base_idx, fraction, distance)."""
+        pt, base, frac, dist = self._ring(lat, lon, 1, start_radius)
+        best = np.full(len(lat), np.inf)
+        np.minimum.at(best, pt, dist)
+        keep = dist == best[pt]
+        return pt[keep], base[keep], frac[keep], dist[keep]
+
+    def knearest(self, lat, lon, k, start_radius=100.0):
+        """k nearest base segments per point: the ring search settles a
+        point once its ring holds >= k hits, then the k smallest
+        (distance, base) are kept. Returns (point_idx, base_idx,
+        fraction, distance) with <= k rows per point."""
+        pt, base, frac, dist = self._ring(lat, lon, k, start_radius)
         # top-k per point: sort by (pt, dist, base) then rank — base id as
         # the deterministic tie-break (the reference's HashSet iteration
         # is JVM-nondeterministic on ties; SURVEY.md §2.6 fixes ordering)

@@ -2,13 +2,22 @@
 raster-tile↔vector joins as DataFrame operators.
 
 These are the engine's "joins" (SURVEY.md §2.3): theta-joins on geodesic
-distance, executed as broadcast-index probes. The big (points) side
-streams through ``mapInPandas`` in Arrow batches; each batch probes the
-broadcast ``RoadIndex`` (cell prefilter + exact geodesic refine — the
-same two-phase shape as the reference quadtree queries,
-spatial/QuadTreeIndex.java:175-262). Physically this is a broadcast hash
-join fused with its refinement filter: zero shuffle on the probe side,
-which is the only plan that survives 10^12 probe rows.
+distance, in two families.
+
+- Kernel joins (``radius_join``, ``nearest_join``, ``knn_join``): the
+  points side streams through ``mapInArrow`` in Arrow batches; each
+  batch probes the broadcast ``RoadIndex``. ``RoadIndex.radius`` is the
+  one candidate-and-refine core (cell prefilter + exact geodesic
+  refine, spatial/QuadTreeIndex.java:175-200); nearest and kNN are one
+  expanding-ring search over it (``RoadIndex._ring``). Physically a
+  broadcast hash join fused with its refinement filter: zero shuffle
+  on the probe side, which is the only plan that survives 10^12 probe
+  rows.
+- Codegen joins (``radius_join_fast``, ``nearest_join_fast``,
+  ``knn_join_fast``): one pure-Catalyst pipeline — cell equi-join
+  against a buffered sub-segment cover table, codegen refine, the
+  per-road min reduce — with nearest and kNN adding only a window
+  rank.
 
 ``point_in_polygon`` ray-casts against broadcast polygons after a cell
 prefilter; ``raster_vector_join`` is a pure Catalyst equi-join between a
@@ -68,46 +77,23 @@ def _probe_op(points: DataFrame, idx_bc, point_id: str, query_fn) -> DataFrame:
 
 
 def radius_join(points: DataFrame, idx_bc, radius_m: float,
-                point_id: str = "point_id", directed: bool = True,
-                prefilter: tuple | None = None) -> DataFrame:
+                point_id: str = "point_id") -> DataFrame:
     """All (point, directed-edge, fraction) pairs within radius_m
-    (QuadTreeIndex.radius + RoadMap.Index.split semantics).
-
-    prefilter: optional ``(covered_cells_df, res)`` — a DataFrame with
-    one ``cell`` column holding the radius-expanded segment cover at
-    ``res`` (e.g. ``segment_parts_pdf(idx, radius_m, res)`` cells, the
-    same cover radius_join_fast joins on). Points outside the cover
-    cannot have a hit, so a JVM-side broadcast LEFT SEMI join drops them
-    BEFORE the Arrow exchange into the Python probe — shrinking the
-    kernel pipe by the no-hit fraction with identical output."""
-    if prefilter is not None:
-        from . import tiles as T
-        cover_df, res = prefilter
-        points = (points.withColumn(
-                      "_pc", T.cell_expr(F.col("lat"), F.col("lon"), res))
-                  .join(F.broadcast(cover_df.select(
-                      F.col("cell").alias("_pc"))), "_pc", "left_semi")
-                  .drop("_pc"))
-
+    (QuadTreeIndex.radius + RoadMap.Index.split semantics)."""
     def q(idx, lat, lon):
         pt, base, frac, dist = idx.radius(lat, lon, radius_m)
-        if directed:
-            spt, eidx, sfrac, src = idx.split(pt, base, frac)
-            return spt, eidx, sfrac, dist[src]
-        return pt, idx.eid_to_idx(idx.gid[base] * 2), frac, dist
+        spt, eidx, sfrac, src = idx.split(pt, base, frac)
+        return spt, eidx, sfrac, dist[src]
     return _probe_op(points, idx_bc, point_id, q)
 
 
-def nearest_join(points: DataFrame, idx_bc, point_id: str = "point_id",
-                 directed: bool = True) -> DataFrame:
-    """Nearest segment(s) per point, ties kept
-    (QuadTreeIndex.nearest)."""
+def nearest_join(points: DataFrame, idx_bc, point_id: str = "point_id") -> DataFrame:
+    """Nearest segment(s) per point, ties kept, as directed edges
+    (QuadTreeIndex.nearest via ``RoadIndex.nearest``'s ring search)."""
     def q(idx, lat, lon):
         pt, base, frac, dist = idx.nearest(lat, lon)
-        if directed:
-            spt, eidx, sfrac, src = idx.split(pt, base, frac)
-            return spt, eidx, sfrac, dist[src]
-        return pt, idx.eid_to_idx(idx.gid[base] * 2), frac, dist
+        spt, eidx, sfrac, src = idx.split(pt, base, frac)
+        return spt, eidx, sfrac, dist[src]
     return _probe_op(points, idx_bc, point_id, q)
 
 
@@ -190,6 +176,30 @@ def segment_parts_pdf(idx, radius_m: float, res: int) -> pd.DataFrame:
         "total_len": total[poly_of[row_idx]]})
 
 
+def _fast_candidates(points: DataFrame, parts_df: DataFrame, radius_m: float,
+                     res: int) -> DataFrame:
+    """Candidate stage of the codegen join family: cell equi-join +
+    refine expressions (dist_m, fraction), kept within radius_m."""
+    from . import tiles as T
+    fr = seg_refine_sql(radius_m)
+    pts = points.withColumn("cell", T.cell_expr(F.col("lat"), F.col("lon"), res))
+    return (pts.join(F.broadcast(parts_df), "cell")
+            .withColumn("dist_m", F.expr(fr["dist"]))
+            .withColumn("fraction", F.expr(fr["frac"]))
+            .filter(F.col("dist_m") <= radius_m))
+
+
+def _fast_per_road(points: DataFrame, parts_df: DataFrame, radius_m: float,
+                   res: int, point_id: str) -> DataFrame:
+    """Per-road reduce of the codegen candidates: one row per
+    (point, gid) at its minimum-distance sub-segment."""
+    return (_fast_candidates(points, parts_df, radius_m, res)
+            .groupBy(point_id, "gid")
+            .agg(F.min("dist_m").alias("distance"),
+                 F.expr("min_by(fraction, dist_m)").alias("fraction"))
+            .select(point_id, "gid", "fraction", "distance"))
+
+
 def radius_join_fast(points: DataFrame, parts_df: DataFrame, radius_m: float,
                      res: int, point_id: str = "point_id",
                      single_part: bool = False) -> DataFrame:
@@ -212,52 +222,28 @@ def radius_join_fast(points: DataFrame, parts_df: DataFrame, radius_m: float,
     unique by construction and the min-per-road aggregation — the only
     shuffle in this plan — is skipped entirely, leaving a pure
     map-side broadcast-join pipeline."""
-    from . import tiles as T
-    fr = seg_refine_sql(radius_m)
-    pts = points.withColumn("cell", T.cell_expr(F.col("lat"), F.col("lon"), res))
-    j = pts.join(F.broadcast(parts_df), "cell")
-    j = (j.withColumn("dist_m", F.expr(fr["dist"]))
-         .filter(F.col("dist_m") <= radius_m)
-         .withColumn("fraction", F.expr(fr["frac"])))
     if single_part:
-        return j.select(point_id, "gid", "fraction",
-                        F.col("dist_m").alias("distance"))
-    return (j.groupBy(point_id, "gid")
-            .agg(F.min("dist_m").alias("distance"),
-                 F.expr("min_by(fraction, dist_m)").alias("fraction"))
-            .select(point_id, "gid", "fraction", "distance"))
-
-
-def _fast_candidates(points: DataFrame, parts_df: DataFrame, radius_m: float,
-                     res: int, point_id: str) -> DataFrame:
-    """Shared candidate stage of the codegen join family: cell
-    equi-join + refine expressions (dist_m, fraction) — no filter."""
-    from . import tiles as T
-    fr = seg_refine_sql(radius_m)
-    pts = points.withColumn("cell", T.cell_expr(F.col("lat"), F.col("lon"), res))
-    return (pts.join(F.broadcast(parts_df), "cell")
-            .withColumn("dist_m", F.expr(fr["dist"]))
-            .withColumn("fraction", F.expr(fr["frac"])))
+        return (_fast_candidates(points, parts_df, radius_m, res)
+                .select(point_id, "gid", "fraction",
+                        F.col("dist_m").alias("distance")))
+    return _fast_per_road(points, parts_df, radius_m, res, point_id)
 
 
 def nearest_join_fast(points: DataFrame, parts_df: DataFrame,
                       max_radius_m: float, res: int,
                       point_id: str = "point_id") -> DataFrame:
     """Nearest road within max_radius_m per point, ties kept (the
-    kernel nearest_join's tie semantics) — pure Catalyst: candidate
-    cell join + codegen refine + rank()=1 window. Points with no road
-    within max_radius_m produce no row (the expanding-ring kernel
-    keeps searching; at 10^12 scale a bounded nearest is the correct
-    contract — unbounded search belongs to the broadcast-kernel path).
-    parts_df must be built with segment_parts_pdf(idx, max_radius_m,
-    res) so the cover guarantees completeness within the bound."""
-    cand = _fast_candidates(points, parts_df, max_radius_m, res, point_id) \
-        .filter(F.col("dist_m") <= max_radius_m)
-    per_road = (cand.groupBy(point_id, "gid")
-                .agg(F.min("dist_m").alias("distance"),
-                     F.expr("min_by(fraction, dist_m)").alias("fraction")))
+    kernel nearest_join's tie semantics) — pure Catalyst: the codegen
+    per-road candidates ranked by rank() over distance, rank 1 kept.
+    Points with no road within max_radius_m produce no row (the
+    kernel's ring search keeps expanding; at 10^12 scale a bounded
+    nearest is the correct contract — unbounded search belongs to the
+    broadcast-kernel path). parts_df must be built with
+    segment_parts_pdf(idx, max_radius_m, res) so the cover guarantees
+    completeness within the bound."""
     w = Window.partitionBy(point_id).orderBy(F.col("distance").asc())
-    return (per_road.withColumn("rnk", F.rank().over(w))
+    return (_fast_per_road(points, parts_df, max_radius_m, res, point_id)
+            .withColumn("rnk", F.rank().over(w))
             .filter(F.col("rnk") == 1)
             .select(point_id, "gid", "fraction", "distance"))
 
@@ -265,21 +251,18 @@ def nearest_join_fast(points: DataFrame, parts_df: DataFrame,
 def knn_join_fast(points: DataFrame, parts_df: DataFrame, k: int,
                   max_radius_m: float, res: int,
                   point_id: str = "point_id") -> DataFrame:
-    """k nearest roads within max_radius_m per point — candidate cell
-    join + codegen refine + row_number()<=k (deterministic tie-break by
-    gid, matching the kernel's ordering). Bounded-kNN contract as
-    nearest_join_fast; if fewer than k roads lie within the bound the
-    point yields fewer rows (the kernel's expanding ring would keep
-    going — QuadTreeIndex.java:243-247's radius guard is what makes
-    the bounded form correct)."""
-    cand = _fast_candidates(points, parts_df, max_radius_m, res, point_id) \
-        .filter(F.col("dist_m") <= max_radius_m)
-    per_road = (cand.groupBy(point_id, "gid")
-                .agg(F.min("dist_m").alias("distance"),
-                     F.expr("min_by(fraction, dist_m)").alias("fraction")))
+    """k nearest roads within max_radius_m per point — the codegen
+    per-road candidates ranked by row_number() over (distance, gid),
+    rank <= k kept (deterministic tie-break by gid, matching the
+    kernel's ordering). Bounded-kNN contract as nearest_join_fast; if
+    fewer than k roads lie within the bound the point yields fewer rows
+    (the kernel's ring search would keep going —
+    QuadTreeIndex.java:243-247's radius guard is what makes the bounded
+    form correct)."""
     w = Window.partitionBy(point_id).orderBy(F.col("distance").asc(),
                                              F.col("gid").asc())
-    return (per_road.withColumn("rnk", F.row_number().over(w))
+    return (_fast_per_road(points, parts_df, max_radius_m, res, point_id)
+            .withColumn("rnk", F.row_number().over(w))
             .filter(F.col("rnk") <= k)
             .select(point_id, "gid", "fraction", "distance",
                     F.col("rnk").cast("long").alias("rnk")))

@@ -1,32 +1,20 @@
-"""Tile assignment: geotag -> cell id, as a vectorized pandas UDF and as
-a pure-Catalyst column expression.
+"""Tile assignment: geotag -> cell id as a pure-Catalyst column
+expression.
 
 The north rule's "batch-encode every image record's geotag into cells"
-stage. Two equivalent implementations:
-
-- ``cell_udf``: Arrow-batched pandas UDF over ``cells.latlng_to_cell``
-  (numpy) — the general path, same kernel the spatial joins use.
-- ``cell_expr``: the identical integer math as built-in Column
-  expressions — stays inside whole-stage codegen, is what the DuckDB
-  oracle mirrors bit-for-bit, and proves the assignment is exact integer
-  arithmetic (identical across parallelism levels by construction,
-  per BASELINE.json's determinism requirement).
+stage. ``cell_expr`` is the integer math of ``cells.latlng_to_cell``
+(the numpy kernel the spatial joins use) as built-in Column
+expressions: it stays inside whole-stage codegen, is what the DuckDB
+oracle mirrors bit-for-bit (``cell_expr_sql``), and makes the
+assignment exact integer arithmetic (identical across parallelism
+levels by construction, per BASELINE.json's determinism requirement).
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window, functions as F
-from pyspark.sql.types import LongType
 
 from .. import cells
-
-
-def cell_udf(res: int):
-    @F.pandas_udf(LongType())
-    def _udf(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        return pd.Series(cells.latlng_to_cell(lat.to_numpy(), lon.to_numpy(), res))
-    return _udf
 
 
 def cell_expr(lat: Column, lon: Column, res: int) -> Column:
@@ -280,13 +268,10 @@ def curate_frames(frames: DataFrame, min_interval: int = 4,
 
 
 def assign_tiles(df: DataFrame, lat="lat", lon="lon", res: int = 15,
-                 out="cell", use_udf: bool = False,
-                 parent_res: int | None = None) -> DataFrame:
+                 out="cell", parent_res: int | None = None) -> DataFrame:
     """Add cell (and optionally coarse parent prefix — the partition
     key for Iceberg-style layouts, SURVEY.md §4 item 1)."""
-    c = cell_udf(res)(F.col(lat), F.col(lon)) if use_udf \
-        else cell_expr(F.col(lat), F.col(lon), res)
-    df = df.withColumn(out, c)
+    df = df.withColumn(out, cell_expr(F.col(lat), F.col(lon), res))
     if parent_res is not None:
         df = df.withColumn(f"{out}_p{parent_res}",
                            cell_expr(F.col(lat), F.col(lon), parent_res))

@@ -1,8 +1,8 @@
-"""Minimal WKB/WKT codec for Point, LineString, Polygon (numpy).
+"""Minimal WKB/WKT codec for road LineStrings and sample Points (numpy).
 
 The reference keeps road geometry as WKB LineString bytes and decodes on
 demand (road/BaseRoad.java:46,76-77,203-206); samples arrive as WKT
-POINT strings (matcher/MatcherSample.java:94-96). We mirror both wire
+POINT strings (matcher/MatcherSample.java:94-96). We read both wire
 formats without external geometry libraries. Little-endian WKB only
 (byte order 01), which is what PostGIS/bfmap emit.
 """
@@ -13,9 +13,7 @@ import struct
 
 import numpy as np
 
-_WKB_POINT = 1
 _WKB_LINESTRING = 2
-_WKB_POLYGON = 3
 
 
 def linestring_to_wkb(coords) -> bytes:
@@ -36,49 +34,6 @@ def wkb_to_linestring(wkb: bytes) -> np.ndarray:
     if gtype & 0x20000000:  # SRID flag (EWKB)
         off += 4
     return np.frombuffer(wkb, dtype="<f8", count=2 * n, offset=off).reshape(n, 2).copy()
-
-
-def polygon_to_wkb(rings) -> bytes:
-    """rings: list of (n, 2) arrays (first = exterior) -> WKB Polygon."""
-    out = [b"\x01", struct.pack("<II", _WKB_POLYGON, len(rings))]
-    for ring in rings:
-        ring = np.asarray(ring, dtype="<f8")
-        out.append(struct.pack("<I", len(ring)))
-        out.append(ring.tobytes())
-    return b"".join(out)
-
-
-def wkb_to_polygon(wkb: bytes):
-    """WKB Polygon -> list of (n, 2) float64 rings."""
-    if wkb[0:1] != b"\x01":
-        raise ValueError("only little-endian WKB supported")
-    gtype, nrings = struct.unpack_from("<II", wkb, 1)
-    if gtype & 0xFF != _WKB_POLYGON:
-        raise ValueError(f"not a Polygon: type {gtype}")
-    off = 9
-    if gtype & 0x20000000:
-        off += 4
-    rings = []
-    for _ in range(nrings):
-        (n,) = struct.unpack_from("<I", wkb, off)
-        off += 4
-        rings.append(np.frombuffer(wkb, dtype="<f8", count=2 * n, offset=off).reshape(n, 2).copy())
-        off += 16 * n
-    return rings
-
-
-def point_to_wkb(lon: float, lat: float) -> bytes:
-    return b"\x01" + struct.pack("<Idd", _WKB_POINT, lon, lat)
-
-
-def wkb_to_point(wkb: bytes):
-    gtype, lon, lat = struct.unpack_from("<Idd", wkb, 1)
-    return lon, lat
-
-
-def wkt_linestring(coords) -> str:
-    body = ", ".join(f"{x:.9g} {y:.9g}" for x, y in np.asarray(coords, dtype=np.float64))
-    return f"LINESTRING ({body})"
 
 
 def parse_wkt_point(wkt: str):

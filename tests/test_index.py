@@ -119,6 +119,23 @@ def test_edge_point_geometry(micro):
     assert abs(azi[0] - 270.0) < 0.5
 
 
+def brute_road_dist(idx, lat, lon):
+    """Per-road distance from one point by dense sampling of every
+    sub-segment (201 samples, endpoints included): an upper bound on
+    the exact distance, tight to well under a metre here."""
+    offs = np.asarray(idx.offsets)
+    out = np.full(len(offs) - 1, np.inf)
+    f = np.linspace(0, 1, 201)
+    for q in range(len(offs) - 1):
+        c = idx.coords[offs[q]:offs[q + 1]]
+        for s in range(len(c) - 1):
+            la = c[s][1] + f * (c[s + 1][1] - c[s][1])
+            lo = c[s][0] + f * (c[s + 1][0] - c[s][0])
+            out[q] = min(out[q], geo.distance(
+                np.full(201, lat), np.full(201, lon), la, lo).min())
+    return out
+
+
 def test_nearest_ring_guard_brute_force():
     """Regression (found via the codegen-join cross-check): a candidate
     whose envelope overlaps ring r can lie beyond r while the true
@@ -131,17 +148,34 @@ def test_nearest_ring_guard_brute_force():
     lat = rng.uniform(48.0, 48.0 + 8 * 0.005, n)
     lon = rng.uniform(11.0, 11.0 + 8 * 0.005, n)
     p, base, frac, dist = idx2.nearest(lat, lon)
-    offs = np.asarray(idx2.offsets)
     for i in range(0, n, 13):
-        best = np.inf
-        for q in range(len(offs) - 1):
-            c = idx2.coords[offs[q]:offs[q + 1]]
-            for s in range(len(c) - 1):
-                f = np.linspace(0, 1, 201)
-                la = c[s][1] + f * (c[s + 1][1] - c[s][1])
-                lo = c[s][0] + f * (c[s + 1][0] - c[s][0])
-                best = min(best, geo.distance(
-                    np.full(201, lat[i]), np.full(201, lon[i]), la, lo).min())
+        best = brute_road_dist(idx2, lat[i], lon[i]).min()
         got = dist[p == i].min()
         # dense sampling overestimates the true min slightly
         assert got <= best + 0.5, (i, got, best)
+
+
+def test_nearest_knearest_off_map_brute_force():
+    """Probes 0.05-1 degrees outside the map (south, west, east, north,
+    and two south-west of the corner) take several ring doublings;
+    nearest and knearest(k=3) must still agree with the brute-force
+    scan. The two south-west points are equidistant from the two roads
+    meeting at the corner vertex, so nearest must return both rows."""
+    idx = RoadIndex(roads.grid_pdf(8, seed=42), res=15)
+    lat = np.array([47.95, 47.8, 47.0, 48.021, 48.017, 48.54, 47.9, 47.5])
+    lon = np.array([11.013, 11.027, 11.006, 11.09, 12.04, 11.022, 10.9, 10.5])
+    p, base, _, dist = idx.nearest(lat, lon)
+    pk, _, _, distk = idx.knearest(lat, lon, 3)
+    for i in range(len(lat)):
+        brute = np.sort(brute_road_dist(idx, lat[i], lon[i]))
+        got = dist[p == i]
+        assert len(got) >= 1 and np.all(got == got[0]), (i, got)
+        assert abs(got[0] - brute[0]) <= 0.5, (i, got, brute[:2])
+        gotk = distk[pk == i]
+        assert len(gotk) == 3 and np.all(np.diff(gotk) >= 0), (i, gotk)
+        np.testing.assert_allclose(gotk, brute[:3], atol=0.5)
+    # the corner vertex (11.0, 48.0) starts road 0 (east) and road 1
+    # (north): a tie, both rows kept, at fraction 0 of each
+    for i in (6, 7):
+        assert sorted(idx.gid[base[p == i]].tolist()) == [0, 1], i
+        assert dist[p == i][0] == dist[p == i][1]

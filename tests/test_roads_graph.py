@@ -65,7 +65,7 @@ def test_connected_components(spark):
         [(99, 100, 101, False, "LINESTRING(12.0 49.0, 12.01 49.0)")])
     rdf = roads.roads_df(spark, pd.concat([pdf, extra], ignore_index=True))
     edges = roads.edges_view(rdf)
-    comp = graphx.connected_components(edges).toPandas()
+    comp = graphx.connected_components_star(edges).toPandas()
     by_edge = dict(zip(comp["edge_id"], comp["component"]))
     main = {by_edge[e] for e in [0, 1, 2, 4, 6, 8, 10, 12]}
     assert len(main) == 1
@@ -86,10 +86,24 @@ def test_parse_reference_sample_fixture(reference_file):
     assert out["time"].iloc[0] == int(pd.Timestamp("2014-09-10 06:54:07+0200").timestamp() * 1000)
 
 
+def union_find_components(pdf):
+    """Brute-force oracle: {edge_id: min vertex id of the source's weak
+    component}, by plain union-find over the undirected edges."""
+    parent = {}
+
+    def find(v):
+        while parent.setdefault(v, v) != v:
+            v = parent[v]
+        return v
+    for s, t in zip(pdf["source"].tolist(), pdf["target"].tolist()):
+        a, b = find(s), find(t)
+        parent[max(a, b)] = min(a, b)
+    return {e: find(s) for e, s in zip(pdf["edge_id"].tolist(), pdf["source"].tolist())}
+
+
 def test_connected_components_star_equivalence(spark):
-    """large-star/small-star CC == label propagation on a random graph
-    with many components, a long path (high diameter), and the micro7
-    map — the scale algorithm must be a drop-in replacement."""
+    """large-star/small-star CC == union-find on a random graph with
+    many components and a long path (high diameter)."""
     import numpy as np
     rng = np.random.default_rng(3)
     # random sparse graph: 120 vertices, 110 edges -> several components
@@ -104,12 +118,9 @@ def test_connected_components_star_equivalence(spark):
         "edge_id": eid,
         "source": np.concatenate([src, psrc]),
         "target": np.concatenate([dst, pdst])})
-    edges = spark.createDataFrame(pdf)
-    lp = graphx.connected_components(edges, max_rounds=60).toPandas()
-    st = graphx.connected_components_star(edges).toPandas()
-    lp_m = dict(zip(lp["edge_id"], lp["component"]))
-    st_m = dict(zip(st["edge_id"], st["component"]))
-    assert lp_m == st_m
+    st = graphx.connected_components_star(spark.createDataFrame(pdf)).toPandas()
+    st_m = dict(zip(st["edge_id"].tolist(), st["component"].tolist()))
+    assert st_m == union_find_components(pdf)
     # path is one component labeled by its min vertex
     assert st_m[len(src)] == 200
 
@@ -117,8 +128,7 @@ def test_connected_components_star_equivalence(spark):
 def test_graph_construction_and_components_reference_goldens(spark):
     """GraphTest.testConstruction/testComponents (topology/GraphTest.
     java:32-141) verbatim: successor sets per edge and weakly-connected
-    edge components (dead ends, circle, self-loop, star, path) — on
-    both CC algorithms."""
+    edge components (dead ends, circle, self-loop, star, path)."""
     import pandas as pd
 
     cons = [(0, 0, 1), (1, 1, 0), (2, 1, 2), (3, 2, 1), (4, 3, 1),
@@ -141,12 +151,11 @@ def test_graph_construction_and_components_reference_goldens(spark):
             {14, 15, 16}, {17, 18, 19, 20, 21, 22, 23}]
     cdf = spark.createDataFrame(pd.DataFrame(
         comp_edges, columns=["edge_id", "source", "target"]))
-    for fn in (graphx.connected_components, graphx.connected_components_star):
-        out = fn(cdf).toPandas()
-        groups = {}
-        for e, c in zip(out["edge_id"], out["component"]):
-            groups.setdefault(c, set()).add(int(e))
-        assert sorted(map(sorted, groups.values())) == sorted(map(sorted, want)), fn
+    out = graphx.connected_components_star(cdf).toPandas()
+    groups = {}
+    for e, c in zip(out["edge_id"], out["component"]):
+        groups.setdefault(c, set()).add(int(e))
+    assert sorted(map(sorted, groups.values())) == sorted(map(sorted, want))
 
 
 def test_azimuth_normalization_reference_goldens():

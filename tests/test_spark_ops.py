@@ -50,18 +50,19 @@ def test_nearest_and_knn_join(spark, idx, idx_bc):
     assert np.all(np.diff(knn.sort_values("distance")["distance"]) >= 0)
 
 
-def test_tile_assign_udf_equals_expr(spark):
+def test_tile_assign_expr_equals_numpy(spark):
+    """The Catalyst cell expression packs the same ids as the numpy
+    kernel the spatial joins use (cells.latlng_to_cell)."""
+    from barefoot_spark import cells
     pdf = pd.DataFrame({
-        "point_id": [str(i) for i in range(500)],
+        "point_id": np.arange(500),
         "lat": np.linspace(-80, 80, 500),
         "lon": np.linspace(-170, 170, 500),
     })
-    df = spark.createDataFrame(pdf)
-    a = tiles.assign_tiles(df, res=15, use_udf=True).toPandas()
-    b = tiles.assign_tiles(df, res=15, use_udf=False).toPandas()
-    pd.testing.assert_series_equal(
-        a.sort_values("point_id")["cell"].reset_index(drop=True),
-        b.sort_values("point_id")["cell"].reset_index(drop=True))
+    got = (tiles.assign_tiles(spark.createDataFrame(pdf), res=15)
+           .toPandas().sort_values("point_id")["cell"].to_numpy())
+    want = cells.latlng_to_cell(pdf["lat"].to_numpy(), pdf["lon"].to_numpy(), 15)
+    np.testing.assert_array_equal(got, want)
 
 
 def test_tile_assign_stable_across_parallelism(spark):
@@ -175,16 +176,22 @@ def test_radius_join_fast_bounded_error(spark):
             assert d >= r * (1 - tol), (k, d)
 
 
-def test_radius_join_fast_plan_is_codegen(spark):
-    """The fast path must plan as broadcast hash join with no Python
-    operators (no BatchEvalPython / MapInPandas / PythonUDF nodes)."""
+@pytest.mark.parametrize("join", [
+    lambda pts, parts: joins.radius_join_fast(pts, parts, 150.0, 15),
+    lambda pts, parts: joins.nearest_join_fast(pts, parts, 150.0, 15),
+    lambda pts, parts: joins.knn_join_fast(pts, parts, 3, 150.0, 15),
+], ids=["radius_join_fast", "nearest_join_fast", "knn_join_fast"])
+def test_radius_join_fast_plan_is_codegen(spark, join):
+    """Every codegen join must plan as broadcast hash join with no
+    Python operators (no BatchEvalPython / MapInPandas / PythonUDF
+    nodes)."""
     g_idx = RoadIndex(roads.micro7_pdf(), res=15)
     pts = spark.range(100).select(
         F.col("id").alias("point_id"),
         (F.lit(48.0) + F.col("id") / 10000.0).alias("lat"),
         (F.lit(11.0) + F.col("id") / 10000.0).alias("lon"))
     parts = spark.createDataFrame(joins.segment_parts_pdf(g_idx, 150.0, 15))
-    out = joins.radius_join_fast(pts, parts, 150.0, 15)
+    out = join(pts, parts)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     for bad in ("Python", "MapInPandas", "ArrowEval"):
@@ -230,35 +237,6 @@ def test_nearest_and_knn_fast_match_kernel(spark):
         assert len(got) == min(k, len(ex))
         for a, b in zip(got, ex):
             assert abs(a - b) <= max(1.0, 0.01 * b), (pid, got, ex)
-
-
-def test_radius_join_prefilter_equivalence(spark):
-    """The JVM-side cover prefilter drops only points that cannot have
-    a hit: identical output rows with and without it, on a sparse map
-    where most points are far from any road."""
-    from barefoot_spark import roads as R
-    from barefoot_spark.index import RoadIndex
-    from barefoot_spark.operators import joins as J
-
-    idx = RoadIndex(R.micro7_pdf(), res=16)
-    idx_bc = spark.sparkContext.broadcast(idx)
-    rng = np.random.default_rng(11)
-    # idx.coords rows are (lon, lat)
-    lon0, lon1 = idx.coords[:, 0].min(), idx.coords[:, 0].max()
-    lat0, lat1 = idx.coords[:, 1].min(), idx.coords[:, 1].max()
-    pdf = pd.DataFrame({
-        "point_id": np.arange(4000),
-        # spread far beyond the micro map so most points prefilter away
-        "lat": rng.uniform(lat0 - 0.05, lat1 + 0.05, 4000),
-        "lon": rng.uniform(lon0 - 0.05, lon1 + 0.05, 4000)})
-    pts = spark.createDataFrame(pdf)
-    cover = spark.createDataFrame(
-        J.segment_parts_pdf(idx, 150.0, 15)).select("cell").distinct()
-    a = J.radius_join(pts, idx_bc, 150.0).toPandas() \
-        .sort_values(["point_id", "edge_id"]).reset_index(drop=True)
-    b = J.radius_join(pts, idx_bc, 150.0, prefilter=(cover, 15)).toPandas() \
-        .sort_values(["point_id", "edge_id"]).reset_index(drop=True)
-    assert len(a) > 0 and a.equals(b)
 
 
 def test_postgis_jdbc_query_pushdown(spark):

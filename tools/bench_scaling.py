@@ -76,6 +76,16 @@ def merge_best(runs: list[dict]) -> dict:
     return best
 
 
+def best_kernel(reps: list[dict]) -> tuple[float, float]:
+    """(kernel_sec, floor_sec) of the rep whose radius_join time net of
+    its own Arrow-pipe floor is smallest: the join and the floor come
+    from the same rep, so the subtraction never mixes two reps' host
+    conditions."""
+    return min((max(r["stages"]["radius_join"]["sec"]
+                    - r["stages"]["arrow_pipe_floor"]["sec"], 1e-6),
+                r["stages"]["arrow_pipe_floor"]["sec"]) for r in reps)
+
+
 def main():
     resume = "--resume" in sys.argv
     append = "--append" in sys.argv
@@ -125,10 +135,8 @@ def main():
     # measured single-JVM Arrow-pipe floor (a per-executor pipeline on a
     # real cluster; see the note in the floor row)
     if "arrow_pipe_floor" in a["stages"]:
-        fa = a["stages"]["arrow_pipe_floor"]["sec"]
-        fb = b["stages"]["arrow_pipe_floor"]["sec"]
-        ka = max(a["stages"]["radius_join"]["sec"] - fa, 1e-6)
-        kb = max(b["stages"]["radius_join"]["sec"] - fb, 1e-6)
+        ka, fa = best_kernel(reps_a)
+        kb, fb = best_kernel(reps_b)
         effs["radius_join_kernel"] = (ka / kb) / (hi / lo)
         lines += ["",
                   f"`radius_join` kernel-compute efficiency (pipe floor of "
@@ -173,12 +181,16 @@ def main():
         if "radius_join_kernel" in effs else dict(effs)
     cluster_norm = {k: norm[k] for k in cluster_effs}
     met = min(cluster_norm.values()) >= 0.8
+    e2e = {k: v for k, v in effs.items() if k != "radius_join_kernel"}
+    worst = min(e2e, key=e2e.get)
+    caveat = (", whose end-to-end time includes the constant-rate "
+              "single-JVM Arrow pipe floor quantified above"
+              if worst == "radius_join" and "radius_join_kernel" in effs else "")
     lines += ["", "## Summary", "",
               f"- host ceiling (spin probe): **{ceiling:.2f}**",
-              f"- min raw end-to-end efficiency: **{min(effs.values()):.2f}** "
-              f"(normalized {min(norm.values()):.2f}); the minimum is "
-              "radius_join, whose end-to-end time includes the "
-              "constant-rate single-JVM Arrow pipe floor quantified above",
+              f"- min raw end-to-end efficiency: **{e2e[worst]:.2f}** "
+              f"(normalized {norm[worst]:.2f}); the minimum is "
+              f"{worst}{caveat}",
               f"- min cluster-relevant normalized efficiency (radius_join "
               f"measured on its kernel term): "
               f"**{min(min(cluster_norm.values()), 1.0):.2f}** "
