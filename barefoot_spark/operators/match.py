@@ -23,6 +23,9 @@ group, not once per step of every trace. Only routing (one search per
 trace and predecessor) and the per-pair path walk stay Python loops.
 A trace's rows never depend on the traces it shares steps with;
 ``match_trace`` is the same kernel with a group of one.
+This kernel, ``match_trace`` and the online matcher all route through
+one search, ``route_ssmt_cached``; ``route_ssmt`` is the tests' plain
+reference and the engine does not call it.
 """
 
 from __future__ import annotations
@@ -63,7 +66,8 @@ MATCH_SCHEMA = StructType([
 @dataclass
 class MatcherParams:
     """Defaults mirror matcher/Matcher.java:62-68 and
-    config/server.properties:5-10."""
+    config/server.properties:5-10. The route cache has no knob: it
+    holds at most ``_TREE_CACHE_MAX`` trees (``route_ssmt_cached``)."""
     sigma: float = 10.0
     sigma_a: float = 10.0          # azimuth gaussian (Matcher.java:65)
     lam: float = 0.0               # 0 => adaptive beta (Matcher.java:323-327)
@@ -81,14 +85,6 @@ class MatcherParams:
     # TrackerServer.java:168 / KState.java:182 reject only strictly
     # out-of-order samples, equal times pass through.
     dup_time: str = "error"
-    # cap on distinct source-edge Dijkstra trees kept in the shared
-    # per-partition route cache (route_ssmt_cached): the cache is reset
-    # when the cap is hit, so kernel memory is bounded by this knob
-    # instead of growing with the partition's trace content on a
-    # continental map. Results are cap-invariant (any eviction only
-    # forces a recompute) — pinned by the parameterized
-    # match_trace cache-equivalence test.
-    route_cache_max_edges: int = 4096
 
 
 # ---------------------------------------------------------------------------
@@ -96,7 +92,9 @@ class MatcherParams:
 # ---------------------------------------------------------------------------
 
 def route_ssmt(idx: RoadIndex, src, targets, cost_vec, bound_vec=None, bound_max=None):
-    """Single-source multi-target shortest path over directed edges.
+    """Single-source multi-target shortest path over directed edges: the
+    plain reference that tests check ``route_ssmt_cached`` against. The
+    engine does not call it.
 
     src: (edge_idx, fraction); targets: sequence of (edge_idx, fraction).
     Costs accrue per whole edge, with fractional start/end adjustment
@@ -197,8 +195,8 @@ class _EdgeTree:
     (``route_ssmt_cached`` replays the recorded pops and merges
     synthesized reach marks in cost order, preserving
     Dijkstra.java:205-208 bound-break semantics). The tree extends only
-    as far as the deepest query needs — never past what the uncached
-    search would have explored for the same queries."""
+    as far as the deepest query needs — never past what ``route_ssmt``
+    would have explored for the same queries."""
 
     __slots__ = ("idx", "cost_vec", "bound_vec", "entries", "heap",
                  "pops", "ctr")
@@ -248,33 +246,30 @@ def prepare_targets(idx: RoadIndex, targets):
 
 
 def route_ssmt_cached(idx: RoadIndex, src, targets, cost_vec, bound_vec,
-                      bound_max, cache: dict, prepared=None,
-                      cache_max: int = _TREE_CACHE_MAX):
-    """route_ssmt with a shared per-source-edge tree cache (SURVEY §7's
-    route-cache plan). Exact same results as route_ssmt — the replay
-    walks the recorded pop sequence in cost order, synthesizing reach
-    marks from expanded predecessors exactly where the uncached search
-    would push them, and applies the same bound-break rule (ties between
-    equal-cost reach and edge marks resolve reach-first, matching the
-    push-order ctr for the tf==1 case).
+                      bound_max, cache: dict, prepared=None):
+    """The engine's one route search: ``route_ssmt`` over a per-source-
+    edge tree cache (SURVEY §7's route-cache plan). The replay walks the
+    recorded pop sequence in cost order, synthesizing reach marks from
+    expanded predecessors exactly where the plain search would push
+    them, with the same bound-break rule (ties between equal-cost reach
+    and edge marks resolve reach-first, matching the push-order ctr for
+    the tf==1 case). A source edge's pop sequence is deterministic, so
+    no path depends on what shared ``cache``; it holds at most
+    ``_TREE_CACHE_MAX`` trees and is cleared when full.
 
-    Accepted nondeterminism (documented, not a defect): the cached form
-    accumulates RELATIVE costs shifted by K1/K2 while route_ssmt
-    accumulates absolute costs, and computes reach costs as
-    ``base_c + c(te)*tf`` vs ``(base_c + c(te)) - c(te)*(1-tf)``.
-    Whenever all inputs are exactly representable (integer costs, dyadic
-    fractions) both orders are IEEE-exact and the results are
-    bit-identical even on dense cost ties and marks exactly at bound_max
-    (proven by test_route_cache_exact_ties_and_bound). For inexact
-    inputs the two orders can differ by ulps, so an exact-float tie or a
-    bound sitting within one ulp of a mark may resolve differently —
-    the same class of tie nondeterminism the reference exhibits through
-    JVM HashSet iteration order (Dijkstra.java target-set ordering)."""
+    Its arithmetic is not ``route_ssmt``'s: costs accumulate relative to
+    the source edge, shifted by K1/K2, and reach costs are
+    ``base_c + c(te)*tf``, not ``(base_c + c(te)) - c(te)*(1-tf)``. With
+    exact inputs (integer costs, dyadic fractions) both are IEEE-exact
+    and agree even on dense ties and marks exactly at bound_max
+    (test_route_cache_exact_ties_and_bound); otherwise they can differ
+    by ulps and resolve a near-tie differently, which is why every
+    matcher, offline and online, runs this form only."""
     se, sf = src
     se = int(se)
     tree = cache.get(se)
     if tree is None:
-        if len(cache) >= cache_max:
+        if len(cache) >= _TREE_CACHE_MAX:
             cache.clear()
         tree = cache[se] = _EdgeTree(idx, se, cost_vec, bound_vec)
     K1 = cost_vec[se] * (1.0 - sf)
@@ -621,6 +616,9 @@ def forward_steps(idx: RoadIndex, params: MatcherParams, steps,
     arrays from ``_candidates_for_trace``. Returns one new candidate
     vector (possibly empty) per trace.
 
+    Routing runs ``route_ssmt_cached`` over ``route_cache``, shareable
+    across calls on one map and params (``None``: a fresh dict).
+
     Candidates, predecessors and (predecessor, candidate) pairs of the
     whole batch live in flat arrays with per-trace offsets, so each numpy
     call serves every trace; only routing, the per-pair path walk and
@@ -686,6 +684,8 @@ def forward_steps(idx: RoadIndex, params: MatcherParams, steps,
     # IEEE arithmetic either way
     tp_list = idx.cost_list("timeprio")
     bound_list = idx.cost_list("distance")
+    cost_rt_list = idx.cost_list(params.routing_cost)
+    route_cache = {} if route_cache is None else route_cache
     eb_list = idx.base_list()
     el_list = idx.len_list()
     shorten = params.shorten_turns
@@ -706,20 +706,11 @@ def forward_steps(idx: RoadIndex, params: MatcherParams, steps,
         beta = max(1.0, float(dt_ms)) / 1000.0 if params.lam == 0 else 1.0 / params.lam
         n_before = len(pend)
         targets = list(zip(ei_l[c0:c1], fr_l[c0:c1]))
-        if route_cache is not None:
-            cost_rt_list = idx.cost_list(params.routing_cost)
-            prepared = prepare_targets(idx, targets)
-        else:
-            cost_vec = idx.cost_vector(params.routing_cost)
+        prepared = prepare_targets(idx, targets)
         for pi, p in enumerate(prev):
-            if route_cache is not None:
-                paths = route_ssmt_cached(idx, (p.eidx, p.frac), targets,
-                                          cost_rt_list, bound_list, bound,
-                                          route_cache, prepared=prepared,
-                                          cache_max=params.route_cache_max_edges)
-            else:
-                paths = route_ssmt(idx, (p.eidx, p.frac), targets, cost_vec,
-                                   idx.cost_dist, bound)
+            paths = route_ssmt_cached(idx, (p.eidx, p.frac), targets,
+                                      cost_rt_list, bound_list, bound,
+                                      route_cache, prepared=prepared)
             pfrac = p.frac
             for ci in range(c1 - c0):
                 path = paths[ci]
@@ -787,19 +778,21 @@ def forward_steps(idx: RoadIndex, params: MatcherParams, steps,
 
 
 def forward_step(idx: RoadIndex, params: MatcherParams, prev_vector,
-                 prev_time, t_ms: int, lat: float, lon: float, azi: float):
+                 prev_time, t_ms: int, lat: float, lon: float, azi: float,
+                 route_cache: dict | None = None):
     """One trace's HMM filter step: the sample's candidate search
     (radius + Minset + emission distance), then ``forward_steps`` with a
-    batch of one. The online (streaming) matcher calls it per sample;
-    the offline kernel runs the same ``forward_steps`` over many traces
-    — their equality is the reference's strongest cross-check
+    batch of one, routing over ``route_cache``. The online (streaming)
+    matcher calls it per sample with its lifetime cache; the offline
+    kernel runs the same ``forward_steps`` and route search over many
+    traces — their equality is the reference's strongest cross-check
     (tracker/TrackerServerTest.java:156-166).
 
     Returns the new candidate vector (possibly empty)."""
     cands = _candidates_for_trace(idx, np.array([lat]), np.array([lon]),
                                   params)[0]
     return forward_steps(idx, params, [(prev_vector, prev_time, t_ms, lat,
-                                        lon, azi, cands)])[0]
+                                        lon, azi, cands)], route_cache)[0]
 
 
 def estimate(vector):
@@ -808,6 +801,26 @@ def estimate(vector):
     edge then fraction (the reference's HashSet order is JVM-dependent;
     SURVEY.md §2.6)."""
     return max(vector, key=lambda c: (c.filtprob, -c.eidx, -c.frac))
+
+
+def backtrack(sequence) -> list[tuple]:
+    """Viterbi backtrack (KState.sequence, markov/KState.java:285-301)
+    over ``sequence``, a list of (vector, key) pairs: the estimate of the
+    last vector and its predecessor chain, oldest first, each as
+    (candidate, key of its entry). A chain cut short by k/tau pruning
+    covers only the newest entries."""
+    if not sequence:
+        return []
+    chain = []
+    it = estimate(sequence[-1][0])
+    for _ in range(len(sequence)):
+        if it is None:
+            break
+        chain.append(it)
+        it = it.pred
+    offset = len(sequence) - len(chain)
+    return [(c, sequence[offset + j][1])
+            for j, c in enumerate(reversed(chain))]
 
 
 # Traces one ``forward_steps`` call advances together in the partition
@@ -897,22 +910,8 @@ class _TraceRun:
 
     def rows(self, idx: RoadIndex) -> list[tuple]:
         """Estimate + backtrack (KState.java:265-301) as MATCH_SCHEMA rows."""
-        sequence = self.sequence
-        if not sequence:
-            return []
-        chain = []
-        it = estimate(sequence[-1][0])
-        for _ in range(len(sequence)):
-            if it is None:
-                break
-            chain.append(it)
-            it = it.pred
-        chain = chain[::-1]
-
         rows = []
-        offset = len(sequence) - len(chain)
-        for j, c in enumerate(chain):
-            step = sequence[offset + j][1]
+        for c, step in backtrack(self.sequence):
             route_eids = [int(idx.edge_id[e]) for e in c.route] if c.route else []
             rows.append((str(self.trace_id), int(step), str(self.ids[step]),
                          int(self.t[step]), int(idx.edge_id[c.eidx]),
@@ -929,7 +928,9 @@ def _match_lockstep(idx: RoadIndex, params: MatcherParams, traces,
     ``forward_steps`` call moves every active trace by one sample. Up to
     LOCKSTEP_TRACES traces are active; one that ends hands its place to
     the next. ``traces`` yields (trace_id, sample_ids, times_ms, lats,
-    lons, azimuths); rows come back in that order."""
+    lons, azimuths); rows come back in that order. ``route_cache=None``
+    means one fresh route cache for the whole run."""
+    route_cache = {} if route_cache is None else route_cache
     pending = iter(traces)
     out: list[list[tuple]] = []
     active: list[tuple[int, _TraceRun]] = []
@@ -964,9 +965,9 @@ def match_trace(idx: RoadIndex, trace_id, sample_ids, times_ms, lats, lons,
     """Offline match of one trace; returns MATCH_SCHEMA rows. The
     partition kernel's lock-step matcher with a batch of one trace, so
     a trace gets the same rows alone as in any batch.
-    route_cache: shared per-source-edge Dijkstra tree cache (see
-    route_ssmt_cached) — safe to share across traces on the same map
-    with the same cost function."""
+    route_cache: per-source-edge Dijkstra tree cache (see
+    route_ssmt_cached), shareable across traces on one map and params;
+    ``None`` means a fresh one. The rows are the same either way."""
     return _match_lockstep(idx, params, [(trace_id, sample_ids, times_ms,
                                           lats, lons, azimuths)], route_cache)
 
@@ -979,7 +980,7 @@ def _match_partition(idx: RoadIndex, params: MatcherParams,
                g["lat"].to_numpy(np.float64), g["lon"].to_numpy(np.float64),
                g["azimuth"].to_numpy(np.float64))
               for tid, g in pdf.groupby("trace_id", sort=False))
-    return pd.DataFrame(_match_lockstep(idx, params, traces, route_cache={}),
+    return pd.DataFrame(_match_lockstep(idx, params, traces),
                         columns=[f.name for f in MATCH_SCHEMA.fields])
 
 

@@ -7,15 +7,17 @@ tracker/TemporaryMemory.java:36-204, markov/KState.java:177-231):
 - per-object state keyed by trace_id, with TTL expiry;
 - arriving samples gated by out-of-order rejection and min-distance /
   min-interval thinning BEFORE matching;
-- one ``forward_step`` per accepted sample (the same kernel as the
-  offline matcher — TrackerServerTest.java:156-166 proves online ==
-  offline and we keep that property as a pytest);
+- one ``forward_step`` per accepted sample (the same kernel and the
+  same route search, ``route_ssmt_cached``, as the offline matcher —
+  TrackerServerTest.java:156-166 proves online == offline and we keep
+  that property as a pytest). One route cache lives as long as the
+  matcher and serves all of its vehicles; no row depends on it;
 - k/tau-bounded sequence pruning;
 - publish suppression: no update emitted if the estimate moved less
   than `sensitive` meters on the same edge (TrackerServer.java:208-222).
 
-Spark integration: ``process_batch`` is the per-key body for a
-``foreachBatch``/``applyInPandasWithState``-style sink; the state object
+Spark integration: ``process_batch`` is the per-key body of
+``structured.match_stream`` (``applyInPandasWithState``); the state object
 round-trips through a plain dict (KState's JSON persistence precedent,
 markov/KState.java:63-118) so it can live in any state store.
 """
@@ -28,7 +30,9 @@ import numpy as np
 
 from .. import geo
 from ..index import RoadIndex
-from ..operators.match import MatcherParams, _Cand, estimate, forward_step
+from ..operators.match import (
+    MatcherParams, _Cand, backtrack, estimate, forward_step,
+)
 
 
 @dataclass
@@ -75,6 +79,8 @@ class OnlineMatcher:
         self.ttl_ms = ttl_ms
         self.sensitive_m = sensitive_m
         self.states: dict[str, OnlineState] = {}
+        # route_ssmt_cached trees, shared by every vehicle
+        self.route_cache: dict = {}
 
     # ------------------------------------------------------------------
     def update(self, trace_id: str, t_ms: int, lat: float, lon: float,
@@ -100,7 +106,7 @@ class OnlineMatcher:
         prev_est = estimate(prev_vector) if prev_vector else None
 
         vector = forward_step(self.idx, self.params, prev_vector, prev_time,
-                              t_ms, lat, lon, azi)
+                              t_ms, lat, lon, azi, self.route_cache)
         if not vector:
             return "break", False, None
 
@@ -133,23 +139,10 @@ class OnlineMatcher:
         """Viterbi backtrack over the stored bounded sequence
         (KState.sequence, markov/KState.java:285-301)."""
         st = self.states.get(trace_id)
-        if st is None or not st.sequence:
+        if st is None:
             return []
-        it = estimate(st.sequence[-1][0])
-        chain = []
-        for _ in range(len(st.sequence)):
-            if it is None:
-                break
-            chain.append(it)
-            it = it.pred
-        chain = chain[::-1]
-        out = []
-        offset = len(st.sequence) - len(chain)
-        for j, c in enumerate(chain):
-            _, t_ms = st.sequence[offset + j]
-            out.append((trace_id, int(t_ms), int(self.idx.edge_id[c.eidx]),
-                        float(c.frac)))
-        return out
+        return [(trace_id, int(t_ms), int(self.idx.edge_id[c.eidx]),
+                 float(c.frac)) for c, t_ms in backtrack(st.sequence)]
 
     def expire(self, now_ms: int):
         """TTL cleaner (TemporaryMemory.java:49-78): drop dead states,
@@ -213,11 +206,13 @@ def state_from_json(obj: dict) -> OnlineState:
 
 
 def process_batch(matcher: OnlineMatcher, pdf) -> list[tuple]:
-    """foreachBatch body: feed a micro-batch (sorted by time within each
-    trace) through the online matcher; returns published estimate rows."""
+    """Feed a micro-batch through the online matcher, each trace in time
+    order and equal times in arrival order (a stable sort); returns the
+    published estimate rows."""
     out = []
-    for r in pdf.sort_values(["trace_id", "time"]).itertuples(index=False):
-        azi = getattr(r, "azimuth", float("nan"))
+    for r in pdf.sort_values(["trace_id", "time"],
+                             kind="stable").itertuples(index=False):
+        azi = float(getattr(r, "azimuth", float("nan")))
         status, publish, row = matcher.update(str(r.trace_id), int(r.time),
                                               float(r.lat), float(r.lon), azi)
         if status == "ok" and publish:

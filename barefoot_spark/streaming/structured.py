@@ -23,7 +23,9 @@ from pyspark.sql.types import (
 )
 
 from ..operators.match import MatcherParams
-from .online import OnlineMatcher, state_from_json, state_to_json
+from .online import (
+    OnlineMatcher, process_batch, state_from_json, state_to_json,
+)
 
 ESTIMATE_SCHEMA = StructType([
     StructField("trace_id", StringType()),
@@ -44,10 +46,12 @@ def match_stream(samples: DataFrame, idx_bc, params: MatcherParams | None = None
     """samples streaming DF (trace_id, sample_id, time, lat, lon
     [, azimuth]) -> streaming estimates, stateful per trace_id.
 
-    Each group invocation rebuilds a single-trace OnlineMatcher from the
-    serialized state, folds the micro-batch's samples through the same
-    forward_step as the offline kernel, emits published estimates, and
-    stores the bounded state back.
+    Each group invocation rebuilds a single-trace OnlineMatcher (with a
+    fresh route cache) from the serialized state, folds the micro-batch's
+    samples through ``online.process_batch`` (time order, equal times in
+    arrival order; the same forward_step and route search as the offline
+    kernel), emits published estimates, and stores the bounded state
+    back.
 
     use_ttl_timeout enables processing-time state expiry (the tracker's
     TTL reaper). Leave it off for availableNow/batch-drain usage: a
@@ -66,17 +70,9 @@ def match_stream(samples: DataFrame, idx_bc, params: MatcherParams | None = None
             return iter(())
         if state.exists:
             matcher.states[trace_id] = state_from_json(json.loads(state.get[0]))
-        rows = []
-        for pdf in pdf_iter:
-            if "azimuth" not in pdf.columns:
-                pdf = pdf.assign(azimuth=float("nan"))
-            pdf = pdf.sort_values("time")
-            for r in pdf.itertuples(index=False):
-                status, publish, row = matcher.update(
-                    trace_id, int(r.time), float(r.lat), float(r.lon),
-                    float(r.azimuth) if r.azimuth == r.azimuth else float("nan"))
-                if status == "ok" and publish:
-                    rows.append(row)
+        # the group's Arrow chunks in arrival order, sorted as one batch
+        rows = process_batch(matcher, pd.concat(list(pdf_iter),
+                                                ignore_index=True))
         st = matcher.states.get(trace_id)
         if st is not None:
             state.update((json.dumps(state_to_json(st)),))

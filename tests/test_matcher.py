@@ -522,29 +522,49 @@ def test_route_cache_exact_ties_and_bound():
             assert got == want, (se, sf, targets, bound)
 
 
-@pytest.mark.parametrize("cache_cap", [1, 2, 4096])
-def test_match_trace_route_cache_equivalence(cache_cap):
-    """match_trace with a shared route cache emits exactly the rows the
-    uncached path emits (same estimates, same routes, same probs) — at
-    ANY route_cache_max_edges cap, including a pathological cap of 1
-    (every new source edge evicts the whole cache), proving the memory
-    bound cannot change results."""
+def test_match_trace_route_cache_equivalence(monkeypatch):
+    """Every way of running the one route search gives the same rows:
+    match_trace with its own cache per trace, one cache shared by all
+    traces, caches capped at 1 and 2 trees (every new source edge
+    evicts), and the Spark-free partition kernel. The input holds
+    trace-000005, -000024 and -000035, whose rows differed by up to
+    0.0408 against 0.0268 in filtprob when match_trace had a second,
+    uncached route search."""
     from barefoot_spark import roads as R
     from barefoot_spark.index import RoadIndex
     from barefoot_spark.sources import samples as SS
 
     idx = RoadIndex(R.grid_pdf(12, seed=42), res=16)
-    pdf = SS.synth_traces(idx, n_traces=8, samples_per_trace=40, seed=9)
-    cache: dict = {}
-    params = M.MatcherParams(route_cache_max_edges=cache_cap)
-    for tid, g in pdf.groupby("trace_id"):
-        base = (idx, tid, g["sample_id"].to_numpy(),
-                g["time"].to_numpy(np.int64),
-                g["lat"].to_numpy(np.float64), g["lon"].to_numpy(np.float64),
-                g["azimuth"].to_numpy(np.float64))
-        assert M.match_trace(*base, params, route_cache=cache) \
-            == M.match_trace(*base, M.MatcherParams())
-        assert len(cache) <= cache_cap   # cap enforced (reset-on-hit)
+    pdf = SS.synth_traces(idx, n_traces=40, samples_per_trace=60, seed=2)
+    assert {"trace-000005", "trace-000024", "trace-000035"} \
+        <= set(pdf["trace_id"])
+    params = M.MatcherParams()
+    groups = list(pdf.groupby("trace_id", sort=False))
+
+    def run(cache=None):
+        rows = []
+        for tid, g in groups:
+            rows += M.match_trace(
+                idx, tid, g["sample_id"].to_numpy(),
+                g["time"].to_numpy(np.int64), g["lat"].to_numpy(np.float64),
+                g["lon"].to_numpy(np.float64),
+                g["azimuth"].to_numpy(np.float64), params,
+                route_cache=cache)
+        return rows
+
+    want = run()
+    assert len(want) == 2400
+    shared: dict = {}
+    assert run(shared) == want
+    assert len(shared) > 2
+    for cap in (1, 2):
+        monkeypatch.setattr(M, "_TREE_CACHE_MAX", cap)
+        capped: dict = {}
+        assert run(capped) == want, cap
+        assert len(capped) <= cap
+    monkeypatch.undo()
+    kernel = M._match_partition(idx, params, pdf)
+    assert list(kernel.itertuples(index=False, name=None)) == want
 
 
 def test_duplicate_timestamp_gate():

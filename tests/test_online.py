@@ -56,6 +56,32 @@ def test_online_equals_offline_synthetic(grid_idx):
         check_equality(grid_idx, samples)
 
 
+@pytest.mark.parametrize("cap", [None, 1])
+def test_shared_route_cache_interleaved_vehicles(monkeypatch, cap):
+    """One matcher serving interleaved vehicles shares one route cache
+    among them; its per-sample estimates and sequences equal those of a
+    fresh matcher per vehicle, also when the cache holds one tree."""
+    if cap is not None:
+        monkeypatch.setattr(M, "_TREE_CACHE_MAX", cap)
+    idx = RoadIndex(roads.grid_pdf(10, seed=3), res=16)
+    pdf = SS.synth_traces(idx, n_traces=6, samples_per_trace=30, seed=4)
+    arrivals = pdf.sort_values(["time", "trace_id"], kind="stable")
+
+    def feed(om, frame):
+        return [om.update(r.trace_id, int(r.time), r.lat, r.lon, r.azimuth)
+                for r in frame.itertuples(index=False)]
+
+    shared = OnlineMatcher(idx)
+    updates = feed(shared, arrivals)
+    assert len(shared.route_cache) > 1 or cap == 1
+    for tid, g in pdf.groupby("trace_id"):
+        alone = OnlineMatcher(idx)
+        mine = arrivals["trace_id"].to_numpy() == tid
+        assert feed(alone, g) == [u for u, m in zip(updates, mine) if m]
+        assert shared.sequence(tid) == alone.sequence(tid)
+        assert len(alone.sequence(tid)) > 20
+
+
 def test_out_of_order_rejected(idx):
     om = OnlineMatcher(idx)
     om.update("t", 60000, 48.001, 11.001)

@@ -63,6 +63,45 @@ def test_stream_matches_online(spark, idx, tmp_path):
     assert got["edge_id"].tolist() == exp["edge_id"].tolist()
     np.testing.assert_allclose(got["fraction"], exp["fraction"], atol=1e-12)
 
+def test_stream_equal_times_in_arrival_order(spark, tmp_path):
+    """Samples of one trace sharing a time are matched in arrival order:
+    a 60-sample trace with times floored to 3 s arrives shuffled in one
+    micro-batch, and the streamed estimates equal the online matcher fed
+    the same frame through a stable sort by time. An unstable sort
+    (numpy's introsort reorders the ties of a 60-row column) feeds the
+    equal-time samples in another order and publishes other rows."""
+    idx = RoadIndex(roads.grid_pdf(8, seed=5), res=16)
+    idx_bc = spark.sparkContext.broadcast(idx)
+    pdf = SS.synth_traces(idx, n_traces=1, samples_per_trace=60, seed=11)
+    pdf["time"] = pdf["time"] // 3000 * 3000
+    arrived = pdf.sample(frac=1.0, random_state=3).reset_index(drop=True)
+
+    in_dir = str(tmp_path / "in")
+    os.makedirs(in_dir)
+    spark.createDataFrame(arrived).coalesce(1).write.mode("append") \
+        .parquet(in_dir)
+    schema = ("trace_id string, sample_id string, time long, "
+              "lat double, lon double, azimuth double")
+    stream = spark.readStream.schema(schema).parquet(in_dir)
+    q = (ST.match_stream(stream, idx_bc).writeStream.format("memory")
+         .queryName("est_ties")
+         .option("checkpointLocation", str(tmp_path / "ckpt"))
+         .outputMode("append").start())
+    q.processAllAvailable()
+    got = spark.sql("select * from est_ties").toPandas()
+    q.stop()
+
+    om = OnlineMatcher(idx)
+    expect = []
+    for r in arrived.sort_values("time", kind="stable").itertuples(index=False):
+        status, publish, row = om.update(r.trace_id, int(r.time), r.lat,
+                                         r.lon, r.azimuth)
+        if status == "ok" and publish:
+            expect.append(row)
+    assert len(expect) == 60
+    assert list(got.itertuples(index=False, name=None)) == expect
+
+
 def test_stream_restart_from_checkpoint(spark, idx, tmp_path):
     """The Structured Streaming recovery contract: STOP the query after
     the first micro-batch, start a NEW query from the same
