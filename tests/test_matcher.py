@@ -522,14 +522,12 @@ def test_route_cache_exact_ties_and_bound():
             assert got == want, (se, sf, targets, bound)
 
 
-def test_match_trace_route_cache_equivalence(monkeypatch):
-    """Every way of running the one route search gives the same rows:
-    match_trace with its own cache per trace, one cache shared by all
-    traces, caches capped at 1 and 2 trees (every new source edge
-    evicts), and the Spark-free partition kernel. The input holds
-    trace-000005, -000024 and -000035, whose rows differed by up to
-    0.0408 against 0.0268 in filtprob when match_trace had a second,
-    uncached route search."""
+@pytest.fixture(scope="module")
+def cache_case():
+    """40 x 60 samples on grid_pdf(12) and the rows match_trace gives with
+    its own cache per trace. The input holds trace-000005, -000024 and
+    -000035, whose rows differed by up to 0.0408 against 0.0268 in
+    filtprob when match_trace had a second, uncached route search."""
     from barefoot_spark import roads as R
     from barefoot_spark.index import RoadIndex
     from barefoot_spark.sources import samples as SS
@@ -554,15 +552,29 @@ def test_match_trace_route_cache_equivalence(monkeypatch):
 
     want = run()
     assert len(want) == 2400
+    return idx, params, pdf, run, want
+
+
+@pytest.mark.parametrize("cache_cap", [1, 2, 4096])
+def test_match_trace_route_cache_equivalence(cache_case, cache_cap,
+                                             monkeypatch):
+    """One route cache shared by all traces gives exactly the rows of a
+    cache per trace at any tree cap, including caps of 1 and 2 (every new
+    source edge evicts) and the default 4096: the memory bound cannot
+    change results."""
+    _, _, _, run, want = cache_case
+    monkeypatch.setattr(M, "_TREE_CACHE_MAX", cache_cap)
     shared: dict = {}
     assert run(shared) == want
-    assert len(shared) > 2
-    for cap in (1, 2):
-        monkeypatch.setattr(M, "_TREE_CACHE_MAX", cap)
-        capped: dict = {}
-        assert run(capped) == want, cap
-        assert len(capped) <= cap
-    monkeypatch.undo()
+    assert len(shared) <= cache_cap
+    if cache_cap > 2:
+        assert len(shared) > 2
+
+
+def test_match_partition_route_cache_equivalence(cache_case):
+    """The Spark-free partition kernel runs the same route search as
+    match_trace and emits the same rows."""
+    idx, params, pdf, _, want = cache_case
     kernel = M._match_partition(idx, params, pdf)
     assert list(kernel.itertuples(index=False, name=None)) == want
 
