@@ -2880,7 +2880,7 @@ def q_doc_fingerprint(spark, sf_dir):
 
 def oracle_doc_fingerprint(sf_dir):
     """Kernel-exact twin including the short-doc branches of
-    _shingle_hashes/doc_fingerprint: NULL -> "", texts shorter than k
+    doc_fingerprint: NULL -> "", texts shorter than k
     are space-padded to k (one hash), and docs with fewer than `w`
     hashes emit min-over-all instead of sliding-window minima.
     Documented limitation: byte values come from ascii() code points,

@@ -51,8 +51,6 @@ class RoadIndex:
                        else np.zeros((0, 2), dtype=np.float64))
         # geodesic length recomputed from geometry (PostGISReader.java:162)
         self.length = geo.polyline_length(self.coords, self.offsets)
-        # per-segment cumulative data for fast interpolation
-        self.seg_poly, self.seg_len = geo.polyline_seg_lengths(self.coords, self.offsets)
 
         # cell -> base-segment CSR (QuadTreeIndex.add analog)
         row_idx, cell = cells.cover_polyline(self.coords, self.offsets, self.res)

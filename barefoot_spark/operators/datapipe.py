@@ -56,17 +56,6 @@ def _spread_small(df: DataFrame) -> DataFrame:
     return df
 
 
-def _shingle_hashes(text: str, k: int = 5) -> np.ndarray:
-    """Rolling char k-gram hashes (uint64)."""
-    b = np.frombuffer(text.encode("utf-8", "ignore"), dtype=np.uint8)
-    if len(b) < k:
-        b = np.pad(b, (0, k - len(b)), constant_values=32)
-    # polynomial rolling hash over a stride-tricks window
-    win = np.lib.stride_tricks.sliding_window_view(b, min(k, len(b)))
-    mult = np.power(np.uint64(1000003), np.arange(win.shape[1], dtype=np.uint64))
-    return (win.astype(np.uint64) * mult).sum(axis=1, dtype=np.uint64)
-
-
 def _minhash_params(num_perm: int, seed: int = 42):
     rng = np.random.default_rng(seed)
     a = rng.integers(1, _MERSENNE, size=num_perm, dtype=np.uint64)
@@ -74,24 +63,13 @@ def _minhash_params(num_perm: int, seed: int = 42):
     return a, b
 
 
-def minhash_signature_one(text: str, num_perm: int = 64, shingle_k: int = 5,
-                          seed: int = 42) -> np.ndarray:
-    """Single-doc reference path (kept for tests): (a*x+b) mod p, min
-    per permutation. min over duplicate shingles == min over unique, so
-    no dedup is needed."""
-    a, b = _minhash_params(num_perm, seed)
-    sh = _shingle_hashes(text or "", shingle_k)
-    vals = (a[:, None] * sh[None, :] + b[:, None]) % np.uint64(_MERSENNE)
-    return vals.min(axis=1).astype(np.int64)
-
-
 def minhash_signature_udf(num_perm: int = 64, shingle_k: int = 5, seed: int = 42):
     """Batch-vectorized MinHash signatures: ONE sliding-window hash pass
     over the batch's concatenated bytes (windows crossing doc boundaries
     masked out), then per-permutation (a*x+b) mod p folded per doc with
     np.minimum.reduceat — no per-doc Python loop in the hash/min path.
-    Bit-identical to minhash_signature_one (uint64 wrap + mod p in the
-    same order)."""
+    Bit-identical to the per-doc reference in tests/test_datapipe.py
+    (uint64 wrap + mod p in the same order)."""
     a, b = _minhash_params(num_perm, seed)
     M = np.uint64(_MERSENNE)
     mult = np.power(np.uint64(1000003),
@@ -150,6 +128,69 @@ def poly_band_expr(band: int, rows_per_band: int, sig_col: str = "sig") -> str:
             f"AS DECIMAL(38,0)))")
 
 
+def _signed_docs(docs: DataFrame, id_col: str, text_col: str, id_alias: str,
+                 udf) -> tuple[DataFrame, DataFrame]:
+    """A corpus as (id_alias, _text) and as (id_alias, sig) MinHash
+    signatures. The text is spread over the default parallelism BEFORE
+    the UDF is attached: above the UDF, the exchange would spread
+    already-computed signatures and leave the hash pass single-task."""
+    d = _spread_small(docs.select(F.col(id_col).alias(id_alias),
+                                  F.col(text_col).alias("_text")))
+    return d, d.select(id_alias, udf(F.col("_text")).alias("sig"))
+
+
+def _band_table(sig: DataFrame, id_alias: str, num_perm: int, bands: int,
+                band_key: str) -> DataFrame:
+    """The LSH band table (id_alias, band, bucket): one row per
+    document and band, the bucket keying that band's signature slice.
+    band_key "poly" is the decimal Horner key (poly_band_expr), any
+    other value the Murmur3 F.hash of the slice."""
+    rows_per_band = num_perm // bands
+    if band_key == "poly":
+        def _bucket(i):
+            return F.expr(poly_band_expr(i, rows_per_band)).alias("bucket")
+    else:
+        def _bucket(i):
+            return F.hash(F.slice("sig", i * rows_per_band + 1,
+                                  rows_per_band)).alias("bucket")
+    return sig.select(
+        id_alias,
+        F.explode(F.array(*[
+            F.struct(F.lit(i).alias("band"), _bucket(i))
+            for i in range(bands)])).alias("bb")) \
+        .select(id_alias, "bb.band", "bb.bucket")
+
+
+def _jaccard_verified(joined: DataFrame, ids: list, lsig: str, rsig: str,
+                      num_perm: int, jaccard_threshold: float) -> DataFrame:
+    """Verify stage: the signature-Jaccard estimate (share of equal
+    signature positions) of each candidate pair, kept at or above the
+    threshold, as (*ids, est_jaccard)."""
+    est = F.aggregate(
+        F.zip_with(lsig, rsig, lambda x, y: (x == y).cast("int")),
+        F.lit(0), lambda acc, v: acc + v) / F.lit(float(num_perm))
+    return (joined.withColumn("est_jaccard", est)
+            .filter(F.col("est_jaccard") >= jaccard_threshold)
+            .select(*ids, "est_jaccard"))
+
+
+def _cross_pairs(nbands: DataFrame, xbands: DataFrame) -> DataFrame:
+    """Distinct (new_id, index_id) candidates: the band equi-join ACROSS
+    a batch's and an index's band tables."""
+    return (nbands.join(xbands, ["band", "bucket"])
+            .select("new_id", "index_id")
+            .dropDuplicates(["new_id", "index_id"]))
+
+
+def _cross_verified(pairs: DataFrame, nsig: DataFrame, xsig: DataFrame,
+                    num_perm: int, jaccard_threshold: float) -> DataFrame:
+    """Verify the cross-relation candidates against (new_id, nsig) and
+    (index_id, xsig) signatures: (new_id, index_id, est_jaccard)."""
+    joined = pairs.join(nsig, "new_id").join(xsig, "index_id")
+    return _jaccard_verified(joined, ["new_id", "index_id"], "nsig", "xsig",
+                             num_perm, jaccard_threshold)
+
+
 def minhash_dedup(documents: DataFrame, text_col="text", id_col="doc_id",
                   num_perm: int = 64, bands: int = 16,
                   jaccard_threshold: float = 0.6, shingle_k: int = 5,
@@ -186,29 +227,14 @@ def minhash_dedup(documents: DataFrame, text_col="text", id_col="doc_id",
         return CK.materialize(df, materialize, ckpt_runner,
                               f"{stage_prefix}{stage}")
 
-    rows_per_band = num_perm // bands
     udf = minhash_signature_udf(num_perm, shingle_k)
-    docs_p = _spread_small(documents.select(F.col(id_col).alias("_id"),
-                                            F.col(text_col).alias("_text")))
-    sig = docs_p.select("_id", udf(F.col("_text")).alias("sig"))
+    docs_p, sig = _signed_docs(documents, id_col, text_col, "_id", udf)
     # candidate generation carries only (id, band, bucket): persist the
     # SCALAR band table (Spark's columnar cache is pathologically slow
     # on array columns — ~10x the UDF cost), and let the two sparse
     # verify lookups recompute the now-cheap batch-vectorized UDF
     # instead of caching the signature arrays
-    if band_key == "poly":
-        def _bucket(i):
-            return F.expr(poly_band_expr(i, rows_per_band)).alias("bucket")
-    else:
-        def _bucket(i):
-            return F.hash(F.slice("sig", i * rows_per_band + 1,
-                                  rows_per_band)).alias("bucket")
-    bands_df = sig.select(
-        "_id",
-        F.explode(F.array(*[
-            F.struct(F.lit(i).alias("band"), _bucket(i))
-            for i in range(bands)])).alias("bb")) \
-        .select("_id", "bb.band", "bb.bucket")
+    bands_df = _band_table(sig, "_id", num_perm, bands, band_key)
     bands_df = _mat(bands_df, "minhash_bands")  # materialized once
     left = bands_df.alias("l")
     right = bands_df.alias("r")
@@ -240,12 +266,8 @@ def minhash_dedup(documents: DataFrame, text_col="text", id_col="doc_id",
                                F.col("sig").alias("lsig")), "left_id")
              .join(msig.select(F.col("_id").alias("right_id"),
                                F.col("sig").alias("rsig")), "right_id"))
-    est = F.aggregate(
-        F.zip_with("lsig", "rsig", lambda x, y: (x == y).cast("int")),
-        F.lit(0), lambda acc, v: acc + v) / F.lit(float(num_perm))
-    return (pairs.withColumn("est_jaccard", est)
-            .filter(F.col("est_jaccard") >= jaccard_threshold)
-            .select("left_id", "right_id", "est_jaccard"))
+    return _jaccard_verified(pairs, ["left_id", "right_id"], "lsig", "rsig",
+                             num_perm, jaccard_threshold)
 
 
 def minhash_join(new_docs: DataFrame, index_docs: DataFrame,
@@ -273,49 +295,23 @@ def minhash_join(new_docs: DataFrame, index_docs: DataFrame,
         return CK.materialize(df, materialize, ckpt_runner,
                               f"{stage_prefix}{stage}")
 
-    rows_per_band = num_perm // bands
     udf = minhash_signature_udf(num_perm, shingle_k)
-    if band_key == "poly":
-        def _bucket(i):
-            return F.expr(poly_band_expr(i, rows_per_band)).alias("bucket")
-    else:
-        def _bucket(i):
-            return F.hash(F.slice("sig", i * rows_per_band + 1,
-                                  rows_per_band)).alias("bucket")
-
-    def _bands(docs, id_alias):
-        d = _spread_small(docs.select(F.col(id_col).alias(id_alias),
-                                      F.col(text_col).alias("_text")))
-        sig = d.select(id_alias, udf(F.col("_text")).alias("sig"))
-        return d, sig.select(
-            id_alias,
-            F.explode(F.array(*[
-                F.struct(F.lit(i).alias("band"), _bucket(i))
-                for i in range(bands)])).alias("bb")) \
-            .select(id_alias, "bb.band", "bb.bucket")
-
-    nd, nbands = _bands(new_docs, "new_id")
-    xd, xbands = _bands(index_docs, "index_id")
-    nbands = _mat(nbands, "mhj_new_bands")
-    xbands = _mat(xbands, "mhj_index_bands")
-    pairs = (nbands.join(xbands, ["band", "bucket"])
-             .select("new_id", "index_id")
-             .dropDuplicates(["new_id", "index_id"]))
-    pairs = _mat(pairs, "mhj_pairs")
+    nd, nall = _signed_docs(new_docs, id_col, text_col, "new_id", udf)
+    xd, xall = _signed_docs(index_docs, id_col, text_col, "index_id", udf)
+    nbands = _mat(_band_table(nall, "new_id", num_perm, bands, band_key),
+                  "mhj_new_bands")
+    xbands = _mat(_band_table(xall, "index_id", num_perm, bands, band_key),
+                  "mhj_index_bands")
+    pairs = _mat(_cross_pairs(nbands, xbands), "mhj_pairs")
     nsig = (nd.join(pairs.select("new_id").distinct(), "new_id",
                     "left_semi")
             .select("new_id", udf(F.col("_text")).alias("nsig")))
     xsig = (xd.join(pairs.select("index_id").distinct(),
                     "index_id", "left_semi")
             .select("index_id", udf(F.col("_text")).alias("xsig")))
-    joined = (pairs.join(_mat(nsig, "mhj_nsig"), "new_id")
-              .join(_mat(xsig, "mhj_xsig"), "index_id"))
-    est = F.aggregate(
-        F.zip_with("nsig", "xsig", lambda x, y: (x == y).cast("int")),
-        F.lit(0), lambda acc, v: acc + v) / F.lit(float(num_perm))
-    return (joined.withColumn("est_jaccard", est)
-            .filter(F.col("est_jaccard") >= jaccard_threshold)
-            .select("new_id", "index_id", "est_jaccard"))
+    return _cross_verified(pairs, _mat(nsig, "mhj_nsig"),
+                           _mat(xsig, "mhj_xsig"), num_perm,
+                           jaccard_threshold)
 
 
 def minhash_write_index(documents: DataFrame, path: str,
@@ -336,25 +332,10 @@ def minhash_write_index(documents: DataFrame, path: str,
     validated by minhash_probe_index: a probe with a different
     num_perm/bands/shingle_k/band_key would silently produce empty or
     wrong candidate sets — a false-negative dedup pass."""
-    rows_per_band = num_perm // bands
     udf = minhash_signature_udf(num_perm, shingle_k)
-    if band_key == "poly":
-        def _bucket(i):
-            return F.expr(poly_band_expr(i, rows_per_band)).alias("bucket")
-    else:
-        def _bucket(i):
-            return F.hash(F.slice("sig", i * rows_per_band + 1,
-                                  rows_per_band)).alias("bucket")
-    docs_p = _spread_small(documents.select(F.col(id_col).alias("index_id"),
-                                            F.col(text_col).alias("_text")))
-    sig = docs_p.select("index_id", udf(F.col("_text")).alias("sig"))
+    _, sig = _signed_docs(documents, id_col, text_col, "index_id", udf)
     sig = sig.localCheckpoint(eager=True)   # one UDF pass feeds both writes
-    (sig.select(
-        "index_id",
-        F.explode(F.array(*[
-            F.struct(F.lit(i).alias("band"), _bucket(i))
-            for i in range(bands)])).alias("bb"))
-     .select("index_id", "bb.band", "bb.bucket")
+    (_band_table(sig, "index_id", num_perm, bands, band_key)
      .write.mode("overwrite").partitionBy("band").parquet(f"{path}/bands"))
     sig.write.mode("overwrite").parquet(f"{path}/sigs")
     spark = documents.sparkSession
@@ -403,42 +384,17 @@ def minhash_probe_index(spark, path: str, new_docs: DataFrame,
                 f"{want}; mismatched parameters make band buckets / "
                 f"signature comparisons silently wrong — rebuild the "
                 f"index or probe with the stored parameters")
-    rows_per_band = num_perm // bands
     udf = minhash_signature_udf(num_perm, shingle_k)
-    if band_key == "poly":
-        def _bucket(i):
-            return F.expr(poly_band_expr(i, rows_per_band)).alias("bucket")
-    else:
-        def _bucket(i):
-            return F.hash(F.slice("sig", i * rows_per_band + 1,
-                                  rows_per_band)).alias("bucket")
-    nd = _spread_small(new_docs.select(F.col(id_col).alias("new_id"),
-                                       F.col(text_col).alias("_text")))
-    nsig = nd.select("new_id", udf(F.col("_text")).alias("sig"))
+    _, nsig = _signed_docs(new_docs, id_col, text_col, "new_id", udf)
     nsig = nsig.localCheckpoint(eager=True)  # feeds bands + verify
-    nbands = (nsig.select(
-        "new_id",
-        F.explode(F.array(*[
-            F.struct(F.lit(i).alias("band"), _bucket(i))
-            for i in range(bands)])).alias("bb"))
-        .select("new_id", "bb.band", "bb.bucket"))
-    xbands = spark.read.parquet(f"{path}/bands")
-    pairs = (nbands.join(xbands, ["band", "bucket"])
-             .select("new_id", "index_id")
-             .dropDuplicates(["new_id", "index_id"]))
+    nbands = _band_table(nsig, "new_id", num_perm, bands, band_key)
+    pairs = _cross_pairs(nbands, spark.read.parquet(f"{path}/bands"))
     xsig = (spark.read.parquet(f"{path}/sigs")
             .join(pairs.select("index_id").distinct(), "index_id",
                   "left_semi")
             .withColumnRenamed("sig", "xsig"))
-    joined = (pairs
-              .join(nsig.withColumnRenamed("sig", "nsig"), "new_id")
-              .join(xsig, "index_id"))
-    est = F.aggregate(
-        F.zip_with("nsig", "xsig", lambda x, y: (x == y).cast("int")),
-        F.lit(0), lambda acc, v: acc + v) / F.lit(float(num_perm))
-    return (joined.withColumn("est_jaccard", est)
-            .filter(F.col("est_jaccard") >= jaccard_threshold)
-            .select("new_id", "index_id", "est_jaccard"))
+    return _cross_verified(pairs, nsig.withColumnRenamed("sig", "nsig"),
+                           xsig, num_perm, jaccard_threshold)
 
 
 def incremental_text_dedup(new_docs: DataFrame, index_docs: DataFrame,
@@ -462,29 +418,13 @@ def incremental_text_dedup(new_docs: DataFrame, index_docs: DataFrame,
     hits = minhash_join(new_docs, index_docs, text_col, id_col, num_perm,
                         bands, jaccard_threshold, shingle_k,
                         band_key=band_key)
-    w = Window.partitionBy("new_id").orderBy(F.desc("est_jaccard"),
-                                             "index_id")
-    best = (hits.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(F.col("new_id").alias(id_col),
-                    F.col("index_id").alias("match_id")))
-    docs = new_docs.select(F.col(id_col), F.col(text_col))
-    mt = dict(best.dtypes)["match_id"]
-    index_dups = (docs.join(best, id_col)
-                  .select(F.col(id_col), F.lit(False).alias("keep"),
-                          F.lit("index_dup").alias("reason"),
-                          F.col("match_id")))
-    surv = docs.join(best.select(id_col), id_col, "left_anti")
-    pairs = minhash_dedup(surv, text_col, id_col, num_perm, bands,
-                          jaccard_threshold, shingle_k, band_key=band_key)
-    kl = dedup_keep_canonical(surv, pairs, id_col=id_col)
-    batch_part = kl.select(
-        F.col(id_col), F.col("keep"),
-        F.when(F.col("keep"), F.lit(None).cast("string"))
-        .otherwise(F.lit("batch_dup")).alias("reason"),
-        F.when(F.col("keep"), F.lit(None).cast(mt))
-        .otherwise(F.col("canonical_id").cast(mt)).alias("match_id"))
-    return index_dups.unionByName(batch_part)
+    return _incremental_keep(
+        new_docs.select(F.col(id_col), F.col(text_col)), id_col,
+        hits, "new_id", [F.desc("est_jaccard"), "index_id"],
+        dict(hits.dtypes)["index_id"],
+        lambda surv: minhash_dedup(surv, text_col, id_col, num_perm, bands,
+                                   jaccard_threshold, shingle_k,
+                                   band_key=band_key))
 
 
 def dedup_keep_canonical(documents: DataFrame, pairs: DataFrame,
@@ -529,6 +469,37 @@ def dedup_keep_canonical(documents: DataFrame, pairs: DataFrame,
                     .cast("long").alias("cluster_size")))
 
 
+def _incremental_keep(rows: DataFrame, id_col: str, hits: DataFrame,
+                      hit_id: str, best_order: list, match_type: str,
+                      batch_pairs) -> DataFrame:
+    """The incremental-dedup composition shared by incremental_dedup
+    and incremental_text_dedup. ``rows`` is the new batch (id_col plus
+    what ``batch_pairs`` reads); ``hits`` its (hit_id, index_id, score)
+    matches against the index. Each row's best hit (first by
+    ``best_order``) makes it an 'index_dup'; the rest are paired by
+    ``batch_pairs(survivors)`` and resolved by dedup_keep_canonical
+    into kept rows and 'batch_dup's. One row per batch row:
+    (id_col, keep, reason, match_id), match_id of ``match_type``."""
+    w = Window.partitionBy(hit_id).orderBy(*best_order)
+    best = (hits.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .select(F.col(hit_id).alias(id_col),
+                    F.col("index_id").alias("match_id")))
+    index_dups = (rows.join(best, id_col)
+                  .select(F.col(id_col), F.lit(False).alias("keep"),
+                          F.lit("index_dup").alias("reason"),
+                          F.col("match_id")))
+    surv = rows.join(best.select(id_col), id_col, "left_anti")
+    kl = dedup_keep_canonical(surv, batch_pairs(surv), id_col=id_col)
+    batch_part = kl.select(
+        F.col(id_col), F.col("keep"),
+        F.when(F.col("keep"), F.lit(None).cast("string"))
+        .otherwise(F.lit("batch_dup")).alias("reason"),
+        F.when(F.col("keep"), F.lit(None).cast(match_type))
+        .otherwise(F.col("canonical_id").cast(match_type)).alias("match_id"))
+    return index_dups.unionByName(batch_part)
+
+
 # ---------------------------------------------------------------------------
 # SimHash near-dup
 # ---------------------------------------------------------------------------
@@ -537,7 +508,8 @@ def fnv1a_batch(tokens: list) -> np.ndarray:
     """Vectorized FNV-1a over a token batch: tokens padded into a
     (T, maxlen) uint8 matrix, then ONE numpy fold per byte COLUMN (the
     per-byte chain is sequential, but across tokens it is data-parallel).
-    Bit-identical to hash_token."""
+    Bit-identical to the per-token FNV-1a reference in
+    tests/test_datapipe.py."""
     enc = [t.encode("utf-8", "ignore") for t in tokens]
     T = len(enc)
     lens = np.fromiter((len(e) for e in enc), dtype=np.int64, count=T)
@@ -556,27 +528,11 @@ def fnv1a_batch(tokens: list) -> np.ndarray:
     return h
 
 
-def simhash_one(text: str) -> int:
-    """Single-doc reference path (kept for tests)."""
-    toks = (text or "").lower().split()
-    if not toks:
-        return 0
-    hs = np.array([hash_token(tok) for tok in toks], dtype=np.uint64)
-    bits = ((hs[:, None] >> np.arange(64, dtype=np.uint64)[None, :])
-            & np.uint64(1)).astype(np.int64)
-    votes = (2 * bits - 1).sum(axis=0)
-    val = np.uint64(0)
-    for bpos in range(64):
-        if votes[bpos] > 0:
-            val |= np.uint64(1) << np.uint64(bpos)
-    return int(val.astype(np.int64))
-
-
 def simhash_udf(seed: int = 42):
     """Batch-vectorized SimHash: one fnv1a_batch over ALL tokens in the
     Arrow batch, bit matrix + per-doc vote fold via np.add.reduceat —
     no per-token or per-doc Python in the hash path. Bit-identical to
-    simhash_one."""
+    the per-doc reference in tests/test_datapipe.py."""
     shifts = np.arange(64, dtype=np.uint64)
 
     @F.pandas_udf(LongType())
@@ -599,13 +555,78 @@ def simhash_udf(seed: int = 42):
     return _udf
 
 
-def hash_token(tok: str) -> int:
-    """Deterministic 64-bit FNV-1a (stable across workers, unlike
-    Python's salted hash())."""
-    h = 0xCBF29CE484222325
-    for ch in tok.encode("utf-8", "ignore"):
-        h = ((h ^ ch) * 0x100000001B3) & 0xFFFFFFFFFFFFFFFF
-    return h
+def _hamming_blocks(df: DataFrame, sig_col: str, id_col: str, id_alias: str,
+                    sig_alias: str, max_hamming: int) -> DataFrame:
+    """The (block, key) table of an int64 signature column: the
+    signature split into max_hamming+1 equal bit blocks (the whole
+    signature at radius 0), one (id_alias, sig_alias, blk, key) row
+    per block."""
+    nblocks = max_hamming + 1
+    width = 64 // nblocks
+
+    def _key(i):
+        if nblocks == 1:      # radius 0: the "block" is the whole sig
+            return F.col(sig_col).alias("key")
+        return (F.shiftright(sig_col, i * width)
+                .bitwiseAND(F.lit((1 << width) - 1)).alias("key"))
+
+    return df.select(
+        F.col(id_col).alias(id_alias), F.col(sig_col).alias(sig_alias),
+        F.explode(F.array(*[
+            F.struct(F.lit(i).alias("blk"), _key(i))
+            for i in range(nblocks)])).alias("b")) \
+        .select(id_alias, sig_alias, "b.blk", "b.key")
+
+
+def _hot_buckets(df: DataFrame, keys: list, bucket_cap: int) -> DataFrame:
+    """Hot-bucket census: (keys..., _bn) of the buckets holding more
+    than ``bucket_cap`` rows, broadcast (only hot buckets survive)."""
+    return F.broadcast(df.groupBy(*keys).agg(F.count("*").alias("_bn"))
+                       .filter(F.col("_bn") > bucket_cap))
+
+
+def _salt_count(bucket_cap: int):
+    """Chunks a census row's bucket is split into: ceil(_bn / cap) for
+    a hot bucket, 1 for a bucket missing from the census."""
+    return F.coalesce(F.ceil(F.col("_bn") / F.lit(bucket_cap)).cast("int"),
+                      F.lit(1))
+
+
+def _salted(df: DataFrame, hot: DataFrame, keys: list, id_alias: str,
+            bucket_cap: int) -> DataFrame:
+    """``df`` with ``_ns``, the chunk count of its row's bucket in the
+    ``hot`` census, and ``_s``, the row's chunk by an id hash."""
+    return (df.join(hot, keys, "left")
+            .withColumn("_ns", _salt_count(bucket_cap))
+            .withColumn("_s", F.pmod(F.xxhash64(id_alias), F.col("_ns"))
+                        .cast("int")).drop("_bn"))
+
+
+def _salted_self_join(df: DataFrame, keys: list,
+                      bucket_cap: int) -> DataFrame:
+    """Skew-guarded self-join of ``df`` (an ``_id`` column plus bucket
+    ``keys``) on equal keys, as the joined ``l``/``r`` aliases. Buckets
+    above ``bucket_cap`` rows are salt-split into s = ceil(cnt/cap)
+    chunks by an id hash, and the pair space is tiled over the
+    triangular chunk pairs with BOTH sides exploded — the left row of
+    chunk a carries target keys (a, t) for t in a..s-1, the right row
+    of chunk b carries probe keys (q, b) for q in 0..b — so every
+    shuffle key is one ordered chunk pair (a, b) holding ~cap x ~cap
+    rows: per-task work is bounded by ~cap^2 comparisons (a one-sided
+    explode would put ALL cnt left rows under the (bucket, s-1) key —
+    cnt*cap work in one task). Each unordered pair of rows appears
+    exactly once: across chunks in one orientation (canonicalize with
+    least/greatest id), within a chunk by the id-order predicate."""
+    b = _salted(df, _hot_buckets(df, keys, bucket_cap), keys, "_id",
+                bucket_cap)
+    l = b.withColumn(
+        "_t", F.explode(F.sequence(F.col("_s"), F.col("_ns") - 1))).alias("l")
+    r = b.withColumn(
+        "_q", F.explode(F.sequence(F.lit(0), F.col("_s")))).alias("r")
+    return l.join(r, [F.col(f"l.{k}") == F.col(f"r.{k}") for k in keys] + [
+        F.col("l._t") == F.col("r._s"),
+        F.col("l._s") == F.col("r._q"),
+        (F.col("l._s") != F.col("r._s")) | (F.col("l._id") < F.col("r._id"))])
 
 
 def hamming_band_pairs(sigs: DataFrame, sig_col: str, id_col: str,
@@ -624,49 +645,14 @@ def hamming_band_pairs(sigs: DataFrame, sig_col: str, id_col: str,
     carries): a degenerate corpus — billions of copies of one image is
     the canonical 100-TB case — puts n rows under ONE (block, key),
     making the self-join a single O(n^2) task. Buckets above
-    ``bucket_cap`` rows are salt-split into s = ceil(cnt/cap) chunks
-    and the pair space is tiled over the triangular chunk pairs with
-    BOTH sides exploded (left row of chunk a targets (a, t) for
-    t in a..s-1; right row of chunk b probes (q, b) for q in 0..b), so
-    every shuffle key is one ordered chunk pair holding ~cap x ~cap
-    rows. The pair SET is exactly unchanged: cross-chunk pairs appear
-    once (least/greatest canonicalization), within-chunk pairs are
-    kept once by the id-order predicate (pytest-pinned equality vs an
+    ``bucket_cap`` rows are salt-split and the pair space tiled over
+    the triangular chunk pairs (_salted_self_join). The pair SET is
+    exactly unchanged (pytest-pinned equality vs an
     effectively-unguarded cap on the planted corpus, plus an
     adversarial all-identical-sig corpus)."""
-    nblocks = max_hamming + 1
-    width = 64 // nblocks
-
-    def _key(i):
-        if nblocks == 1:      # radius 0: the "block" is the whole sig
-            return F.col(sig_col).alias("key")
-        return (F.shiftright(sig_col, i * width)
-                .bitwiseAND(F.lit((1 << width) - 1)).alias("key"))
-
-    blocks = sigs.select(
-        F.col(id_col).alias("_id"), F.col(sig_col).alias("_sig"),
-        F.explode(F.array(*[
-            F.struct(F.lit(i).alias("blk"), _key(i))
-            for i in range(nblocks)])).alias("b")) \
-        .select("_id", "_sig", "b.blk", "b.key")
-    hot = (blocks.groupBy("blk", "key").agg(F.count("*").alias("_bn"))
-           .filter(F.col("_bn") > bucket_cap))
-    b = blocks.join(F.broadcast(hot), ["blk", "key"], "left")
-    nsalt = F.coalesce(F.ceil(F.col("_bn") / F.lit(bucket_cap)).cast("int"),
-                       F.lit(1))
-    b = (b.withColumn("_ns", nsalt)
-         .withColumn("_s", F.pmod(F.xxhash64("_id"), F.col("_ns"))
-                     .cast("int")).drop("_bn"))
-    l = b.withColumn(
-        "_t", F.explode(F.sequence(F.col("_s"), F.col("_ns") - 1))).alias("l")
-    r = b.withColumn(
-        "_q", F.explode(F.sequence(F.lit(0), F.col("_s")))).alias("r")
-    pairs = (l.join(r, [F.col("l.blk") == F.col("r.blk"),
-                        F.col("l.key") == F.col("r.key"),
-                        F.col("l._t") == F.col("r._s"),
-                        F.col("l._s") == F.col("r._q"),
-                        (F.col("l._s") != F.col("r._s"))
-                        | (F.col("l._id") < F.col("r._id"))])
+    blocks = _hamming_blocks(sigs, sig_col, id_col, "_id", "_sig",
+                             max_hamming)
+    pairs = (_salted_self_join(blocks, ["blk", "key"], bucket_cap)
              .select(F.least("l._id", "r._id").alias("left_id"),
                      F.greatest("l._id", "r._id").alias("right_id"),
                      F.col("l._sig").alias("lh"), F.col("r._sig").alias("rh"))
@@ -697,33 +683,16 @@ def hamming_join(probe: DataFrame, index: DataFrame,
     ~cap index rows against that key's probe rows; the pair set is
     exactly unchanged (each index row lives in exactly one chunk, each
     probe row visits every chunk once)."""
-    nblocks = max_hamming + 1
-    width = 64 // nblocks
-
-    def _blocks(df, id_alias, sig_alias):
-        def _key(i):
-            if nblocks == 1:
-                return F.col(sig_col).alias("key")
-            return (F.shiftright(sig_col, i * width)
-                    .bitwiseAND(F.lit((1 << width) - 1)).alias("key"))
-        return df.select(
-            F.col(id_col).alias(id_alias), F.col(sig_col).alias(sig_alias),
-            F.explode(F.array(*[
-                F.struct(F.lit(i).alias("blk"), _key(i))
-                for i in range(nblocks)])).alias("b")) \
-            .select(id_alias, sig_alias, "b.blk", "b.key")
-
-    pb = _blocks(probe, "probe_id", "_psig")
-    ib = _blocks(index, "index_id", "_isig")
-    hot = (ib.groupBy("blk", "key").agg(F.count("*").alias("_bn"))
-           .filter(F.col("_bn") > bucket_cap))
-    nsalt = F.coalesce(F.ceil(F.col("_bn") / F.lit(bucket_cap)).cast("int"),
-                       F.lit(1))
-    ib = (ib.join(F.broadcast(hot), ["blk", "key"], "left")
-          .withColumn("_s", F.pmod(F.xxhash64("index_id"), nsalt)
-                      .cast("int")).drop("_bn"))
-    pb = (pb.join(F.broadcast(hot), ["blk", "key"], "left")
-          .withColumn("_q", F.explode(F.sequence(F.lit(0), nsalt - 1)))
+    keys = ["blk", "key"]
+    pb = _hamming_blocks(probe, sig_col, id_col, "probe_id", "_psig",
+                         max_hamming)
+    ib = _hamming_blocks(index, sig_col, id_col, "index_id", "_isig",
+                         max_hamming)
+    hot = _hot_buckets(ib, keys, bucket_cap)
+    ib = _salted(ib, hot, keys, "index_id", bucket_cap)
+    pb = (pb.join(hot, keys, "left")
+          .withColumn("_q", F.explode(F.sequence(
+              F.lit(0), _salt_count(bucket_cap) - 1)))
           .drop("_bn"))
     ham = F.bit_count(F.col("p._psig").bitwiseXOR(F.col("i._isig")))
     # the salt is part of the EQUI-join key — as a post-join filter the
@@ -758,27 +727,11 @@ def incremental_dedup(new_batch: DataFrame, index: DataFrame,
     hits = hamming_join(new_batch.select(F.col(id_col), F.col(sig_col)),
                         index.select(F.col(id_col), F.col(sig_col)),
                         sig_col, id_col, max_hamming)
-    w = Window.partitionBy("probe_id").orderBy("hamming", "index_id")
-    best = (hits.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(F.col("probe_id").alias(id_col),
-                    F.col("index_id").alias("match_id")))
     ids = new_batch.select(F.col(id_col), F.col(sig_col))
-    index_dups = (ids.join(best, id_col)
-                  .select(F.col(id_col), F.lit(False).alias("keep"),
-                          F.lit("index_dup").alias("reason"),
-                          F.col("match_id")))
-    surv = ids.join(best.select(id_col), id_col, "left_anti")
-    pairs = hamming_band_pairs(surv, sig_col, id_col, max_hamming)
-    kl = dedup_keep_canonical(surv, pairs, id_col=id_col)
-    batch_part = kl.select(
-        F.col(id_col), F.col("keep"),
-        F.when(F.col("keep"), F.lit(None).cast("string"))
-        .otherwise(F.lit("batch_dup")).alias("reason"),
-        F.when(F.col("keep"), F.lit(None).cast(
-            dict(kl.dtypes)["canonical_id"]))
-        .otherwise(F.col("canonical_id")).alias("match_id"))
-    return index_dups.unionByName(batch_part)
+    return _incremental_keep(
+        ids, id_col, hits, "probe_id", ["hamming", "index_id"],
+        dict(ids.dtypes)[id_col],
+        lambda surv: hamming_band_pairs(surv, sig_col, id_col, max_hamming))
 
 
 def simhash_dedup(documents: DataFrame, text_col="text", id_col="doc_id",
@@ -1233,6 +1186,25 @@ def _cosine_cols(vec_a, vec_b):
     return dot / (na * nb)
 
 
+def _cosine_scored(df: DataFrame, q_id_col: str, id_col: str, vec_col: str,
+                   q_vec_col: str) -> DataFrame:
+    """(q_id, id, cosine): exact cosine of each row's vector against
+    its query vector, in double precision."""
+    sim = _cosine_cols(F.col(vec_col).cast("array<double>"),
+                       F.col(q_vec_col).cast("array<double>"))
+    return df.select(F.col(q_id_col), F.col(id_col), sim.alias("cosine"))
+
+
+def _top_k(scored: DataFrame, q_id_col: str, id_col: str, score_col: str,
+           k: int) -> DataFrame:
+    """Per-query top-k window: ``rank`` = row_number over score desc,
+    then id, kept while <= k. The only shuffle is the window's
+    partitioning on the query id."""
+    w = Window.partitionBy(q_id_col).orderBy(F.desc(score_col), F.col(id_col))
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k))
+
+
 def brute_force_topk(embeddings: DataFrame, queries: DataFrame, k: int,
                      id_col="vec_id", vec_col="embedding",
                      q_id_col="q_id", q_vec_col="q_vec") -> DataFrame:
@@ -1241,12 +1213,8 @@ def brute_force_topk(embeddings: DataFrame, queries: DataFrame, k: int,
     per-query top-k window. JVM-side higher-order functions — no Python
     in the scoring loop."""
     cross = embeddings.crossJoin(F.broadcast(queries))
-    sim = _cosine_cols(F.col(vec_col).cast("array<double>"),
-                       F.col(q_vec_col).cast("array<double>"))
-    scored = cross.select(F.col(q_id_col), F.col(id_col), sim.alias("cosine"))
-    w = Window.partitionBy(q_id_col).orderBy(F.desc("cosine"), F.col(id_col))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    return _top_k(_cosine_scored(cross, q_id_col, id_col, vec_col, q_vec_col),
+                  q_id_col, id_col, "cosine", k)
 
 
 def hyperplane_bucket_col(planes: np.ndarray, vec_col: str):
@@ -1276,6 +1244,30 @@ def hyperplane_bucket_col(planes: np.ndarray, vec_col: str):
     return out
 
 
+def _with_hyperplane_bucket(df: DataFrame, out_col: str, vec_col: str,
+                            planes: np.ndarray,
+                            bucket_impl: str) -> DataFrame:
+    """Add the hyperplane LSH bucket of ``vec_col`` as ``out_col``.
+    bucket_impl "expr" is hyperplane_bucket_col over the vector cast to
+    array<double> (codegen fold, DuckDB-oracle-exact); any other value
+    is a numpy matmul per Arrow batch."""
+    if bucket_impl == "expr":
+        return (df.withColumn("__vd", F.col(vec_col).cast("array<double>"))
+                .withColumn(out_col, hyperplane_bucket_col(planes, "__vd"))
+                .drop("__vd"))
+
+    @F.pandas_udf(LongType())
+    def bucket_udf(vecs: pd.Series) -> pd.Series:
+        m = np.stack(vecs.to_numpy())
+        bits = (m @ planes.T) > 0
+        out = np.zeros(len(m), dtype=np.int64)
+        for i in range(len(planes)):
+            out |= bits[:, i].astype(np.int64) << i
+        return pd.Series(out)
+
+    return df.withColumn(out_col, bucket_udf(F.col(vec_col)))
+
+
 def lsh_bucket_topk(embeddings: DataFrame, queries: DataFrame, k: int,
                     n_planes: int = 12, seed: int = 42, dim: int = 64,
                     id_col="vec_id", vec_col="embedding",
@@ -1291,28 +1283,10 @@ def lsh_bucket_topk(embeddings: DataFrame, queries: DataFrame, k: int,
     (hyperplane_bucket_col — codegen fold, DuckDB-oracle-exact)."""
     rng = np.random.default_rng(seed)
     planes = rng.normal(size=(n_planes, dim))
-
-    @F.pandas_udf(LongType())
-    def bucket_udf(vecs: pd.Series) -> pd.Series:
-        m = np.stack(vecs.to_numpy())
-        bits = (m @ planes.T) > 0
-        out = np.zeros(len(m), dtype=np.int64)
-        for i in range(n_planes):
-            out |= bits[:, i].astype(np.int64) << i
-        return pd.Series(out)
-
-    if bucket_impl == "expr":
-        emb_b = (embeddings
-                 .withColumn("__vd", F.col(vec_col).cast("array<double>"))
-                 .withColumn("bucket", hyperplane_bucket_col(planes, "__vd"))
-                 .drop("__vd"))
-        q_base = (queries
-                  .withColumn("__vd", F.col(q_vec_col).cast("array<double>"))
-                  .withColumn("qbucket", hyperplane_bucket_col(planes, "__vd"))
-                  .drop("__vd"))
-    else:
-        emb_b = embeddings.withColumn("bucket", bucket_udf(F.col(vec_col)))
-        q_base = queries.withColumn("qbucket", bucket_udf(F.col(q_vec_col)))
+    emb_b = _with_hyperplane_bucket(embeddings, "bucket", vec_col, planes,
+                                    bucket_impl)
+    q_base = _with_hyperplane_bucket(queries, "qbucket", q_vec_col, planes,
+                                     bucket_impl)
     # query-side: expand to all buckets within probe_hamming
     probe_masks = [0]
     if probe_hamming >= 1:
@@ -1324,13 +1298,9 @@ def lsh_bucket_topk(embeddings: DataFrame, queries: DataFrame, k: int,
            .withColumn("mask", F.explode(F.array(*[F.lit(m) for m in probe_masks])))
            .withColumn("bucket", F.col("qbucket").bitwiseXOR(F.col("mask"))))
     joined = emb_b.join(F.broadcast(q_b.select(q_id_col, q_vec_col, "bucket")), "bucket")
-    sim = _cosine_cols(F.col(vec_col).cast("array<double>"),
-                       F.col(q_vec_col).cast("array<double>"))
-    scored = joined.select(F.col(q_id_col), F.col(id_col), sim.alias("cosine")) \
+    scored = _cosine_scored(joined, q_id_col, id_col, vec_col, q_vec_col) \
         .dropDuplicates([q_id_col, id_col])
-    w = Window.partitionBy(q_id_col).orderBy(F.desc("cosine"), F.col(id_col))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    return _top_k(scored, q_id_col, id_col, "cosine", k)
 
 
 def kmeans_centroids(vectors: np.ndarray, k: int, seed: int = 42,
@@ -1387,6 +1357,43 @@ def _ivf_assign_udf(centroids_bc, top: int = 1):
     return _udf
 
 
+def _ivf_lists(df: DataFrame, vec_col: str, centroids: np.ndarray,
+               assign_impl: str = "udf", nprobe: int | None = None,
+               id_col: str | None = None) -> DataFrame:
+    """Inverted-list assignment. With ``nprobe`` None every vector
+    gets its nearest centroid as ``list_id``. Otherwise ``df`` is the
+    query side, keyed by ``id_col``: one row per each of its
+    ``nprobe`` nearest lists, carrying the query vector as
+    array<double> in ``__qd`` (the ADC look-up tables read it).
+
+    assign_impl "expr" scores with ivf_scores_col (codegen fold,
+    DuckDB-oracle-exact; probe lists are the top-``nprobe`` scores,
+    ties to the lower list); any other value is the
+    _ivf_assign_udf matmul per Arrow batch."""
+    if assign_impl == "expr":
+        vd = "__vd" if nprobe is None else "__qd"
+        d = (df.withColumn(vd, F.col(vec_col).cast("array<double>"))
+             .withColumn("__cs", ivf_scores_col(centroids, vd)))
+        if nprobe is None:
+            return d.withColumn(
+                "list_id", (F.array_position(F.col("__cs"),
+                                             F.array_max(F.col("__cs"))) - 1)
+                .cast("long"))
+        qx = d.select(id_col, vec_col, "__qd",
+                      F.posexplode("__cs").alias("list_pos", "__s"))
+        return (_top_k(qx, id_col, "list_pos", "__s", nprobe)
+                .withColumn("list_id", F.col("list_pos").cast("long")))
+    cbc = df.sparkSession.sparkContext.broadcast(
+        np.asarray(centroids, dtype=np.float64))
+    if nprobe is None:
+        return df.withColumn(
+            "list_id", _ivf_assign_udf(cbc, top=1)(F.col(vec_col))[0])
+    return (df.withColumn("probe",
+                          _ivf_assign_udf(cbc, top=nprobe)(F.col(vec_col)))
+            .withColumn("list_id", F.explode("probe")).drop("probe")
+            .withColumn("__qd", F.col(vec_col).cast("array<double>")))
+
+
 def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int,
              centroids: np.ndarray, nprobe: int = 4,
              id_col="vec_id", vec_col="embedding",
@@ -1401,20 +1408,13 @@ def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int,
     (full scan). Scale path beyond lsh_bucket_topk: list population is
     data-adaptive (k-means), so skewed embedding distributions don't
     collapse into a few hot buckets the way static hyperplane codes do."""
-    spark = embeddings.sparkSession
-    cbc = spark.sparkContext.broadcast(np.asarray(centroids, dtype=np.float64))
-    emb_l = embeddings.withColumn(
-        "list_id", _ivf_assign_udf(cbc, top=1)(F.col(vec_col))[0])
-    q_l = (queries.withColumn("probe", _ivf_assign_udf(cbc, top=nprobe)(F.col(q_vec_col)))
-           .withColumn("list_id", F.explode("probe")).drop("probe"))
+    emb_l = _ivf_lists(embeddings, vec_col, centroids)
+    q_l = _ivf_lists(queries, q_vec_col, centroids, nprobe=nprobe,
+                     id_col=q_id_col)
     joined = emb_l.join(F.broadcast(q_l.select(q_id_col, q_vec_col, "list_id")),
                         "list_id")
-    sim = _cosine_cols(F.col(vec_col).cast("array<double>"),
-                       F.col(q_vec_col).cast("array<double>"))
-    scored = joined.select(F.col(q_id_col), F.col(id_col), sim.alias("cosine"))
-    w = Window.partitionBy(q_id_col).orderBy(F.desc("cosine"), F.col(id_col))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    return _top_k(_cosine_scored(joined, q_id_col, id_col, vec_col, q_vec_col),
+                  q_id_col, id_col, "cosine", k)
 
 
 def ivf_write_index(embeddings: DataFrame, centroids: np.ndarray, path: str,
@@ -1428,10 +1428,7 @@ def ivf_write_index(embeddings: DataFrame, centroids: np.ndarray, path: str,
     after a full scan (plan-asserted in test_ivf_index_partition_
     pruning). With codebooks the stored row is (id, codes[, vec]) and
     the ADC scan touches only the code column."""
-    spark = embeddings.sparkSession
-    cbc = spark.sparkContext.broadcast(np.asarray(centroids, dtype=np.float64))
-    df = embeddings.withColumn(
-        "list_id", _ivf_assign_udf(cbc, top=1)(F.col(vec_col))[0])
+    df = _ivf_lists(embeddings, vec_col, centroids)
     if codebooks is not None:
         df = df.withColumn("codes",
                            pq_encode_udf(codebooks)(F.col(vec_col)))
@@ -1448,11 +1445,8 @@ def ivf_probe_index(spark, path: str, queries: DataFrame, k: int,
     source then lists only those partition directories. The driver-side
     collect is bounded by |queries| * nprobe ints (never corpus-sized).
     Semantically identical to ivf_topk on the same centroids/nprobe."""
-    cbc = spark.sparkContext.broadcast(np.asarray(centroids, dtype=np.float64))
-    q_l = (queries
-           .withColumn("probe",
-                       _ivf_assign_udf(cbc, top=nprobe)(F.col(q_vec_col)))
-           .withColumn("list_id", F.explode("probe")).drop("probe"))
+    q_l = _ivf_lists(queries, q_vec_col, centroids, nprobe=nprobe,
+                     id_col=q_id_col)
     probe_lists = [r.list_id for r in q_l.select("list_id").distinct().collect()]
     emb = (spark.read.parquet(path)
            .filter(F.col("list_id").isin(probe_lists)))
@@ -1460,12 +1454,8 @@ def ivf_probe_index(spark, path: str, queries: DataFrame, k: int,
         F.broadcast(q_l.select(q_id_col, q_vec_col,
                                F.col("list_id").cast("long").alias("list_id"))),
         "list_id")
-    sim = _cosine_cols(F.col(vec_col).cast("array<double>"),
-                       F.col(q_vec_col).cast("array<double>"))
-    scored = joined.select(F.col(q_id_col), F.col(id_col), sim.alias("cosine"))
-    w = Window.partitionBy(q_id_col).orderBy(F.desc("cosine"), F.col(id_col))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    return _top_k(_cosine_scored(joined, q_id_col, id_col, vec_col, q_vec_col),
+                  q_id_col, id_col, "cosine", k)
 
 
 # ---------------------------------------------------------------------------
@@ -1639,6 +1629,29 @@ def pq_encode_udf(codebooks: np.ndarray):
     return _udf
 
 
+def _pq_codes(df: DataFrame, vec_col: str, codebooks: np.ndarray,
+              code_impl: str, keep: list) -> DataFrame:
+    """(*keep, codes): the PQ code of ``vec_col``. code_impl "expr" is
+    pq_code_col over the vector cast to array<double> (codegen,
+    DuckDB-oracle-exact); any other value the pq_encode_udf matmul."""
+    if code_impl == "expr":
+        return (df.withColumn("__cd", F.col(vec_col).cast("array<double>"))
+                .withColumn("codes", pq_code_col(codebooks, "__cd"))
+                .select(*keep, "codes"))
+    return df.select(*keep,
+                     pq_encode_udf(codebooks)(F.col(vec_col)).alias("codes"))
+
+
+def _adc_scored(joined: DataFrame, m: int, cols: list) -> DataFrame:
+    """(*cols, adc): the asymmetric-distance score of each code row
+    against its query's look-up tables — m array look-ups and adds."""
+    score = F.element_at(F.col("lut_0"), F.element_at("codes", 1) + 1)
+    for sub in range(1, m):
+        score = score + F.element_at(F.col(f"lut_{sub}"),
+                                     F.element_at("codes", sub + 1) + 1)
+    return joined.select(*cols, score.alias("adc"))
+
+
 def pq_adc_topk(embeddings: DataFrame, queries: DataFrame, k: int,
                 codebooks: np.ndarray,
                 id_col="vec_id", vec_col="embedding",
@@ -1659,25 +1672,12 @@ def pq_adc_topk(embeddings: DataFrame, queries: DataFrame, k: int,
     the whole pipeline DuckDB-oracle-expressible; "udf" is the
     matmul fast path (bit-compatible away from score ties)."""
     m, ks, dsub = codebooks.shape
-    if code_impl == "expr":
-        emb_c = (embeddings
-                 .withColumn("__vd", F.col(vec_col).cast("array<double>"))
-                 .withColumn("codes", pq_code_col(codebooks, "__vd"))
-                 .select(id_col, "codes"))
-    else:
-        emb_c = embeddings.select(
-            id_col, pq_encode_udf(codebooks)(F.col(vec_col)).alias("codes"))
+    emb_c = _pq_codes(embeddings, vec_col, codebooks, code_impl, [id_col])
     q = queries.withColumn("__qd", F.col(q_vec_col).cast("array<double>"))
     q_lut = q.select(q_id_col, *pq_lut_cols(codebooks, "__qd"))
     joined = emb_c.crossJoin(F.broadcast(q_lut))
-    score = F.element_at(F.col("lut_0"), F.element_at("codes", 1) + 1)
-    for sub in range(1, m):
-        score = score + F.element_at(F.col(f"lut_{sub}"),
-                                     F.element_at("codes", sub + 1) + 1)
-    scored = joined.select(q_id_col, id_col, score.alias("adc"))
-    w = Window.partitionBy(q_id_col).orderBy(F.desc("adc"), F.col(id_col))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    return _top_k(_adc_scored(joined, m, [q_id_col, id_col]),
+                  q_id_col, id_col, "adc", k)
 
 
 def ivfpq_topk(embeddings: DataFrame, queries: DataFrame, k: int,
@@ -1699,65 +1699,20 @@ def ivfpq_topk(embeddings: DataFrame, queries: DataFrame, k: int,
     inside whole-stage codegen with left-assoc arithmetic, making the
     WHOLE pipeline DuckDB-oracle-expressible; "udf" (default) is the
     numpy-matmul fast path (bit-compatible away from score ties)."""
-    spark = embeddings.sparkSession
     m, ks, dsub = codebooks.shape
-    if assign_impl == "expr":
-        emb_l = (embeddings
-                 .withColumn("__vd", F.col(vec_col).cast("array<double>"))
-                 .withColumn("__cs", ivf_scores_col(centroids, "__vd"))
-                 .withColumn("list_id",
-                             (F.array_position(F.col("__cs"),
-                                               F.array_max(F.col("__cs"))) - 1)
-                             .cast("long")))
-        qx = (queries
-              .withColumn("__qd", F.col(q_vec_col).cast("array<double>"))
-              .withColumn("__cs", ivf_scores_col(centroids, "__qd"))
-              .select(q_id_col, q_vec_col, "__qd",
-                      F.posexplode("__cs").alias("list_pos", "__s")))
-        wq = Window.partitionBy(q_id_col).orderBy(F.desc("__s"),
-                                                  F.col("list_pos"))
-        q = (qx.withColumn("__pr", F.row_number().over(wq))
-             .filter(F.col("__pr") <= nprobe)
-             .withColumn("list_id", F.col("list_pos").cast("long")))
-    else:
-        cbc = spark.sparkContext.broadcast(
-            np.asarray(centroids, dtype=np.float64))
-        emb_l = embeddings.withColumn(
-            "list_id", _ivf_assign_udf(cbc, top=1)(F.col(vec_col))[0])
-        q = (queries
-             .withColumn("probe",
-                         _ivf_assign_udf(cbc, top=nprobe)(F.col(q_vec_col)))
-             .withColumn("list_id", F.explode("probe"))
-             .withColumn("__qd", F.col(q_vec_col).cast("array<double>")))
-    if code_impl == "expr":
-        emb_c = (emb_l
-                 .withColumn("__cd", F.col(vec_col).cast("array<double>"))
-                 .withColumn("codes", pq_code_col(codebooks, "__cd"))
-                 .select(id_col, vec_col, "list_id", "codes"))
-    else:
-        emb_c = emb_l.select(
-            id_col, vec_col, "list_id",
-            pq_encode_udf(codebooks)(F.col(vec_col)).alias("codes"))
+    emb_l = _ivf_lists(embeddings, vec_col, centroids, assign_impl)
+    q = _ivf_lists(queries, q_vec_col, centroids, assign_impl, nprobe,
+                   q_id_col)
+    emb_c = _pq_codes(emb_l, vec_col, codebooks, code_impl,
+                      [id_col, vec_col, "list_id"])
     q_lut = q.select(q_id_col, q_vec_col, "list_id",
                      *pq_lut_cols(codebooks, "__qd"))
     joined = emb_c.join(F.broadcast(q_lut), "list_id")
-    score = F.element_at(F.col("lut_0"), F.element_at("codes", 1) + 1)
-    for sub in range(1, m):
-        score = score + F.element_at(F.col(f"lut_{sub}"),
-                                     F.element_at("codes", sub + 1) + 1)
-    scored = joined.select(q_id_col, id_col, vec_col, q_vec_col,
-                           score.alias("adc"))
-    w = Window.partitionBy(q_id_col).orderBy(F.desc("adc"), F.col(id_col))
-    ranked = (scored.withColumn("rank", F.row_number().over(w))
-              .filter(F.col("rank") <= max(k, rerank)))
+    scored = _adc_scored(joined, m, [q_id_col, id_col, vec_col, q_vec_col])
+    ranked = _top_k(scored, q_id_col, id_col, "adc", max(k, rerank))
     if rerank:
-        sim = _cosine_cols(F.col(vec_col).cast("array<double>"),
-                           F.col(q_vec_col).cast("array<double>"))
-        rr = ranked.select(q_id_col, id_col, sim.alias("cosine"))
-        w2 = Window.partitionBy(q_id_col).orderBy(F.desc("cosine"),
-                                                  F.col(id_col))
-        return (rr.withColumn("rank", F.row_number().over(w2))
-                .filter(F.col("rank") <= k))
+        rr = _cosine_scored(ranked, q_id_col, id_col, vec_col, q_vec_col)
+        return _top_k(rr, q_id_col, id_col, "cosine", k)
     return ranked.select(q_id_col, id_col, "adc", "rank")
 
 
@@ -1773,18 +1728,13 @@ def cosine_near_dup(embeddings: DataFrame, threshold: float = 0.95,
     Hot-bucket guard (the 100-TB skew obligation): a degenerate
     embedding distribution (e.g. an all-near-duplicate corpus) can put
     n rows into ONE bucket, making the self-join a single O(n^2) task.
-    Buckets above ``bucket_cap`` rows are salt-split into
-    s = ceil(cnt/cap) chunks and the pair space is tiled over the
-    triangular chunk pairs with BOTH sides exploded — the left row of
-    chunk a carries target keys (a, t) for t in a..s-1, the right row
-    of chunk b carries probe keys (q, b) for q in 0..b — so every
-    shuffle key is one ordered chunk pair (a, b) holding ~cap x ~cap
-    rows: per-task work is bounded by ~cap^2 comparisons (a one-sided
-    explode would put ALL cnt left rows under the (bucket, s-1) key —
-    cnt*cap work in one task). The candidate-pair SET — and therefore
-    the result — is exactly unchanged: a cross-chunk pair appears
-    exactly once (canonicalized by least/greatest id), a within-chunk
-    pair is kept once by the id-order predicate.
+    Buckets above ``bucket_cap`` rows are salt-split and the pair space
+    tiled over the triangular chunk pairs (_salted_self_join), so
+    per-task work is bounded by ~cap^2 comparisons. The candidate-pair
+    SET — and therefore the result — is exactly unchanged: a
+    cross-chunk pair appears exactly once (canonicalized by
+    least/greatest id), a within-chunk pair is kept once by the
+    id-order predicate.
 
     n_planes=None sizes the code length from the corpus: expected
     bucket population n/2^p for random hyperplanes, targeting ~64
@@ -1805,42 +1755,13 @@ def cosine_near_dup(embeddings: DataFrame, threshold: float = 0.95,
         n_planes = int(min(24, max(8, math.ceil(math.log2(max(n, 2) / 64)))))
     rng = np.random.default_rng(seed)
     planes = rng.normal(size=(n_planes, dim))
-
-    @F.pandas_udf(LongType())
-    def bucket_udf(vecs: pd.Series) -> pd.Series:
-        m = np.stack(vecs.to_numpy())
-        bits = (m @ planes.T) > 0
-        out = np.zeros(len(m), dtype=np.int64)
-        for i in range(n_planes):
-            out |= bits[:, i].astype(np.int64) << i
-        return pd.Series(out)
-
-    bucket_col = (hyperplane_bucket_col(planes, "_v")
-                  if bucket_impl == "expr" else bucket_udf(F.col("_v")))
     # eager materialize: feeds the size census + both join sides
     # (3 branches would re-run the UDF over the corpus); reliable mode
     # commits through StageRunner like the other dedup stages
     emb = CK.materialize(
-        proj.withColumn("bucket", bucket_col),
+        _with_hyperplane_bucket(proj, "bucket", "_v", planes, bucket_impl),
         materialize, ckpt_runner, f"{stage_prefix}cosine_buckets")
-    hot = (emb.groupBy("bucket").agg(F.count("*").alias("_bn"))
-           .filter(F.col("_bn") > bucket_cap))
-    emb = emb.join(F.broadcast(hot), "bucket", "left")
-    nsalt = F.coalesce(F.ceil(F.col("_bn") / F.lit(bucket_cap)).cast("int"),
-                       F.lit(1))
-    emb = (emb.withColumn("_ns", nsalt)
-           .withColumn("_s", F.pmod(F.xxhash64("_id"), F.col("_ns"))
-                       .cast("int")).drop("_bn"))
-    left = emb.withColumn(
-        "_t", F.explode(F.sequence(F.col("_s"), F.col("_ns") - 1))).alias("l")
-    right = emb.withColumn(
-        "_q", F.explode(F.sequence(F.lit(0), F.col("_s")))).alias("r")
-    pairs = (left.join(right, [
-                 F.col("l.bucket") == F.col("r.bucket"),
-                 F.col("l._t") == F.col("r._s"),
-                 F.col("l._s") == F.col("r._q"),
-                 (F.col("l._s") != F.col("r._s"))
-                 | (F.col("l._id") < F.col("r._id"))])
+    pairs = (_salted_self_join(emb, ["bucket"], bucket_cap)
              .select(F.least(F.col("l._id"), F.col("r._id")).alias("left_id"),
                      F.greatest(F.col("l._id"), F.col("r._id"))
                      .alias("right_id"),

@@ -80,11 +80,16 @@ class MatcherParams:
     # duplicate-timestamp policy for BATCH matching, mirroring
     # MatcherServer.java:82-86 ("multiple samples for same time" is an
     # error on offline requests). "error" raises; "drop" keeps the first
-    # sample per (trace, time); "accept" is the pre-gate legacy
-    # behavior. The ONLINE matcher intentionally has no such gate:
+    # sample per (trace, time); any other value is rejected here. The
+    # ONLINE matcher intentionally has no such gate:
     # TrackerServer.java:168 / KState.java:182 reject only strictly
     # out-of-order samples, equal times pass through.
     dup_time: str = "error"
+
+    def __post_init__(self):
+        if self.dup_time not in ("error", "drop"):
+            raise ValueError(f"MatcherParams.dup_time must be 'error' or "
+                             f"'drop', got {self.dup_time!r}")
 
 
 # ---------------------------------------------------------------------------
@@ -853,11 +858,10 @@ class _TraceRun:
                     raise ValueError(
                         f"multiple samples for same time (trace {trace_id}, "
                         f"t={int(times_ms[np.flatnonzero(dup)[0]])})")
-                if params.dup_time == "drop":
-                    keep_m = ~dup   # stable sort: first-arrived sample wins
-                    sample_ids, times_ms = sample_ids[keep_m], times_ms[keep_m]
-                    lats, lons = lats[keep_m], lons[keep_m]
-                    azimuths = azimuths[keep_m]
+                keep_m = ~dup   # "drop": stable sort, first-arrived wins
+                sample_ids, times_ms = sample_ids[keep_m], times_ms[keep_m]
+                lats, lons = lats[keep_m], lons[keep_m]
+                azimuths = azimuths[keep_m]
 
         # thinning (Matcher.java:376-380) needs the last *kept* sample, so
         # the kept set is decided sequentially; radius search runs

@@ -158,41 +158,6 @@ def edges_view(roads: DataFrame) -> DataFrame:
         .withColumn("cost_timeprio", time * F.greatest(F.lit(1.0), F.col("priority")))
 
 
-def edges_pandas(roads_pdf: pd.DataFrame) -> pd.DataFrame:
-    """Driver/kernel-side equivalent of edges_view for index building."""
-    fwd = pd.DataFrame({
-        "edge_id": roads_pdf["gid"] * 2,
-        "source": roads_pdf["source"],
-        "target": roads_pdf["target"],
-        "forward": True,
-        "maxspeed": roads_pdf["maxspeed_forward"],
-        "geom_wkb": roads_pdf["geom_wkb"],
-        "gid": roads_pdf["gid"],
-        "class_id": roads_pdf["class_id"],
-        "priority": roads_pdf["priority"],
-        "length": roads_pdf["length"],
-    })
-    two = roads_pdf[~roads_pdf["oneway"]]
-    bwd = pd.DataFrame({
-        "edge_id": two["gid"] * 2 + 1,
-        "source": two["target"],
-        "target": two["source"],
-        "forward": False,
-        "maxspeed": two["maxspeed_backward"],
-        "geom_wkb": two["geom_wkb"].map(wkbio.reverse_linestring_wkb),
-        "gid": two["gid"],
-        "class_id": two["class_id"],
-        "priority": two["priority"],
-        "length": two["length"],
-    })
-    out = pd.concat([fwd, bwd], ignore_index=True).sort_values("edge_id").reset_index(drop=True)
-    time = out["length"] * 3.6 / np.minimum(out["maxspeed"].astype(float), 130.0)
-    out["cost_distance"] = out["length"]
-    out["cost_time"] = time
-    out["cost_timeprio"] = time * np.maximum(1.0, out["priority"].astype(float))
-    return out
-
-
 # road-class dim table (FIXTURES.md §4): same shape as the reference's
 # road-types config (map/tools/road-types.json:1-50, loaded by
 # roadmap/Loader.roadtypes, roadmap/Loader.java:148-165)

@@ -252,9 +252,3 @@ _VIDEO_CODEC = StandInVideoCodec()
 
 def get_video_codec():
     return _VIDEO_CODEC
-
-
-def set_video_codec(codec):
-    global _VIDEO_CODEC
-    old, _VIDEO_CODEC = _VIDEO_CODEC, codec
-    return old

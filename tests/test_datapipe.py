@@ -9,6 +9,58 @@ from pyspark.sql import functions as F
 from barefoot_spark.operators import datapipe as D
 
 
+# ---------------------------------------------------------------------------
+# single-document reference paths: the batch kernels in datapipe.py must
+# be bit-identical to these
+# ---------------------------------------------------------------------------
+
+def _shingle_hashes(text: str, k: int = 5) -> np.ndarray:
+    """Rolling char k-gram hashes (uint64)."""
+    b = np.frombuffer(text.encode("utf-8", "ignore"), dtype=np.uint8)
+    if len(b) < k:
+        b = np.pad(b, (0, k - len(b)), constant_values=32)
+    # polynomial rolling hash over a stride-tricks window
+    win = np.lib.stride_tricks.sliding_window_view(b, min(k, len(b)))
+    mult = np.power(np.uint64(1000003), np.arange(win.shape[1], dtype=np.uint64))
+    return (win.astype(np.uint64) * mult).sum(axis=1, dtype=np.uint64)
+
+
+def minhash_signature_one(text: str, num_perm: int = 64, shingle_k: int = 5,
+                          seed: int = 42) -> np.ndarray:
+    """Single-doc reference path: (a*x+b) mod p, min
+    per permutation. min over duplicate shingles == min over unique, so
+    no dedup is needed."""
+    a, b = D._minhash_params(num_perm, seed)
+    sh = _shingle_hashes(text or "", shingle_k)
+    vals = (a[:, None] * sh[None, :] + b[:, None]) % np.uint64(D._MERSENNE)
+    return vals.min(axis=1).astype(np.int64)
+
+
+def simhash_one(text: str) -> int:
+    """Single-doc reference path."""
+    toks = (text or "").lower().split()
+    if not toks:
+        return 0
+    hs = np.array([hash_token(tok) for tok in toks], dtype=np.uint64)
+    bits = ((hs[:, None] >> np.arange(64, dtype=np.uint64)[None, :])
+            & np.uint64(1)).astype(np.int64)
+    votes = (2 * bits - 1).sum(axis=0)
+    val = np.uint64(0)
+    for bpos in range(64):
+        if votes[bpos] > 0:
+            val |= np.uint64(1) << np.uint64(bpos)
+    return int(val.astype(np.int64))
+
+
+def hash_token(tok: str) -> int:
+    """Deterministic 64-bit FNV-1a (stable across workers, unlike
+    Python's salted hash())."""
+    h = 0xCBF29CE484222325
+    for ch in tok.encode("utf-8", "ignore"):
+        h = ((h ^ ch) * 0x100000001B3) & 0xFFFFFFFFFFFFFFFF
+    return h
+
+
 @pytest.fixture(scope="module")
 def docs(spark):
     rows = [
@@ -181,7 +233,7 @@ def test_minhash_batch_matches_single():
     fn = D.minhash_signature_udf(num_perm=32, shingle_k=5).func
     got = fn(pd.Series(texts)).tolist()
     for t, g in zip(texts, got):
-        want = D.minhash_signature_one(t, num_perm=32, shingle_k=5)
+        want = minhash_signature_one(t, num_perm=32, shingle_k=5)
         assert list(g) == list(want), t
 
 
@@ -235,7 +287,7 @@ def test_doc_fingerprint_batch_matches_perdoc(spark):
             "doc_id": range(len(texts)), "text": texts})).coalesce(1)) \
         .toPandas().set_index("doc_id")["fingerprint"]
     for i, t in enumerate(texts):
-        hs = D._shingle_hashes(t or "", 8).astype(np.uint64)
+        hs = _shingle_hashes(t or "", 8).astype(np.uint64)
         if len(hs) >= 16:
             want = np.lib.stride_tricks.sliding_window_view(hs, 16).min(axis=1)
         else:
@@ -249,14 +301,14 @@ def test_simhash_batch_matches_single():
     fn = D.simhash_udf().func
     got = fn(pd.Series(texts)).tolist()
     for t, g in zip(texts, got):
-        assert int(g) == D.simhash_one(t), t
+        assert int(g) == simhash_one(t), t
 
 
 def test_fnv1a_batch_matches_scalar():
     toks = ["", "a", "hello", "Ünïcode", "x" * 64, "tok123"]
     got = D.fnv1a_batch(toks)
     for t, g in zip(toks, got):
-        assert int(g) == D.hash_token(t)
+        assert int(g) == hash_token(t)
 
 def test_materialize_reliable_equals_local(spark, docs, tmp_path):
     """ckpt.materialize knob: "reliable" (StageRunner parquet commit —

@@ -583,8 +583,9 @@ def test_duplicate_timestamp_gate():
     """Batch matching mirrors MatcherServer.java:82-86: duplicate
     sample times are an error by default; dup_time='drop' keeps the
     first-arrived sample per time and matches the pre-deduped input;
-    the ONLINE matcher (TrackerServer.java:168 / KState.java:182)
-    accepts equal times and rejects only strictly-older samples."""
+    any other policy is rejected when the params are built; the ONLINE
+    matcher (TrackerServer.java:168 / KState.java:182) accepts equal
+    times and rejects only strictly-older samples."""
     from barefoot_spark import roads as R
     from barefoot_spark.index import RoadIndex
     from barefoot_spark.sources import samples as SS
@@ -611,8 +612,11 @@ def test_duplicate_timestamp_gate():
     manual = M.match_trace(*args(dup.drop(index=6), M.MatcherParams()))
     assert dropped == manual
 
-    clean = M.match_trace(*args(g, M.MatcherParams(dup_time="accept")))
-    assert clean == M.match_trace(*args(g, M.MatcherParams()))
+    # only "error" and "drop" exist: a misspelt policy must not fall
+    # through to matching duplicate times
+    for bad in ("accept", "dorp", ""):
+        with pytest.raises(ValueError, match="dup_time"):
+            M.MatcherParams(dup_time=bad)
 
     # online: equal time passes the order gate, older is rejected
     om = OnlineMatcher(idx)

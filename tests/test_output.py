@@ -62,6 +62,23 @@ def test_geojson_and_slim_sinks(spark, idx):
     rec = json.loads(slim.iloc[0]["slim"])
     assert "road" in rec and "frac" in rec
 
+    # debug sink: every field of a debug row is the matched row's value
+    # (a NULL field is omitted by to_json)
+    debug = O.to_debug_json(matched).toPandas()
+    rows = matched.toPandas().set_index(["trace_id", "seq"])
+    assert len(debug) == len(rows)
+    d = debug.iloc[len(debug) // 2]
+    rec = json.loads(d["debug"])
+    want = rows.loc[(d["trace_id"], d["seq"])]
+    fields = ["sample_id", "time", "edge_id", "fraction", "lat", "lon",
+              "azimuth", "route_length", "filtprob", "seqprob"]
+    assert set(rec) <= set(fields)
+    for k in fields:
+        if want[k] is None or (isinstance(want[k], float) and np.isnan(want[k])):
+            assert k not in rec or np.isnan(rec[k]), k
+        else:
+            assert rec[k] == want[k], k
+
 
 def test_to_osm_json_road_references(spark):
     """toOSMJSON format golden: every road reference must be the
