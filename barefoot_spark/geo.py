@@ -262,17 +262,6 @@ def interpolate_segment(lat1, lon1, lat2, lon2, f):
     return lat, lon
 
 
-def azimuth_segment(lat1, lon1, lat2, lon2, f):
-    """Bearing at fraction f along geodesic a->b, wrapped to [0,360)
-    (Geography.java:55-67)."""
-    f = np.asarray(f, dtype=np.float64)
-    s12, azi1, azi2 = inverse(lat1, lon1, lat2, lon2)
-    latm, lonm = interpolate_segment(lat1, lon1, lat2, lon2, f)
-    _, _, azim = inverse(lat1, lon1, latm, lonm)
-    azi = np.where(f < 1e-10, azi1, np.where(f > 1 - 1e-10, azi2, azim))
-    return np.where(azi < 0, azi + 360.0, azi)
-
-
 def intercept_segment(lat1, lon1, lat2, lon2, latc, lonc):
     """Fraction along geodesic a->b of the point closest to c.
 

@@ -54,6 +54,12 @@ class RoadIndex:
 
         # cell -> base-segment CSR (QuadTreeIndex.add analog)
         row_idx, cell = cells.cover_polyline(self.coords, self.offsets, self.res)
+        # (lat_min, lat_max, lon_min, lon_max) of the coordinates, padded
+        # by one cell edge: it holds every indexed cell
+        edge = cells.res_edge_deg(self.res)
+        lon, lat = self.coords[:, 0], self.coords[:, 1]
+        self.extent = (lat.min(initial=np.inf) - edge, lat.max(initial=-np.inf) + edge,
+                       lon.min(initial=np.inf) - edge, lon.max(initial=-np.inf) + edge)
         order = np.argsort(cell, kind="stable")
         cell_s, row_s = cell[order], row_idx[order]
         self.cell_ids, starts = np.unique(cell_s, return_index=True)
@@ -121,8 +127,18 @@ class RoadIndex:
     # ------------------------------------------------------------------
     def _candidates_for_envelopes(self, lat_min, lat_max, lon_min, lon_max):
         """(point_idx, base_idx) pairs whose indexed cells intersect the
-        per-point envelopes; deduplicated."""
-        row_idx, cell = cells.cover_envelope(lat_min, lat_max, lon_min, lon_max, self.res)
+        per-point envelopes; deduplicated. Each envelope is first clamped
+        to ``self.extent``, which keeps every indexed cell it touches, and
+        dropped if that leaves it empty: an off-map envelope, up to the
+        whole globe in the ring search's last rings, lists no more cells
+        than the map has."""
+        lat_lo, lat_hi, lon_lo, lon_hi = self.extent
+        lat_min, lat_max = np.maximum(lat_min, lat_lo), np.minimum(lat_max, lat_hi)
+        lon_min, lon_max = np.maximum(lon_min, lon_lo), np.minimum(lon_max, lon_hi)
+        rows = np.nonzero((lat_min <= lat_max) & (lon_min <= lon_max))[0]
+        row_idx, cell = cells.cover_envelope(lat_min[rows], lat_max[rows],
+                                             lon_min[rows], lon_max[rows], self.res)
+        row_idx = rows[row_idx]
         pos = np.searchsorted(self.cell_ids, cell)
         pos_c = np.minimum(pos, max(len(self.cell_ids) - 1, 0))
         ok = np.zeros(len(cell), dtype=bool)

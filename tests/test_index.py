@@ -3,6 +3,12 @@ QuadTreeIndexTest refsets (src/test/java/com/bmwcarit/barefoot/roadmap/
 RoadMapTest.java:73-180) plus linear-scan oracles
 (QuadTreeIndexTest.java:77-262 strategy)."""
 
+import json
+import os
+import subprocess
+import sys
+import textwrap
+
 import numpy as np
 import pytest
 
@@ -179,3 +185,44 @@ def test_nearest_knearest_off_map_brute_force():
     for i in (6, 7):
         assert sorted(idx.gid[base[p == i]].tolist()) == [0, 1], i
         assert dist[p == i][0] == dist[p == i][1]
+
+
+_FAR_OFF_MAP = textwrap.dedent("""
+    import json, resource
+    resource.setrlimit(resource.RLIMIT_AS, (3 << 30, 3 << 30))
+    import numpy as np
+    from barefoot_spark import geo, roads
+    from barefoot_spark.index import RoadIndex
+
+    idx = RoadIndex(roads.grid_pdf(24, seed=42), res=16)
+    lat = np.array([0.0, -33.0, 51.06, 45.06, 48.06, 48.06, 45.0])
+    lon = np.array([0.0, 151.0, 11.06, 11.06, 14.12, 8.0, 8.0])
+    p, base, _, dist = idx.nearest(lat, lon)
+    roads_all = np.arange(len(idx.gid))
+    out = []
+    for i in range(len(lat)):
+        _, brute = geo.polyline_intercept(
+            idx.coords, idx.offsets, np.full(len(roads_all), lat[i]),
+            np.full(len(roads_all), lon[i]), poly_for_point=roads_all)
+        out.append({"got": dist[p == i].tolist(),
+                    "got_brute": brute[base[p == i]].tolist(),
+                    "brute": float(brute.min())})
+    print(json.dumps(out))
+""")
+
+
+def test_nearest_far_off_map_bounded_memory():
+    """Fixes far off the `join_tile` map, null island (0, 0), Sydney and
+    points 3 degrees north, south, east, west and south-west of it,
+    under a 3 GB address-space limit: the ring search's globe-sized
+    envelopes must not list every cell, and `nearest` must equal the
+    brute-force minimum over every road."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, OPENBLAS_NUM_THREADS="1", OMP_NUM_THREADS="1")
+    run = subprocess.run([sys.executable, "-c", _FAR_OFF_MAP], cwd=root, env=env,
+                         capture_output=True, text=True, timeout=300)
+    assert run.returncode == 0, run.stderr[-2000:]
+    for i, row in enumerate(json.loads(run.stdout)):
+        assert len(row["got"]) >= 1, i
+        np.testing.assert_allclose(row["got"], row["brute"], rtol=0, atol=1e-6)
+        np.testing.assert_allclose(row["got_brute"], row["brute"], rtol=0, atol=1e-6)
