@@ -113,12 +113,8 @@ def cover_envelope(lat_min, lat_max, lon_min, lon_max, res):
 
     wx = (ix1 - ix0 + 1)
     wy = (iy1 - iy0 + 1)
-    counts = wx * wy
-    row_idx = np.repeat(np.arange(len(counts)), counts)
     # local rank within each row's rectangle
-    starts = np.zeros(len(counts) + 1, dtype=np.int64)
-    np.cumsum(counts, out=starts[1:])
-    local = np.arange(starts[-1], dtype=np.int64) - starts[row_idx]
+    row_idx, local = geo.ragged(wx * wy)
     ix = ix0[row_idx] + local % wx[row_idx]
     iy = iy0[row_idx] + local // wx[row_idx]
     return row_idx, pack(res, ix, iy)

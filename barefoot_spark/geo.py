@@ -11,7 +11,10 @@ these are the inner kernels of pandas/Arrow UDFs, never called per row.
 
 Polylines are represented in CSR ("ragged") form: a flat (m, 2) float64
 array of [lon, lat] vertices plus an int offsets array of length n+1, so
-polyline i owns rows offsets[i]:offsets[i+1].
+polyline i owns rows offsets[i]:offsets[i+1]. ``ragged`` is the engine's
+one CSR expansion (each element's group and position in the group);
+every batch kernel that walks groups of vertices, segments, cells or
+successors builds its flat arrays with it.
 """
 
 from __future__ import annotations
@@ -262,47 +265,57 @@ def interpolate_segment(lat1, lon1, lat2, lon2, f):
     return lat, lon
 
 
+def _aeq(lat0, lon0, lat, lon):
+    """Azimuthal-equidistant forward projection centred at (lat0, lon0):
+    (x east, y north) in meters. Geodesics through the centre are
+    straight lines in this plane and radial distances are exact."""
+    s, azi, _ = inverse(lat0, lon0, lat, lon)
+    a = np.radians(azi)
+    return s * np.sin(a), s * np.cos(a)
+
+
+def _aeq_fixed_point(lat0, lon0, points, solve):
+    """Karney's projection iteration (Intercept.java:97-134,
+    Intersect.java:55-139): project ``points`` ((lat, lon) pairs) into
+    the plane centred at (lat0, lon0), take the planar answer
+    ``solve(*xys)`` and re-centre there, for at most _MAXIT_ICPT rounds
+    or until no centre moves by 1e-12 degrees. Returns the centre."""
+    for _ in range(_MAXIT_ICPT):
+        px, py = solve(*(_aeq(lat0, lon0, la, lo) for la, lo in points))
+        lat1, lon1, _ = direct(lat0, lon0, np.degrees(np.arctan2(px, py)),
+                               np.hypot(px, py))
+        done = np.all(np.abs(lat1 - lat0) < 1e-12) and \
+            np.all(np.abs(lon1 - lon0) < 1e-12)
+        lat0, lon0 = lat1, lon1
+        if done:
+            break
+    return lat0, lon0
+
+
 def intercept_segment(lat1, lon1, lat2, lon2, latc, lonc):
     """Fraction along geodesic a->b of the point closest to c.
 
     Vectorized analog of the gnomonic-iteration intercept
     (Intercept.java:97-134, sign convention Geography.java:32-45): start
-    from the geodesic midpoint, and iteratively (<=10 rounds, like the
-    reference) project a, b, c into an azimuthal-equidistant plane
-    centered at the current estimate, take the planar foot of the
-    perpendicular from c onto line a-b, and re-center. Geodesics through
-    the plane's center are straight lines in this projection, so the
-    fixed point is the true geodesic interception. May return f outside
-    [0,1] (beyond segment ends) exactly like the reference.
+    from the geodesic midpoint and iterate ``_aeq_fixed_point`` on the
+    planar foot of the perpendicular from c onto line a-b. May return f
+    outside [0,1] (beyond segment ends) exactly like the reference.
     """
     lat1, lon1, lat2, lon2, latc, lonc = np.broadcast_arrays(
         *(np.asarray(x, dtype=np.float64) for x in (lat1, lon1, lat2, lon2, latc, lonc)))
     s_ab, azi_ab, _ = inverse(lat1, lon1, lat2, lon2)
     late, lone, _ = direct(lat1, lon1, azi_ab, s_ab * 0.5)
 
-    def _fwd(latc0, lonc0, lat, lon):
-        # azimuthal-equidistant forward: center (latc0, lonc0) -> (x, y)
-        s, azi, _ = inverse(latc0, lonc0, lat, lon)
-        a = np.radians(azi)
-        return s * np.sin(a), s * np.cos(a)
-
-    for _ in range(_MAXIT_ICPT):
-        xa, ya = _fwd(late, lone, lat1, lon1)
-        xb, yb = _fwd(late, lone, lat2, lon2)
-        xc, yc = _fwd(late, lone, latc, lonc)
+    def foot(a, b, c):
+        (xa, ya), (xb, yb), (xc, yc) = a, b, c
         dx, dy = xb - xa, yb - ya
         den = dx * dx + dy * dy
         with np.errstate(divide="ignore", invalid="ignore"):
             t = np.where(den > 0, ((xc - xa) * dx + (yc - ya) * dy) / np.where(den == 0, 1, den), 0.0)
-        px, py = xa + t * dx, ya + t * dy
-        s = np.hypot(px, py)
-        azi = np.degrees(np.arctan2(px, py))
-        late_new, lone_new, _ = direct(late, lone, azi, s)
-        if np.all(np.abs(late_new - late) < 1e-12) and np.all(np.abs(lone_new - lone) < 1e-12):
-            late, lone = late_new, lone_new
-            break
-        late, lone = late_new, lone_new
+        return xa + t * dx, ya + t * dy
 
+    late, lone = _aeq_fixed_point(
+        late, lone, ((lat1, lon1), (lat2, lon2), (latc, lonc)), foot)
     s_ai, azi_ai, _ = inverse(lat1, lon1, late, lone)
     with np.errstate(divide="ignore", invalid="ignore"):
         frac = np.where(s_ab > 0, s_ai / np.where(s_ab == 0, 1, s_ab), 0.0)
@@ -319,18 +332,16 @@ def intercept_segment(lat1, lon1, lat2, lon2, latc, lonc):
     return frac
 
 
-
 def intersect_geodesics(lata1, lona1, lata2, lona2,
                         latb1, lonb1, latb2, lonb2):
     """Intersection point of two geodesics (Intersect.java:55-139,
     Karney's gnomonic-projection method, Algorithms for geodesics §8).
 
-    Vectorized: start from the 4-point average (the reference's init),
-    iterate <=10 rounds of project-into-plane / planar line-line
-    intersection / re-center. The reference projects gnomonically; we
-    use the same azimuthal-equidistant plane as intercept_segment —
-    both make geodesics through the center exactly straight, so the
-    fixed point is the same true intersection.
+    Vectorized: start from the 4-point average (the reference's init)
+    and iterate ``_aeq_fixed_point`` on the planar line-line
+    intersection. The reference projects gnomonically; the
+    azimuthal-equidistant plane also makes geodesics through the centre
+    straight, so the fixed point is the same true intersection.
 
     Returns (lat, lon, s12) where s12 is the geodesic distance from
     (lata1, lona1) to the intersection (the reference returns the
@@ -343,35 +354,21 @@ def intersect_geodesics(lata1, lona1, lata2, lona2,
             + np.mod(lonb1, 360.0) + np.mod(lonb2, 360.0)) / 4.0
     lonp = np.where(lonp > 180.0, lonp - 360.0, lonp)
 
-    def _fwd(lat0, lon0, lat, lon):
-        s, azi, _ = inverse(lat0, lon0, lat, lon)
-        a = np.radians(azi)
-        return s * np.sin(a), s * np.cos(a)
-
-    for _ in range(_MAXIT_ICPT):
-        xa1, ya1 = _fwd(latp, lonp, lata1, lona1)
-        xa2, ya2 = _fwd(latp, lonp, lata2, lona2)
-        xb1, yb1 = _fwd(latp, lonp, latb1, lonb1)
-        xb2, yb2 = _fwd(latp, lonp, latb2, lonb2)
+    def meet(a1, a2, b1, b2):
         # homogeneous line-line intersection: l = p1 x p2, p = la x lb
+        (xa1, ya1), (xa2, ya2), (xb1, yb1), (xb2, yb2) = a1, a2, b1, b2
         la = np.stack([ya1 - ya2, xa2 - xa1, xa1 * ya2 - xa2 * ya1])
         lb = np.stack([yb1 - yb2, xb2 - xb1, xb1 * yb2 - xb2 * yb1])
         px = la[1] * lb[2] - la[2] * lb[1]
         py = la[2] * lb[0] - la[0] * lb[2]
         pz = la[0] * lb[1] - la[1] * lb[0]
         with np.errstate(divide="ignore", invalid="ignore"):
-            px = np.where(pz != 0, px / np.where(pz == 0, 1, pz), 0.0)
-            py = np.where(pz != 0, py / np.where(pz == 0, 1, pz), 0.0)
-        s = np.hypot(px, py)
-        azi = np.degrees(np.arctan2(px, py))
-        latp_new, lonp_new, _ = direct(latp, lonp, azi, s)
-        done = np.all(np.abs(latp_new - latp) < 1e-12) and \
-            np.all(np.abs(lonp_new - lonp) < 1e-12)
-        latp, lonp = latp_new, lonp_new
-        if done:
-            break
-    s12 = distance(lata1, lona1, latp, lonp)
-    return latp, lonp, s12
+            return (np.where(pz != 0, px / np.where(pz == 0, 1, pz), 0.0),
+                    np.where(pz != 0, py / np.where(pz == 0, 1, pz), 0.0))
+
+    latp, lonp = _aeq_fixed_point(latp, lonp, (
+        (lata1, lona1), (lata2, lona2), (latb1, lonb1), (latb2, lonb2)), meet)
+    return latp, lonp, distance(lata1, lona1, latp, lonp)
 
 
 def _group_first(n_groups, group_idx, mask=None):
@@ -401,50 +398,55 @@ def _group_last(n_groups, group_idx, mask=None):
 # Polyline (CSR ragged) operators
 # ---------------------------------------------------------------------------
 
-def _segment_view(coords, offsets):
-    """All consecutive-vertex segments of every polyline.
-
-    Returns (poly_idx, alat, alon, blat, blon) flat arrays of length
-    m - n (sum over polylines of vertex_count - 1).
-    """
-    offsets = np.asarray(offsets, dtype=np.int64)
-    n = len(offsets) - 1
-    m = offsets[-1]
-    keep = np.ones(m, dtype=bool)
-    keep[offsets[1:] - 1] = False  # drop last vertex of each polyline as seg start
-    a_idx = np.nonzero(keep)[0]
-    poly_idx = np.searchsorted(offsets, a_idx, side="right") - 1
-    lon = coords[:, 0]
-    lat = coords[:, 1]
-    return poly_idx, lat[a_idx], lon[a_idx], lat[a_idx + 1], lon[a_idx + 1]
+def ragged(counts):
+    """The one CSR expansion: for groups of ``counts`` elements laid end
+    to end, each element's group index and its position in the group."""
+    counts = np.asarray(counts, dtype=np.int64)
+    group = np.repeat(np.arange(len(counts)), counts)
+    starts = np.cumsum(counts) - counts
+    return group, np.arange(len(group), dtype=np.int64) - starts[group]
 
 
-def polyline_seg_lengths(coords, offsets):
-    """Per-segment geodesic lengths + poly index (for cumulative ops)."""
-    poly_idx, alat, alon, blat, blon = _segment_view(coords, offsets)
-    return poly_idx, distance(alat, alon, blat, blon)
+def _pairs(poly_for_point, n):
+    """Polyline of each (point, polyline) pair; one pair per polyline
+    when None."""
+    if poly_for_point is None:
+        return np.arange(n, dtype=np.int64)
+    return np.asarray(poly_for_point, dtype=np.int64)
+
+
+def _pair_segments(offsets, poly_for_point):
+    """(pair, first vertex) of every segment of each pair's polyline; a
+    polyline of 0 or 1 vertices has none."""
+    counts = np.maximum((offsets[1:] - offsets[:-1] - 1)[poly_for_point], 0)
+    pair_idx, seg_local = ragged(counts)
+    return pair_idx, offsets[poly_for_point][pair_idx] + seg_local
 
 
 def polyline_length(coords, offsets):
     """Sum of segment geodesics per polyline (Geography.java:69-78)."""
-    poly_idx, seg_len = polyline_seg_lengths(coords, offsets)
-    out = np.zeros(len(offsets) - 1, dtype=np.float64)
-    np.add.at(out, poly_idx, seg_len)
-    return out
+    offsets = np.asarray(offsets, dtype=np.int64)
+    poly_idx, a = _pair_segments(offsets, np.arange(len(offsets) - 1))
+    lon, lat = coords[:, 0], coords[:, 1]
+    seg_len = distance(lat[a], lon[a], lat[a + 1], lon[a + 1])
+    return np.bincount(poly_idx, weights=seg_len, minlength=len(offsets) - 1)
 
 
 def _pair_vertex_view(offsets, poly_for_point):
-    """Per (pair, vertex) expansion arrays for pair-wise polyline ops."""
+    """Per (pair, vertex) expansion: the pair, the vertex, and whether
+    it starts a segment (every vertex but each pair's last)."""
     vcounts = (offsets[1:] - offsets[:-1])[poly_for_point]
-    vpair_idx = np.repeat(np.arange(len(poly_for_point)), vcounts)
-    v_local = (np.arange(len(vpair_idx), dtype=np.int64)
-               - np.repeat(np.concatenate(([0], np.cumsum(vcounts)[:-1])), vcounts)) \
-        if len(vcounts) else np.zeros(0, dtype=np.int64)
+    vpair_idx, v_local = ragged(vcounts)
     v_idx = offsets[poly_for_point][vpair_idx] + v_local
-    is_last = np.zeros(len(v_idx), dtype=bool)
-    if len(vcounts):
-        is_last[np.cumsum(vcounts) - 1] = True
-    return vpair_idx, v_idx, ~is_last
+    return vpair_idx, v_idx, v_local < vcounts[vpair_idx] - 1
+
+
+def _length_before(ds, pair_idx, npairs):
+    """Length of each pair's polyline before each of its segments."""
+    cum = np.zeros(len(ds) + 1)
+    np.cumsum(ds, out=cum[1:])
+    first = np.maximum(_group_first(npairs, pair_idx), 0)
+    return cum[:-1] - cum[first][pair_idx]
 
 
 def polyline_min_dist_planar(coords, offsets, latc, lonc, poly_for_point):
@@ -502,32 +504,10 @@ def polyline_intercept(coords, offsets, latc, lonc, poly_for_point=None):
     latc = np.asarray(latc, dtype=np.float64)
     lonc = np.asarray(lonc, dtype=np.float64)
     offsets = np.asarray(offsets, dtype=np.int64)
-    if poly_for_point is None:
-        poly_for_point = np.arange(len(latc), dtype=np.int64)
-    else:
-        poly_for_point = np.asarray(poly_for_point, dtype=np.int64)
-
-    # expand: for each pair, all VERTICES of its polyline
-    vcounts = (offsets[1:] - offsets[:-1])[poly_for_point]
-    vpair_idx = np.repeat(np.arange(len(poly_for_point)), vcounts)
-    v_local = (np.arange(len(vpair_idx), dtype=np.int64)
-               - np.repeat(np.concatenate(([0], np.cumsum(vcounts)[:-1])), vcounts)) \
-        if len(vcounts) else np.zeros(0, dtype=np.int64)
-    v_idx = offsets[poly_for_point][vpair_idx] + v_local
-
-    lon = coords[:, 0]
-    lat = coords[:, 1]
+    poly_for_point = _pairs(poly_for_point, len(latc))
+    vpair_idx, v_idx, seg_sel = _pair_vertex_view(offsets, poly_for_point)
     # one AEQ projection per (pair, vertex), centered at the query point
-    s_v, azi_v, _ = inverse(latc[vpair_idx], lonc[vpair_idx], lat[v_idx], lon[v_idx])
-    a_rad = np.radians(azi_v)
-    vx = s_v * np.sin(a_rad)
-    vy = s_v * np.cos(a_rad)
-
-    # per-segment view: drop each pair's last vertex as a segment start
-    is_last = np.zeros(len(v_idx), dtype=bool)
-    if len(vcounts):
-        is_last[np.cumsum(vcounts) - 1] = True
-    seg_sel = ~is_last
+    vx, vy = _aeq(latc[vpair_idx], lonc[vpair_idx], coords[v_idx, 1], coords[v_idx, 0])
     pair_idx = vpair_idx[seg_sel]
     ax, ay = vx[seg_sel], vy[seg_sel]
     bx, by = vx[1:][seg_sel[:-1]], vy[1:][seg_sel[:-1]]
@@ -544,13 +524,8 @@ def polyline_intercept(coords, offsets, latc, lonc, poly_for_point=None):
     npairs = len(poly_for_point)
     best_d = np.full(npairs, np.inf)
     np.minimum.at(best_d, pair_idx, d)
-    # cumulative length before each segment, per pair
-    cum = np.zeros(len(ds) + 1)
-    np.cumsum(ds, out=cum[1:])
-    first_of_pair = np.maximum(_group_first(npairs, pair_idx), 0)
-    s_before = cum[np.arange(len(ds))] - cum[first_of_pair][pair_idx]
-    total = np.zeros(npairs)
-    np.add.at(total, pair_idx, ds)
+    s_before = _length_before(ds, pair_idx, npairs)
+    total = np.bincount(pair_idx, weights=ds, minlength=npairs)
 
     # reference keeps the FIRST segment achieving the min distance
     # (strict '<' update, Geography.java:97-100)
@@ -564,43 +539,46 @@ def polyline_intercept(coords, offsets, latc, lonc, poly_for_point=None):
     return frac, np.where(np.isinf(best_d), 0.0, best_d)
 
 
+def _seek(ds, pair_idx, frac, poly_for_point, lengths):
+    """Walk each pair's segments (lengths ``ds``) to the global fraction
+    ``frac`` of its polyline's length (``lengths``, else the sum of
+    ``ds``). Returns the length before each segment, each pair's target
+    length, and the first segment reaching it (Geography.java:128-132),
+    or the last segment when rounding leaves none."""
+    npairs = len(poly_for_point)
+    total = (np.bincount(pair_idx, weights=ds, minlength=npairs) if lengths is None
+             else np.asarray(lengths, dtype=np.float64)[poly_for_point])
+    s_before = _length_before(ds, pair_idx, npairs)
+    d_target = total * np.clip(frac, 0.0, 1.0)
+    reach = (s_before + ds + 1e-9) >= d_target[pair_idx]
+    pick = _group_first(npairs, pair_idx, reach)
+    last = np.maximum(_group_last(npairs, pair_idx), 0)
+    return s_before, d_target, (np.where(pick < 0, last, pick) if len(ds) else pick)
+
+
+def _snap_ends(lat, lon, offsets, poly_for_point, frac, out_lat, out_lon):
+    """Endpoint fast paths (Geography.java:119-125): a fraction within
+    1e-10 of 0 or 1 gives the polyline's first or last vertex."""
+    start_pt = offsets[poly_for_point]
+    end_pt = offsets[poly_for_point + 1] - 1
+    f0 = frac < 1e-10
+    f1 = frac > 1 - 1e-10
+    return (np.where(f0, lat[start_pt], np.where(f1, lat[end_pt], out_lat)),
+            np.where(f0, lon[start_pt], np.where(f1, lon[end_pt], out_lon)))
+
+
 def polyline_interpolate(coords, offsets, frac, poly_for_point=None, lengths=None):
     """Point at global length-fraction f (Geography.java:108-142)."""
     offsets = np.asarray(offsets, dtype=np.int64)
     frac = np.asarray(frac, dtype=np.float64)
-    if poly_for_point is None:
-        poly_for_point = np.arange(len(frac), dtype=np.int64)
-    else:
-        poly_for_point = np.asarray(poly_for_point, dtype=np.int64)
-
-    counts = (offsets[1:] - offsets[:-1] - 1)[poly_for_point]
-    pair_idx = np.repeat(np.arange(len(poly_for_point)), counts)
-    seg_local = np.concatenate([np.arange(c) for c in counts]) if len(counts) else np.zeros(0, dtype=np.int64)
-    seg_start = offsets[poly_for_point][pair_idx] + seg_local
+    poly_for_point = _pairs(poly_for_point, len(frac))
+    pair_idx, a = _pair_segments(offsets, poly_for_point)
     lon, lat = coords[:, 0], coords[:, 1]
-    alat, alon = lat[seg_start], lon[seg_start]
-    blat, blon = lat[seg_start + 1], lon[seg_start + 1]
+    alat, alon, blat, blon = lat[a], lon[a], lat[a + 1], lon[a + 1]
     ds = distance(alat, alon, blat, blon)
+    s_before, d_target, pick = _seek(ds, pair_idx, frac, poly_for_point, lengths)
 
     npairs = len(poly_for_point)
-    total = np.zeros(npairs)
-    np.add.at(total, pair_idx, ds)
-    if lengths is not None:
-        total = np.asarray(lengths, dtype=np.float64)[poly_for_point]
-
-    cum = np.zeros(len(ds) + 1)
-    np.cumsum(ds, out=cum[1:])
-    first_of_pair = np.maximum(_group_first(npairs, pair_idx), 0)
-    s_before = cum[np.arange(len(ds))] - cum[first_of_pair][pair_idx]
-
-    d_target = total * np.clip(frac, 0.0, 1.0)
-    # pick first segment where s_before + ds >= d_target (Geography.java:128-132)
-    reach = (s_before + ds + 1e-9) >= d_target[pair_idx]
-    pick = _group_first(npairs, pair_idx, reach)
-    # unreached (numerical): use last segment
-    last = np.maximum(_group_last(npairs, pair_idx), 0)
-    pick = np.where(pick < 0, last, pick) if len(ds) else pick
-
     out_lat = np.zeros(npairs)
     out_lon = np.zeros(npairs)
     ok = pick >= 0
@@ -609,17 +587,8 @@ def polyline_interpolate(coords, offsets, frac, poly_for_point=None, lengths=Non
         with np.errstate(divide="ignore", invalid="ignore"):
             local_f = np.where(ds[p] > 0, (d_target[ok] - s_before[p]) / np.where(ds[p] == 0, 1, ds[p]), 0.0)
         local_f = np.clip(local_f, 0.0, 1.0)
-        la, lo = interpolate_segment(alat[p], alon[p], blat[p], blon[p], local_f)
-        out_lat[ok] = la
-        out_lon[ok] = lo
-    # endpoint fast paths (f ~ 0 / ~ 1, Geography.java:119-125)
-    start_pt = offsets[poly_for_point]
-    end_pt = offsets[poly_for_point + 1] - 1
-    f0 = frac < 1e-10
-    f1 = frac > 1 - 1e-10
-    out_lat = np.where(f0, lat[start_pt], np.where(f1, lat[end_pt], out_lat))
-    out_lon = np.where(f0, lon[start_pt], np.where(f1, lon[end_pt], out_lon))
-    return out_lat, out_lon
+        out_lat[ok], out_lon[ok] = interpolate_segment(alat[p], alon[p], blat[p], blon[p], local_f)
+    return _snap_ends(lat, lon, offsets, poly_for_point, frac, out_lat, out_lon)
 
 
 def polyline_point_azimuth(coords, offsets, frac, poly_for_point=None, lengths=None):
@@ -631,38 +600,13 @@ def polyline_point_azimuth(coords, offsets, frac, poly_for_point=None, lengths=N
     Returns (lat, lon, azimuth[0,360))."""
     offsets = np.asarray(offsets, dtype=np.int64)
     frac = np.asarray(frac, dtype=np.float64)
-    if poly_for_point is None:
-        poly_for_point = np.arange(len(frac), dtype=np.int64)
-    else:
-        poly_for_point = np.asarray(poly_for_point, dtype=np.int64)
-
-    counts = (offsets[1:] - offsets[:-1] - 1)[poly_for_point]
-    pair_idx = np.repeat(np.arange(len(poly_for_point)), counts)
-    seg_local = (np.arange(len(pair_idx), dtype=np.int64)
-                 - np.repeat(np.concatenate(([0], np.cumsum(counts)[:-1])), counts)) \
-        if len(counts) else np.zeros(0, dtype=np.int64)
-    seg_start = offsets[poly_for_point][pair_idx] + seg_local
+    poly_for_point = _pairs(poly_for_point, len(frac))
+    pair_idx, a = _pair_segments(offsets, poly_for_point)
     lon, lat = coords[:, 0], coords[:, 1]
-    alat, alon = lat[seg_start], lon[seg_start]
-    blat, blon = lat[seg_start + 1], lon[seg_start + 1]
+    alat, alon, blat, blon = lat[a], lon[a], lat[a + 1], lon[a + 1]
     ds, seg_azi1, _ = inverse(alat, alon, blat, blon)
+    s_before, d_target, p = _seek(ds, pair_idx, frac, poly_for_point, lengths)
 
-    npairs = len(poly_for_point)
-    total = np.zeros(npairs)
-    np.add.at(total, pair_idx, ds)
-    if lengths is not None:
-        total = np.asarray(lengths, dtype=np.float64)[poly_for_point]
-    cum = np.zeros(len(ds) + 1)
-    np.cumsum(ds, out=cum[1:])
-    first = np.maximum(_group_first(npairs, pair_idx), 0)
-    s_before = cum[np.arange(len(ds))] - cum[first][pair_idx]
-
-    d_target = total * np.clip(frac, 0.0, 1.0)
-    reach = (s_before + ds + 1e-9) >= d_target[pair_idx]
-    pick = _group_first(npairs, pair_idx, reach)
-    last = np.maximum(_group_last(npairs, pair_idx), 0)
-    pick = np.where(pick < 0, last, pick) if len(ds) else pick
-    p = pick
     with np.errstate(divide="ignore", invalid="ignore"):
         d_local = np.clip(d_target - s_before[p], 0.0, None)
     out_lat, out_lon, azi2 = direct(alat[p], alon[p], seg_azi1[p], d_local)
@@ -670,13 +614,7 @@ def polyline_point_azimuth(coords, offsets, frac, poly_for_point=None, lengths=N
     out_lat = np.where(zero_len, alat[p], out_lat)
     out_lon = np.where(zero_len, alon[p], out_lon)
     azi = np.where(d_local < 1e-9, seg_azi1[p], azi2)
-    # endpoint fast paths (Geography.java:119-125)
-    f0 = frac < 1e-10
-    f1 = frac > 1 - 1e-10
-    start_pt = offsets[poly_for_point]
-    end_pt = offsets[poly_for_point + 1] - 1
-    out_lat = np.where(f0, lat[start_pt], np.where(f1, lat[end_pt], out_lat))
-    out_lon = np.where(f0, lon[start_pt], np.where(f1, lon[end_pt], out_lon))
+    out_lat, out_lon = _snap_ends(lat, lon, offsets, poly_for_point, frac, out_lat, out_lon)
     return out_lat, out_lon, np.where(azi < 0, azi + 360.0, azi)
 
 

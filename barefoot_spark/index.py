@@ -145,12 +145,9 @@ class RoadIndex:
         if len(self.cell_ids):
             ok = (pos < len(self.cell_ids)) & (self.cell_ids[pos_c] == cell)
         row_idx, pos = row_idx[ok], pos_c[ok]
-        counts = self.cell_offsets[pos + 1] - self.cell_offsets[pos]
-        pair_pt = np.repeat(row_idx, counts)
-        starts = np.zeros(len(counts) + 1, dtype=np.int64)
-        np.cumsum(counts, out=starts[1:])
-        local = np.arange(starts[-1], dtype=np.int64) - starts[np.repeat(np.arange(len(counts)), counts)]
-        pair_base = self.cell_members[self.cell_offsets[pos][np.repeat(np.arange(len(counts)), counts)] + local]
+        hit, local = geo.ragged(self.cell_offsets[pos + 1] - self.cell_offsets[pos])
+        pair_pt = row_idx[hit]
+        pair_base = self.cell_members[self.cell_offsets[pos][hit] + local]
         # dedup (point, base)
         if len(pair_pt):
             key = pair_pt * np.int64(len(self.gid)) + pair_base

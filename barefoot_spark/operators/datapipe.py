@@ -22,6 +22,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import ArrayType, IntegerType, LongType
 
+from .. import geo
+
 # ---------------------------------------------------------------------------
 # exact dedup — hash groupBy (map-side combine; one shuffle on the hash)
 # ---------------------------------------------------------------------------
@@ -63,6 +65,26 @@ def _minhash_params(num_perm: int, seed: int = 42):
     return a, b
 
 
+def _window_hashes(texts, k: int, mult):
+    """Polynomial hash (weights ``mult``) of every k-byte window of each
+    text's UTF-8 bytes, texts shorter than k padded with spaces, in one
+    pass over the batch's concatenated bytes (windows that cross a text
+    boundary are skipped). Returns (hashes, text of each window,
+    windows per text, each text's first window)."""
+    bufs = []
+    for t in texts:
+        bb = np.frombuffer((t or "").encode("utf-8", "ignore"), dtype=np.uint8)
+        bufs.append(np.pad(bb, (0, k - len(bb)), constant_values=32)
+                    if len(bb) < k else bb)
+    lens = np.array([len(bb) for bb in bufs], dtype=np.int64)
+    counts = lens - k + 1
+    doc, within = geo.ragged(counts)
+    win = np.lib.stride_tricks.sliding_window_view(np.concatenate(bufs), k)
+    hs = (win[(np.cumsum(lens) - lens)[doc] + within].astype(np.uint64)
+          * mult).sum(axis=1, dtype=np.uint64)
+    return hs, doc, counts, np.cumsum(counts) - counts
+
+
 def minhash_signature_udf(num_perm: int = 64, shingle_k: int = 5, seed: int = 42):
     """Batch-vectorized MinHash signatures: ONE sliding-window hash pass
     over the batch's concatenated bytes (windows crossing doc boundaries
@@ -80,27 +102,7 @@ def minhash_signature_udf(num_perm: int = 64, shingle_k: int = 5, seed: int = 42
         n = len(texts)
         if n == 0:
             return pd.Series([], dtype=object)
-        bufs = []
-        counts = np.empty(n, dtype=np.int64)
-        for i, t in enumerate(texts):
-            bb = np.frombuffer((t or "").encode("utf-8", "ignore"),
-                               dtype=np.uint8)
-            if len(bb) < shingle_k:
-                bb = np.pad(bb, (0, shingle_k - len(bb)), constant_values=32)
-            bufs.append(bb)
-            counts[i] = len(bb) - shingle_k + 1
-        buf = np.concatenate(bufs)
-        lens = np.array([len(bb) for bb in bufs], dtype=np.int64)
-        starts = np.concatenate([[0], np.cumsum(lens)[:-1]])
-        # valid window rows: [start_i, start_i + counts_i) per doc
-        total = int(counts.sum())
-        offs = np.concatenate([[0], np.cumsum(counts)[:-1]])
-        doc_of = np.repeat(np.arange(n), counts)
-        within = np.arange(total) - np.repeat(offs, counts)
-        win = np.lib.stride_tricks.sliding_window_view(buf, shingle_k)
-        rows = starts[doc_of] + within
-        sh_all = (win[rows].astype(np.uint64) * mult).sum(
-            axis=1, dtype=np.uint64)
+        sh_all, _doc, _counts, offs = _window_hashes(texts, shingle_k, mult)
         sig = np.empty((num_perm, n), dtype=np.uint64)
         for p in range(num_perm):
             sig[p] = np.minimum.reduceat((a[p] * sh_all + b[p]) % M, offs)
@@ -974,6 +976,26 @@ def mixture_sample(documents: DataFrame, fractions: dict,
                     F.col("_rank").cast("long").alias("rank")))
 
 
+def thin_frames_fold(times, phashes, min_interval: int, max_hamming: int,
+                     last=None):
+    """The frame-thinning recurrence over one trajectory's frames in time
+    order, from ``last`` = (t, phash) of the last kept frame (None: no
+    frame kept yet). A frame is dropped iff it is out of order (before
+    the last kept frame's time) or arrives within ``min_interval`` of the
+    last kept frame with its phash within ``max_hamming`` bits of that
+    frame's; a kept frame becomes the new reference. Returns (kept flags,
+    new ``last``)."""
+    kept = np.zeros(len(times), dtype=bool)
+    for i, (t, ph) in enumerate(zip(times.tolist(), phashes.tolist())):
+        if last is not None and (t < last[0] or (
+                t - last[0] < min_interval
+                and ((ph ^ last[1]) & 0xFFFFFFFFFFFFFFFF).bit_count() <= max_hamming)):
+            continue
+        kept[i] = True
+        last = (t, ph)
+    return kept, last
+
+
 def frame_thinning(frames: DataFrame, traj_col="traj_id", time_col="t",
                    id_col="image_id", phash_col="phash",
                    min_interval: int = 4, max_hamming: int = 6) -> DataFrame:
@@ -1003,24 +1025,10 @@ def frame_thinning(frames: DataFrame, traj_col="traj_id", time_col="t",
 
     def walk(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(["_t", id_col]).reset_index(drop=True)
-        t = pdf["_t"].to_numpy()
-        ph = pdf["_ph"].to_numpy().astype(np.uint64)
-        kept = np.zeros(len(t), dtype=bool)
-        have = False
-        lt = np.int64(0)
-        lp = np.uint64(0)
-        for i in range(len(t)):
-            if not have:
-                k = True
-            else:
-                near_t = (t[i] - lt) < min_interval
-                ham = int(ph[i] ^ lp).bit_count()
-                k = not (near_t and ham <= max_hamming)
-            kept[i] = k
-            if k:
-                have, lt, lp = True, t[i], ph[i]
         out = pdf[[traj_col, id_col, "_t"]].copy()
-        out["kept"] = kept
+        out["kept"], _ = thin_frames_fold(
+            pdf["_t"].to_numpy(), pdf["_ph"].to_numpy().astype(np.int64),
+            min_interval, max_hamming)
         return out
 
     schema = (f"{traj_col} {dt[traj_col]}, {id_col} {dt[id_col]}, "
@@ -2182,25 +2190,8 @@ def doc_fingerprint(documents: DataFrame, text_col="text", id_col="doc_id",
         n = len(texts)
         if n == 0:
             return pd.Series([], dtype=object)
-        bufs = []
-        counts = np.empty(n, dtype=np.int64)
-        for i, t in enumerate(texts):
-            bb = np.frombuffer((t or "").encode("utf-8", "ignore"),
-                               dtype=np.uint8)
-            if len(bb) < k:
-                bb = np.pad(bb, (0, k - len(bb)), constant_values=32)
-            bufs.append(bb)
-            counts[i] = len(bb) - k + 1
-        buf = np.concatenate(bufs)
-        lens = np.array([len(bb) for bb in bufs], dtype=np.int64)
-        starts = np.concatenate([[0], np.cumsum(lens)[:-1]])
-        total = int(counts.sum())
-        offs = np.concatenate([[0], np.cumsum(counts)[:-1]])
-        doc_of = np.repeat(np.arange(n), counts)
-        within = np.arange(total) - np.repeat(offs, counts)
-        win = np.lib.stride_tricks.sliding_window_view(buf, k)
-        hs = (win[starts[doc_of] + within].astype(np.uint64) * mult).sum(
-            axis=1, dtype=np.uint64)
+        hs, doc_of, counts, offs = _window_hashes(texts, k, mult)
+        total = len(hs)
         # sliding minima over the concatenated stream; keep only rows
         # whose w-window lies entirely inside one document
         docs_parts, vals_parts = [], []

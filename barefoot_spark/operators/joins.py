@@ -145,9 +145,7 @@ def segment_parts_pdf(idx, radius_m: float, res: int) -> pd.DataFrame:
     coords, offsets, gid = idx.coords, np.asarray(idx.offsets), idx.gid
     n_poly = len(offsets) - 1
     # sub-segment endpoint index pairs (i, i+1) within each polyline
-    seg_start = np.concatenate([np.arange(offsets[p], offsets[p + 1] - 1)
-                                for p in range(n_poly)])
-    poly_of = np.searchsorted(offsets, seg_start, side="right") - 1
+    poly_of, seg_start = geo._pair_segments(offsets, np.arange(n_poly))
     ax, ay = coords[seg_start, 0], coords[seg_start, 1]
     bx, by = coords[seg_start + 1, 0], coords[seg_start + 1, 1]
     seg_len = geo.distance(ay, ax, by, bx)
@@ -156,7 +154,7 @@ def segment_parts_pdf(idx, radius_m: float, res: int) -> pd.DataFrame:
     total = np.zeros(n_poly)
     pos = 0
     for p in range(n_poly):
-        m = offsets[p + 1] - offsets[p] - 1
+        m = max(offsets[p + 1] - offsets[p] - 1, 0)
         sl = seg_len[pos:pos + m]
         cum[pos:pos + m] = np.concatenate([[0.0], np.cumsum(sl[:-1])])
         total[p] = sl.sum()

@@ -430,15 +430,11 @@ def _minset_groups(idx: RoadIndex, grp, eidx, frac):
     # original per-candidate loop has no loop-carried dependency
     # (removal marks don't feed back into miss counting)
     starts = idx.succ_offsets[eidx]
-    counts = idx.succ_offsets[eidx + 1] - starts
-    total = int(counts.sum())
+    src, local = geo.ragged(idx.succ_offsets[eidx + 1] - starts)
     removed = np.zeros(n, dtype=bool)
-    if total:
+    if len(src):
         # gather successors of every candidate: ranges [starts, ends)
-        src = np.repeat(np.arange(n), counts)
-        flat = idx.successors[np.arange(total)
-                              + np.repeat(starts - (np.cumsum(counts) - counts),
-                                          counts)]
+        flat = idx.successors[starts[src] + local]
         flat_key = grp[src] * n_edges + flat
         pos = np.searchsorted(key, flat_key)
         pos_c = np.minimum(pos, n - 1)
@@ -828,6 +824,17 @@ def backtrack(sequence) -> list[tuple]:
             for j, c in enumerate(reversed(chain))]
 
 
+def thinned(params: MatcherParams, dt_ms, lat, lon, last_lat, last_lon) -> bool:
+    """The sample-thinning gate (Matcher.java:376-380,
+    TrackerServer.java:173-185): a sample less than min_interval_ms or
+    min_distance from the last kept sample is dropped. The geodesic is
+    computed only when the distance gate is on."""
+    if dt_ms < max(0, params.min_interval_ms):
+        return True
+    min_d = max(0.0, params.min_distance)
+    return min_d > 0.0 and float(geo.distance(lat, lon, last_lat, last_lon)) < min_d
+
+
 # Traces one ``forward_steps`` call advances together in the partition
 # kernel. An active trace holds its candidate sets and Viterbi sequence
 # until it ends, so this caps kernel memory at this many traces instead
@@ -863,27 +870,19 @@ class _TraceRun:
                 lats, lons = lats[keep_m], lons[keep_m]
                 azimuths = azimuths[keep_m]
 
-        # thinning (Matcher.java:376-380) needs the last *kept* sample, so
-        # the kept set is decided sequentially; radius search runs
-        # vectorized on the kept samples afterwards.
-        min_d = max(0.0, params.min_distance)
-        min_dt = max(0, params.min_interval_ms)
-        if min_d <= 0.0 and min_dt <= 0:
-            # both gates disabled (the defaults): nothing can thin, skip
-            # the per-sample geodesic entirely
+        # thinning needs the last *kept* sample, so the kept set is
+        # decided sequentially; radius search runs vectorized on the
+        # kept samples afterwards.
+        if params.min_distance <= 0.0 and params.min_interval_ms <= 0:
+            # both gates disabled (the defaults): nothing can thin
             kept = np.arange(len(times_ms))
         else:
-            kept = []
-            last_t, last_lat, last_lon = None, None, None
-            for i in range(len(times_ms)):
-                if last_t is not None:
-                    if (times_ms[i] - last_t) < min_dt:
-                        continue
-                    d = float(geo.distance(lats[i], lons[i], last_lat, last_lon))
-                    if d < min_d:
-                        continue
-                kept.append(i)
-                last_t, last_lat, last_lon = times_ms[i], lats[i], lons[i]
+            kept = [0] if len(times_ms) else []
+            for i in range(1, len(times_ms)):
+                j = kept[-1]
+                if not thinned(params, times_ms[i] - times_ms[j], lats[i],
+                               lons[i], lats[j], lons[j]):
+                    kept.append(i)
             kept = np.array(kept, dtype=np.int64)
         self.trace_id = trace_id
         self.ids, self.t = sample_ids[kept], times_ms[kept]

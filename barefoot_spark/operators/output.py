@@ -85,14 +85,6 @@ def route_geometry(idx: RoadIndex, route_eids, start_frac, end_frac):
     return np.array(out)
 
 
-ROUTE_WKT_SCHEMA = StructType([
-    StructField("trace_id", StringType()),
-    StructField("seq", DoubleType()),
-    StructField("edge_id", DoubleType()),
-    StructField("route_wkt", StringType()),
-])
-
-
 def with_route_geometry(matched: DataFrame, idx_bc) -> DataFrame:
     """Adds route_coords (array of [lon, lat]) per matched step — the
     per-transition geometry used by the GeoJSON/debug sinks."""

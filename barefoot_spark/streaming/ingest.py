@@ -18,12 +18,15 @@ applied to the image table's content keys.
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     BooleanType, LongType, StringType, StructField, StructType,
 )
+
+from ..operators.datapipe import thin_frames_fold
 
 
 def ingest_images_stream(images: DataFrame, time_col: str = "ts",
@@ -67,8 +70,8 @@ def thin_frames_stream(frames: DataFrame, min_interval: int = 4,
     """Streaming frame thinning, stateful per trajectory — the
     arrival-time twin of ``operators.datapipe.frame_thinning``. State
     is the last KEPT frame's (t, phash); each micro-batch folds its
-    frames in time order through the same keep/reference recurrence,
-    so an in-order stream drained under ANY micro-batch split emits
+    frames in time order through the batch operator's recurrence,
+    ``datapipe.thin_frames_fold``, so an in-order stream drained under ANY micro-batch split emits
     exactly the batch operator's keep flags (pytest-pinned equality).
     A frame arriving strictly before the last kept frame's time is
     out-of-order and emitted kept=false without touching state (the
@@ -81,13 +84,8 @@ def thin_frames_stream(frames: DataFrame, min_interval: int = 4,
     payload out of the state store entirely."""
 
     def fn(key, pdf_iter, state: GroupState):
-        traj = int(key[0])
-        if state.exists:
-            last_t, last_ph = (int(v) for v in state.get)
-            have = True
-        else:
-            have, last_t, last_ph = False, 0, 0
-        rows = []
+        last = tuple(int(v) for v in state.get) if state.exists else None
+        out = pd.DataFrame(columns=[f.name for f in THIN_FRAMES_SCHEMA.fields])
         # Concatenate the group's Arrow chunks BEFORE sorting: a
         # trajectory whose micro-batch slice spans multiple chunks
         # (arrow.maxRecordsPerBatch, or shuffle interleaving from a
@@ -98,26 +96,13 @@ def thin_frames_stream(frames: DataFrame, min_interval: int = 4,
         chunks = [pdf for pdf in pdf_iter if len(pdf)]
         if chunks:
             pdf = pd.concat(chunks, ignore_index=True) \
-                .sort_values(["t", "image_id"])
-            for r in pdf.itertuples(index=False):
-                t, ph = int(r.t), int(r.phash)
-                if have and t < last_t:
-                    rows.append((traj, r.image_id, t, False))
-                    continue
-                if have:
-                    ham = ((ph ^ last_ph)
-                           & 0xFFFFFFFFFFFFFFFF).bit_count()
-                    k = not ((t - last_t) < min_interval
-                             and ham <= max_hamming)
-                else:
-                    k = True
-                rows.append((traj, r.image_id, t, bool(k)))
-                if k:
-                    have, last_t, last_ph = True, t, ph
-        if have:
-            state.update((last_t, last_ph))
-        out = pd.DataFrame(
-            rows, columns=[f.name for f in THIN_FRAMES_SCHEMA.fields])
+                .sort_values(["t", "image_id"], ignore_index=True)
+            out = pdf[["traj_id", "image_id", "t"]].copy()
+            out["kept"], last = thin_frames_fold(
+                pdf["t"].to_numpy(np.int64), pdf["phash"].to_numpy(np.int64),
+                min_interval, max_hamming, last)
+        if last is not None:
+            state.update(last)
         return iter((out,))
 
     return (frames.select("traj_id", "image_id", "t", "phash")

@@ -31,7 +31,7 @@ import numpy as np
 from .. import geo
 from ..index import RoadIndex
 from ..operators.match import (
-    MatcherParams, _Cand, backtrack, estimate, forward_step,
+    MatcherParams, _Cand, backtrack, estimate, forward_step, thinned,
 )
 
 
@@ -95,11 +95,9 @@ class OnlineMatcher:
         if st.last_time is not None and t_ms < st.last_time:
             return "order", False, None
         # thinning gates (TrackerServer.java:173-185)
-        if st.last_time is not None:
-            d = float(geo.distance(lat, lon, st.last_lat, st.last_lon))
-            if d < max(0.0, self.params.min_distance) or \
-                    (t_ms - st.last_time) < max(0, self.params.min_interval_ms):
-                return "thin", False, None
+        if st.last_time is not None and thinned(
+                self.params, t_ms - st.last_time, lat, lon, st.last_lat, st.last_lon):
+            return "thin", False, None
 
         prev_vector = st.sequence[-1][0] if st.sequence else []
         prev_time = st.sequence[-1][1] if st.sequence else None

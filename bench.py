@@ -2,7 +2,8 @@
 queries at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 {"metric": ..., "value": total_sec, "unit": "sec",
- "queries": {name: sec, ...}, "sf": ..., "throughput": {...}}
+ "queries": {name: sec, ...}, "sf": ..., "throughput": {...},
+ "rows": {name: n, ...}, "checksums": {name: xor of xxhash64, ...}}
 
 Headline stages mirror BASELINE.json's metric definition: tile
 assignment throughput, broadcast-index spatial-join throughput, and
@@ -41,32 +42,45 @@ def _sf_of(sf_dir: str) -> float:
 
 
 def run_bench(spark, sf_dir: str, sf: float):
-    """Returns ({query: sec}, {stage: rows_per_sec})."""
+    """Returns ({query: sec}, {stage: rows_per_sec}, {query: rows},
+    {query: checksum})."""
     timings = {}
     throughput = {}
+    rows = {}
+    checksums = {}
 
     # best-of-3 default: this shared host shows 2-3x noise spikes on
     # single runs and the spikes often hit two consecutive reps
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
 
-    def timed(name, fn, rows_hint=None, pre=None):
-        """Best-of-`reps` timing (shared host shows 2-3x noise spikes on
-        single runs — the min is the achievable number; identical
-        protocol for every query). `pre` runs untimed before each rep
-        (cache resets so reps stay cold where the query persists)."""
-        best, n = None, None
+    def count(df):
+        return df.agg(F.count("*")).collect()
+
+    def timed(name, query, rows_hint=None, pre=None, action=count):
+        """Best-of-`reps` timing of ``action(query())`` (shared host
+        shows 2-3x noise spikes on single runs — the min is the
+        achievable number; identical protocol for every query). `pre`
+        runs untimed before each rep (cache resets so reps stay cold
+        where the query persists). One more untimed pass records the
+        query's row count and an order-insensitive checksum of its rows,
+        xor of xxhash64 over all columns, so two runs can show that
+        they returned the same rows."""
+        best = None
         for _ in range(max(1, reps)):
             if pre is not None:
                 pre()
             t0 = time.time()
-            n = fn()
+            action(query())
             dt = time.time() - t0
             best = dt if best is None else min(best, dt)
         timings[name] = round(best, 3)
         if rows_hint:
-            throughput[name] = round(
-                (rows_hint if isinstance(rows_hint, int) else n) / best)
-        return n
+            throughput[name] = round(rows_hint / best)
+        if pre is not None:
+            pre()
+        df = query()
+        rows[name], checksums[name] = df.agg(
+            F.count("*"), F.bit_xor(F.xxhash64(*[df[c] for c in df.columns]))).first()
 
     # --- spatial synthetic inputs (deterministic, sized by sf) ---
     grid_n = 16 if sf <= 0.02 else 24
@@ -105,14 +119,14 @@ def run_bench(spark, sf_dir: str, sf: float):
 
     # 1. tile assignment (pure codegen path)
     timed("tile_assign",
-          lambda: T.assign_tiles(synth_points(n_tile_points), res=15, parent_res=7)
-          .agg(F.count(F.col("cell")), F.sum(F.col("cell") % 97)).collect() and n_tile_points,
-          rows_hint=n_tile_points)
+          lambda: T.assign_tiles(synth_points(n_tile_points), res=15, parent_res=7),
+          rows_hint=n_tile_points,
+          action=lambda df: df.agg(F.count(F.col("cell")),
+                                   F.sum(F.col("cell") % 97)).collect())
 
     # 2. broadcast-index radius join (kernel probe path)
     timed("radius_join",
-          lambda: J.radius_join(synth_points(n_probe_points), idx_bc, 100.0)
-          .agg(F.count("*")).collect() and n_probe_points,
+          lambda: J.radius_join(synth_points(n_probe_points), idx_bc, 100.0),
           rows_hint=n_probe_points)
 
     # 2b. pure-Catalyst radius join (codegen scale path, no Python)
@@ -121,8 +135,7 @@ def run_bench(spark, sf_dir: str, sf: float):
     parts.count()
     timed("radius_join_fast",
           lambda: J.radius_join_fast(synth_points(n_probe_points), parts,
-                                     100.0, 15, single_part=True)
-          .agg(F.count("*")).collect() and n_probe_points,
+                                     100.0, 15, single_part=True),
           rows_hint=n_probe_points)
 
     # 3. Viterbi match
@@ -130,27 +143,21 @@ def run_bench(spark, sf_dir: str, sf: float):
     samples_df = spark.createDataFrame(geotags).repartition(
         spark.sparkContext.defaultParallelism, "trace_id").cache()
     n_samples = samples_df.count()
-    timed("viterbi_match",
-          lambda: M.match_traces(samples_df, idx_bc).agg(F.count("*")).collect()
-          and n_samples,
+    timed("viterbi_match", lambda: M.match_traces(samples_df, idx_bc),
           rows_hint=n_samples)
 
     # 4-8. analytics / datapipe on the driver tables
-    timed("lineitem_pricing",
-          lambda: EQ.q_lineitem_pricing(spark, sf_dir).collect())
-    timed("event_sessions",
-          lambda: EQ.q_event_sessions(spark, sf_dir).agg(F.count("*")).collect())
-    timed("exact_dedup",
-          lambda: EQ.q_exact_dedup(spark, sf_dir).agg(F.count("*")).collect())
+    timed("lineitem_pricing", lambda: EQ.q_lineitem_pricing(spark, sf_dir),
+          action=lambda df: df.collect())
+    timed("event_sessions", lambda: EQ.q_event_sessions(spark, sf_dir))
+    timed("exact_dedup", lambda: EQ.q_exact_dedup(spark, sf_dir))
     # clearCache per rep: minhash persists its bands table; without the
     # reset, rep 2 would reuse it and undercount. (The spatial input
     # caches above are already consumed by this point.)
-    timed("minhash_dedup",
-          lambda: EQ.q_minhash_dedup(spark, sf_dir).agg(F.count("*")).collect(),
+    timed("minhash_dedup", lambda: EQ.q_minhash_dedup(spark, sf_dir),
           pre=spark.catalog.clearCache)
-    timed("ann_topk",
-          lambda: EQ.q_ann_topk(spark, sf_dir).agg(F.count("*")).collect())
-    return timings, throughput
+    timed("ann_topk", lambda: EQ.q_ann_topk(spark, sf_dir))
+    return timings, throughput, rows, checksums
 
 
 def main():
@@ -160,7 +167,7 @@ def main():
     spark = build_session(app="barefoot-bench", master=f"local[{cpus}]",
                           shuffle_partitions=max(cpus, 8))
     spark.sparkContext.setLogLevel("ERROR")
-    timings, throughput = run_bench(spark, sf_dir, sf)
+    timings, throughput, rows, checksums = run_bench(spark, sf_dir, sf)
     total = round(sum(timings.values()), 3)
     print(json.dumps({
         "metric": "spatial-join+tile+viterbi headline wall-time",
@@ -169,6 +176,8 @@ def main():
         "queries": timings,
         "sf": sf,
         "throughput_rows_per_sec": throughput,
+        "rows": rows,
+        "checksums": checksums,
         "cpus": cpus,
     }))
     spark.stop()

@@ -7,9 +7,12 @@ brute-force scan along the geodesic.
 """
 
 import numpy as np
+import pandas as pd
 import pytest
 
-from barefoot_spark import geo
+from barefoot_spark import geo, roads, wkbio
+from barefoot_spark.index import RoadIndex
+from barefoot_spark.operators import joins as J
 
 
 def test_inverse_known_vincenty_vector():
@@ -248,3 +251,38 @@ def test_road_invert_reference_wkts():
             wkbio.reverse_linestring_wkb(wkbio.linestring_to_wkb(coords)))
         assert len(inv) == len(coords)
         np.testing.assert_allclose(inv, coords[::-1], atol=1e-6)
+
+
+def test_ragged_and_degenerate_polylines():
+    group, pos = geo.ragged(np.zeros(0, dtype=np.int64))
+    assert len(group) == len(pos) == 0
+    group, pos = geo.ragged([0, 2, 0, 3, 0])
+    assert group.tolist() == [1, 1, 3, 3, 3]
+    assert pos.tolist() == [0, 1, 0, 1, 2]
+
+    # polylines of 0, 1 and 3 vertices
+    coords = np.array([[11.0, 48.0], [11.0, 48.0], [11.001, 48.0], [11.002, 48.001]])
+    offsets = np.array([0, 0, 1, 4])
+    length = geo.polyline_length(coords, offsets)
+    assert length[0] == 0.0 and length[1] == 0.0
+    assert length[2] == geo.polyline_length(coords[1:], np.array([0, 3]))[0] > 0
+    # pairs with segment-less polylines only: no segment, no distance
+    assert geo.polyline_min_dist_planar(coords, offsets, [48.0], [11.0], [0])[0] == np.inf
+
+    # a road without vertices, first by gid, gets length 0, no query hit
+    # and no codegen-join part; the other roads answer as in an index
+    # without it
+    pdf = roads.micro7_pdf()
+    pdf["gid"] += 1
+    empty = pdf.iloc[[0]].assign(gid=0, geom_wkb=[wkbio.linestring_to_wkb(np.zeros((0, 2)))])
+    idx = RoadIndex(pdf, res=15)
+    with_empty = RoadIndex(pd.concat([empty, pdf], ignore_index=True), res=15)
+    assert with_empty.length[0] == 0.0
+    np.testing.assert_array_equal(with_empty.length[1:], idx.length)
+    rng = np.random.default_rng(5)
+    lat, lon = rng.uniform(48.0, 48.012, 300), rng.uniform(11.0, 11.022, 300)
+    (pt, base, frac, dist), want = with_empty.radius(lat, lon, 200.0), idx.radius(lat, lon, 200.0)
+    for got, exp in zip((pt, with_empty.gid[base], frac, dist), (want[0], idx.gid[want[1]]) + want[2:]):
+        np.testing.assert_array_equal(got, exp)
+    pd.testing.assert_frame_equal(J.segment_parts_pdf(with_empty, 100.0, 15),
+                                  J.segment_parts_pdf(idx, 100.0, 15))

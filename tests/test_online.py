@@ -23,25 +23,25 @@ def grid_idx():
     return RoadIndex(roads.grid_pdf(6, seed=5), res=15)
 
 
-def offline_rows(idx, samples):
-    params = M.MatcherParams()
+def offline_rows(idx, samples, params=M.MatcherParams()):
     ids = [str(i) for i in range(len(samples))]
     return M.match_trace(idx, "t", ids, [s[0] for s in samples],
                          [s[1] for s in samples], [s[2] for s in samples],
                          [s[3] if len(s) > 3 else np.nan for s in samples], params)
 
 
-def check_equality(idx, samples):
-    om = OnlineMatcher(idx)
+def check_equality(idx, samples, params=M.MatcherParams()):
+    om = OnlineMatcher(idx, params)
     for (t, lat, lon, *rest) in samples:
         azi = rest[0] if rest else float("nan")
         om.update("t", t, lat, lon, azi)
     online_seq = om.sequence("t")
-    offline = offline_rows(idx, samples)
+    offline = offline_rows(idx, samples, params)
     assert len(online_seq) == len(offline)
     for o_row, f_row in zip(online_seq, offline):
         assert o_row[2] == f_row[4]                       # edge id
         assert abs(o_row[3] - f_row[5]) < 1e-10           # fraction
+    return offline
 
 
 def test_online_equals_offline_micro7(idx):
@@ -51,9 +51,14 @@ def test_online_equals_offline_micro7(idx):
 
 def test_online_equals_offline_synthetic(grid_idx):
     pdf = SS.synth_traces(grid_idx, n_traces=3, samples_per_trace=25, seed=13)
+    # 1 Hz samples at 12 m/s: the distance gate drops samples that the
+    # interval gate keeps
+    thinned = M.MatcherParams(min_distance=30.0, min_interval_ms=2000)
     for tid, g in pdf.groupby("trace_id"):
         samples = list(zip(g["time"], g["lat"], g["lon"], g["azimuth"]))
         check_equality(grid_idx, samples)
+        assert len(check_equality(grid_idx, samples, thinned)) < len(offline_rows(
+            grid_idx, samples, M.MatcherParams(min_interval_ms=2000)))
 
 
 @pytest.mark.parametrize("cap", [None, 1])
