@@ -132,9 +132,11 @@ def cover_radius(lat, lon, radius_m, res):
 
 def cover_polyline(coords, offsets, res, pad_m=0.0):
     """Cells covering each polyline's envelope (+optional meter padding).
-    Index-build primitive for the roads table."""
+    Index-build primitive for the roads table. A polyline without
+    vertices has no envelope and gets no cell."""
     offsets = np.asarray(offsets, dtype=np.int64)
     n = len(offsets) - 1
+    rows = np.flatnonzero(np.diff(offsets) > 0)
     lon = coords[:, 0]
     lat = coords[:, 1]
     poly_idx = np.searchsorted(offsets, np.arange(len(coords)), side="right") - 1
@@ -152,4 +154,6 @@ def cover_polyline(coords, offsets, res, pad_m=0.0):
         dlon = pad_m / (M_PER_DEG_LON_EQ * coslat)
         lat_min, lat_max = lat_min - dlat, lat_max + dlat
         lon_min, lon_max = lon_min - dlon, lon_max + dlon
-    return cover_envelope(lat_min, lat_max, lon_min, lon_max, res)
+    row_idx, cell = cover_envelope(lat_min[rows], lat_max[rows],
+                                   lon_min[rows], lon_max[rows], res)
+    return rows[row_idx], cell

@@ -13,15 +13,43 @@ or a manifest of completed partition-key values (partitioned stages), so
 a re-run skips finished work. Every run appends rows to
 ``<base>/_metrics``:
 (stage, partition_id, output_rows, checksum, wall_ms, run_ts) — the
-checksum is an order-insensitive xxhash64 sum, giving cheap cross-run
-equality checks (e.g. the tile assignments at local[8] vs local[32]).
+checksum is an order-insensitive ``bit_xor`` of per-row xxhash64 values,
+giving cheap cross-run equality checks (e.g. the tile assignments at
+local[8] vs local[32]).
+
+Cost of the bookkeeping, in Spark jobs (a bare job is ~0.1 s on a
+4-core host): a ``run_stage`` commit runs the stage's own write, then
+one query, the per-partition count + checksum aggregate over the
+committed files, whose rows the driver appends to ``_metrics`` as one
+parquet file of its own; a resume runs none — it reads the schema Spark
+stored in one committed part file's footer instead of inferring it.
 """
 
 from __future__ import annotations
 
+import json
 import time
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import (DoubleType, IntegerType, LongType, StringType,
+                               StructField, StructType)
+
+# footer key under which Spark's parquet writer stores the row schema
+SPARK_SCHEMA_KEY = "org.apache.spark.sql.parquet.row.metadata"
+
+# the ``_metrics`` table's fixed schema, so parts of Spark's writer and of
+# the driver's read alike (all nullable, as Spark writes every schema)
+METRICS_SCHEMA = StructType([
+    StructField("stage", StringType()),
+    StructField("partition_id", IntegerType()),
+    StructField("output_rows", LongType()),
+    StructField("checksum", LongType()),
+    StructField("wall_ms", DoubleType()),
+    StructField("run_ts", LongType())])
 
 
 class StageRunner:
@@ -67,34 +95,82 @@ class StageRunner:
     def is_complete(self, stage: str) -> bool:
         return self._exists(self._join(stage, "_SUCCESS"))
 
+    def _append_rows(self, path: str, schema: StructType, rows) -> None:
+        """Append ``rows`` to the parquet table at ``path`` as one file
+        written on the driver: no Spark job. The file is written under a
+        hidden name, which every reader skips, and renamed into place,
+        so a crash leaves no half-written part. Its footer carries the
+        Spark schema, as a file of Spark's own writer does."""
+        arrow = to_arrow_schema(schema).with_metadata(
+            {SPARK_SCHEMA_KEY: schema.json()})
+        buf = pa.BufferOutputStream()
+        pq.write_table(pa.Table.from_pylist(
+            [dict(zip(schema.names, r)) for r in rows], schema=arrow), buf)
+        fs, jdir = self._fs(path)
+        name = f"part-{uuid.uuid4()}.snappy.parquet"
+        tmp, dst = self._Path(jdir, "." + name), self._Path(jdir, name)
+        stream = fs.create(tmp, False)
+        try:
+            stream.write(buf.getvalue().to_pybytes())
+        finally:
+            stream.close()
+        if not fs.rename(tmp, dst):
+            raise OSError(f"could not rename {tmp.toString()} to {dst.toString()}")
+
+    def _read_committed(self, path: str) -> DataFrame:
+        """Read a committed parquet table with the schema stored in one
+        part file's footer, which is the schema ``spark.read.parquet``
+        would infer, without the inference job."""
+        fs, jdir = self._fs(path)
+        part = next((st.getPath() for st in fs.listStatus(jdir) if st.isFile()
+                     and not st.getPath().getName().startswith(("_", "."))), None)
+        if part is None:
+            raise FileNotFoundError(f"no parquet part file under {path}")
+        jvm = self.spark._jvm
+        reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+            jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+                part, self.spark._jsc.hadoopConfiguration()))
+        try:
+            stored = (reader.getFooter().getFileMetaData()
+                      .getKeyValueMetaData().get(SPARK_SCHEMA_KEY))
+        finally:
+            reader.close()
+        schema = StructType.fromJson(json.loads(stored))
+        return self.spark.read.schema(schema).parquet(path)
+
     def _write_metrics(self, stage: str, out_df: DataFrame, wall_ms: float):
         cols = [f.name for f in out_df.schema.fields
                 if f.dataType.typeName() not in ("array", "map", "struct", "binary")]
-        m = (out_df
-             .withColumn("__pid", F.spark_partition_id())
-             .groupBy("__pid")
-             .agg(F.count("*").alias("output_rows"),
-                  # bit_xor: order-insensitive and overflow-free (ANSI
-                  # mode forbids overflowing long sums of hashes)
-                  F.expr(f"bit_xor(xxhash64({', '.join(cols)}))").alias("checksum"))
-             .select(F.lit(stage).alias("stage"),
-                     F.col("__pid").alias("partition_id"),
-                     "output_rows", "checksum",
-                     F.lit(float(wall_ms)).alias("wall_ms"),
-                     F.lit(int(time.time() * 1000)).alias("run_ts")))
-        m.write.mode("append").parquet(self._metrics_path())
+        agg = (out_df
+               .groupBy(F.spark_partition_id().alias("partition_id"))
+               .agg(F.count("*").alias("output_rows"),
+                    # bit_xor: order-insensitive and overflow-free (ANSI
+                    # mode forbids overflowing long sums of hashes)
+                    F.expr(f"bit_xor(xxhash64({', '.join(cols)}))").alias("checksum")))
+        sc = self.spark.sparkContext
+        prev = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(f"ckpt {stage}: metrics")
+        try:
+            parts = sorted(agg.collect())
+        finally:
+            sc.setLocalProperty("spark.job.description", prev)
+        run_ts = int(time.time() * 1000)
+        self._append_rows(self._metrics_path(), METRICS_SCHEMA,
+                          [(stage, *r, float(wall_ms), run_ts) for r in parts])
 
     def run_stage(self, stage: str, build) -> DataFrame:
         """Materialize ``build()`` under the stage directory unless a
         complete output already exists (resume = skip)."""
         out = self._out(stage)
         if self.is_complete(stage):
-            return self.spark.read.parquet(out)
+            return self._read_committed(out)
         t0 = time.time()
         df = build() if callable(build) else build
         df.write.mode("overwrite").parquet(out)
         wall_ms = (time.time() - t0) * 1000
-        written = self.spark.read.parquet(out)
+        # Spark reads a file source with every column nullable, as its
+        # writer stored them, so this is the schema inference would give
+        written = self.spark.read.schema(df.schema).parquet(out)
         self._write_metrics(stage, written, wall_ms)
         return written
 
@@ -109,7 +185,7 @@ class StageRunner:
         if not self._exists(path):
             return None
         try:
-            return self.spark.read.parquet(path)
+            return self._read_committed(path)
         except Exception:
             return None
 
@@ -137,18 +213,18 @@ class StageRunner:
             # manifest schema derives from the key column's actual type
             # (a hardcoded long would crash on string keys — e.g. the
             # documented H3-prefix-string partitioning)
-            from pyspark.sql.types import StructField, StructType
             mschema = StructType(
                 [StructField("key", input_df.schema[key_col].dataType)])
-            (self.spark.createDataFrame([(k,) for k in keys], mschema)
-             .write.mode("append").parquet(self._manifest_path(stage)))
+            self._append_rows(self._manifest_path(stage), mschema,
+                              [(k,) for k in keys])
         return self.spark.read.parquet(out)
 
     def metrics(self) -> DataFrame:
-        return self.spark.read.parquet(self._metrics_path())
+        return self.spark.read.schema(METRICS_SCHEMA).parquet(self._metrics_path())
 
-    def stage_checksum(self, stage: str) -> int:
-        """Order-insensitive whole-stage checksum (sum over partitions) —
+    def stage_checksum(self, stage: str) -> tuple[int, int]:
+        """Order-insensitive whole-stage (checksum, rows): the ``bit_xor``
+        of the per-partition checksums and the sum of their row counts —
         identical across parallelism levels iff the rows are."""
         m = self.metrics().filter(F.col("stage") == stage)
         row = m.agg(F.expr("bit_xor(checksum)").alias("c"),

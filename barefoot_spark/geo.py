@@ -499,7 +499,9 @@ def polyline_intercept(coords, offsets, latc, lonc, poly_for_point=None):
     97-134). Projection cost: ONE vectorized geodesic inverse per
     (pair, vertex), shared across the vertex's two adjacent segments.
 
-    Returns (fraction, min_distance_m).
+    Returns (fraction, min_distance_m); a pair whose polyline has no
+    segment (0 or 1 vertex) gets fraction 0 and distance inf, as in
+    ``polyline_min_dist_planar``.
     """
     latc = np.asarray(latc, dtype=np.float64)
     lonc = np.asarray(lonc, dtype=np.float64)
@@ -536,7 +538,7 @@ def polyline_intercept(coords, offsets, latc, lonc, poly_for_point=None):
     sf[ok] = f[pick[ok]] * ds[pick[ok]] + s_before[pick[ok]]
     with np.errstate(divide="ignore", invalid="ignore"):
         frac = np.where(total > 0, sf / np.where(total == 0, 1, total), 0.0)
-    return frac, np.where(np.isinf(best_d), 0.0, best_d)
+    return frac, best_d
 
 
 def _seek(ds, pair_idx, frac, poly_for_point, lengths):

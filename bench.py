@@ -3,7 +3,8 @@ queries at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 {"metric": ..., "value": total_sec, "unit": "sec",
  "queries": {name: sec, ...}, "sf": ..., "throughput": {...},
- "rows": {name: n, ...}, "checksums": {name: xor of xxhash64, ...}}
+ "rows": {name: n, ...}, "checksums": {name: xor of xxhash64, ...},
+ "jobs": {name: Spark jobs of the last timed rep, ...}}
 
 Headline stages mirror BASELINE.json's metric definition: tile
 assignment throughput, broadcast-index spatial-join throughput, and
@@ -43,11 +44,13 @@ def _sf_of(sf_dir: str) -> float:
 
 def run_bench(spark, sf_dir: str, sf: float):
     """Returns ({query: sec}, {stage: rows_per_sec}, {query: rows},
-    {query: checksum})."""
+    {query: checksum}, {query: jobs})."""
     timings = {}
     throughput = {}
     rows = {}
     checksums = {}
+    jobs = {}
+    sc = spark.sparkContext
 
     # best-of-3 default: this shared host shows 2-3x noise spikes on
     # single runs and the spikes often hit two consecutive reps
@@ -64,15 +67,23 @@ def run_bench(spark, sf_dir: str, sf: float):
         where the query persists). One more untimed pass records the
         query's row count and an order-insensitive checksum of its rows,
         xor of xxhash64 over all columns, so two runs can show that
-        they returned the same rows."""
+        they returned the same rows. The last timed rep runs in a job
+        group, to count its Spark jobs (~0.1 s each on a small host)."""
         best = None
-        for _ in range(max(1, reps)):
+        group, last = f"bench-{name}", max(1, reps) - 1
+        for rep in range(last + 1):
             if pre is not None:
                 pre()
+            if rep == last:
+                sc.setJobGroup(group, name)
             t0 = time.time()
             action(query())
             dt = time.time() - t0
             best = dt if best is None else min(best, dt)
+        sc._jsc.clearJobGroup()
+        # the status store is fed by the listener bus, which runs behind
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
         timings[name] = round(best, 3)
         if rows_hint:
             throughput[name] = round(rows_hint / best)
@@ -157,7 +168,7 @@ def run_bench(spark, sf_dir: str, sf: float):
     timed("minhash_dedup", lambda: EQ.q_minhash_dedup(spark, sf_dir),
           pre=spark.catalog.clearCache)
     timed("ann_topk", lambda: EQ.q_ann_topk(spark, sf_dir))
-    return timings, throughput, rows, checksums
+    return timings, throughput, rows, checksums, jobs
 
 
 def main():
@@ -167,7 +178,7 @@ def main():
     spark = build_session(app="barefoot-bench", master=f"local[{cpus}]",
                           shuffle_partitions=max(cpus, 8))
     spark.sparkContext.setLogLevel("ERROR")
-    timings, throughput, rows, checksums = run_bench(spark, sf_dir, sf)
+    timings, throughput, rows, checksums, jobs = run_bench(spark, sf_dir, sf)
     total = round(sum(timings.values()), 3)
     print(json.dumps({
         "metric": "spatial-join+tile+viterbi headline wall-time",
@@ -179,6 +190,7 @@ def main():
         "rows": rows,
         "checksums": checksums,
         "cpus": cpus,
+        "jobs": jobs,
     }))
     spark.stop()
 

@@ -1,6 +1,8 @@
 """Cell-index (bfcell) unit tests: pack/unpack roundtrip, parent
 hierarchy, deterministic tile assignment, and envelope covers."""
 
+import warnings
+
 import numpy as np
 
 from barefoot_spark import cells
@@ -67,3 +69,18 @@ def test_cover_polyline_micro():
     b = cells.latlng_to_cell(np.array([48.0]), np.array([11.01]), 14)[0]
     got = set(cover.tolist())
     assert a in got and b in got
+
+
+def test_cover_polyline_skips_vertexless():
+    # a 0-vertex road between two roads has no envelope: no cover row,
+    # no cast of its +/-inf bounds, and the other roads keep their cells
+    coords = np.array([[11.0, 48.0], [11.01, 48.0], [11.0, 48.0], [11.01, 48.0]])
+    want_row, want = cells.cover_polyline(coords, np.array([0, 2, 4]), 14)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        row, cover = cells.cover_polyline(coords, np.array([0, 0, 2, 2, 4]), 14)
+        none_row, _ = cells.cover_polyline(coords[:0], np.array([0, 0]), 14)
+    assert len(none_row) == 0
+    assert 0 not in row.tolist() and 2 not in row.tolist()
+    np.testing.assert_array_equal(cover, want)
+    np.testing.assert_array_equal(row, np.where(want_row == 0, 1, 3))

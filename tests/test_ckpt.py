@@ -1,13 +1,38 @@
 """Checkpoint/lineage/resume tests: stage skip on re-run, metrics rows,
-partition-granular resume, cross-run checksum equality."""
+partition-granular resume, cross-run checksum equality, the Spark jobs a
+commit and a resume run, and the schemas they return."""
+
+import datetime
+import decimal
+import uuid
 
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import functions as F, types as ST
 
-from barefoot_spark.ckpt import StageRunner
+from barefoot_spark.ckpt import METRICS_SCHEMA, StageRunner
 from barefoot_spark.operators import tiles as T
+
+
+def counted_jobs(spark, fn):
+    """(fn(), ids of the Spark jobs fn ran), counted through a job group."""
+    sc = spark.sparkContext
+    group = f"test-{uuid.uuid4()}"
+    sc.setJobGroup(group, "counted")
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    # the status store is fed by the listener bus, which runs behind
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def assert_inferred_schema(spark, runner, stage, *dfs):
+    ref = spark.read.parquet(runner._out(stage)).schema
+    for df in dfs:
+        assert df.schema == ref
 
 
 @pytest.fixture()
@@ -35,10 +60,106 @@ def test_stage_resume_skips(spark, points_df, tmp_path):
     assert len(calls) == 1
     assert out2.count() == 2000
 
+    assert_inferred_schema(spark, runner, "tiles", out1, out2)
+
     m = runner.metrics().toPandas()
     assert set(m["stage"]) == {"tiles"}
     assert m["output_rows"].sum() == 2000
     assert m["checksum"].notna().all()
+
+
+def test_commit_and_resume_job_counts(spark, points_df, tmp_path):
+    """A commit runs the stage's own write jobs plus one bookkeeping
+    query, the per-partition aggregate (under AQE its shuffle-map job and
+    its result job); a resume runs no job at all."""
+    tiles = T.assign_tiles(points_df, res=14)
+    _, own = counted_jobs(spark, lambda: tiles.write.parquet(str(tmp_path / "own")))
+    runner = StageRunner(spark, str(tmp_path / "base"))
+    sc = spark.sparkContext
+    described = []
+
+    def commit_stage():
+        out = runner.run_stage("tiles", tiles)
+        # the caller's job description is back in place
+        described.append(sc.getLocalProperty("spark.job.description"))
+        return out
+    out, commit = counted_jobs(spark, commit_stage)
+    assert described == ["counted"]
+    assert len(own) >= 1 and len(commit) == len(own) + 2
+    store = sc._jsc.sc().statusStore()
+    assert [store.job(j).description().get() for j in commit[-2:]] == \
+        ["ckpt tiles: metrics"] * 2
+    resumed, resume = counted_jobs(spark, lambda: StageRunner(
+        spark, str(tmp_path / "base")).run_stage("tiles", tiles))
+    assert resume == []
+    assert_inferred_schema(spark, runner, "tiles", out, resumed)
+    assert resumed.count() == 2000
+
+
+def test_committed_schema_equals_inferred(spark, tmp_path):
+    """Nested, temporal, decimal, map and non-nullable columns: the
+    commit's read-back and the footer-schema resume both return the
+    schema ``spark.read.parquet`` infers, for empty stages too."""
+    schema = ST.StructType([
+        ST.StructField("id", ST.LongType(), False),
+        ST.StructField("arr", ST.ArrayType(ST.DoubleType(), False), False),
+        ST.StructField("st", ST.StructType([
+            ST.StructField("a", ST.IntegerType(), False),
+            ST.StructField("b", ST.StringType())]), False),
+        ST.StructField("ts", ST.TimestampType()),
+        ST.StructField("tsn", ST.TimestampNTZType()),
+        ST.StructField("d", ST.DateType()),
+        ST.StructField("dec", ST.DecimalType(12, 3)),
+        ST.StructField("m", ST.MapType(ST.StringType(), ST.LongType(), False)),
+        ST.StructField("bin", ST.BinaryType()),
+        ST.StructField("f", ST.FloatType()),
+        ST.StructField("flag", ST.BooleanType())])
+    row = (1, [1.0, 2.0], (3, "x"), datetime.datetime(2020, 1, 1),
+           datetime.datetime(2020, 1, 2), datetime.date(2020, 1, 3),
+           decimal.Decimal("1.500"), {"k": 1}, b"ab", 1.5, True)
+    df = spark.createDataFrame([row], schema).withColumn(
+        "tagged", F.col("id").alias("tagged", metadata={"comment": "kept"}))
+    runner = StageRunner(spark, str(tmp_path))
+    for stage, data in (("rich", df), ("empty", df.filter("id < 0"))):
+        out1 = runner.run_stage(stage, data)
+        out2 = StageRunner(spark, str(tmp_path)).run_stage(stage, data)
+        assert_inferred_schema(spark, runner, stage, out1, out2)
+        assert out2.collect() == data.collect()
+
+
+def test_metrics_mixed_writers(spark, points_df, tmp_path):
+    """``_metrics`` may hold parts of Spark's own writer (as runs stored
+    them before the driver wrote the table) beside driver-written parts
+    and a leftover hidden temp file of a crashed append: ``metrics()``
+    keeps the column types, the temp file is skipped, and the checksums
+    are those of Spark's aggregate."""
+    runner = StageRunner(spark, str(tmp_path))
+    tiles = runner.run_stage("tiles", lambda: T.assign_tiles(points_df, res=14))
+    want = runner.stage_checksum("tiles")
+    metrics_dir = tmp_path / "_metrics"
+    cols = [f.name for f in tiles.schema.fields]
+    (tiles.withColumn("__pid", F.spark_partition_id())
+     .groupBy("__pid")
+     .agg(F.count("*").alias("output_rows"),
+          F.expr(f"bit_xor(xxhash64({', '.join(cols)}))").alias("checksum"))
+     .select(F.lit("spark").alias("stage"), F.col("__pid").alias("partition_id"),
+             "output_rows", "checksum", F.lit(1.0).alias("wall_ms"),
+             F.lit(0).cast("long").alias("run_ts"))
+     .write.mode("append").parquet(str(metrics_dir)))
+    runner.run_stage("again", lambda: T.assign_tiles(points_df, res=14))
+    (metrics_dir / ".part-crashed.snappy.parquet").write_bytes(b"PAR1")
+
+    m = runner.metrics().toPandas()
+    assert m.dtypes.astype(str).to_dict() == {
+        "stage": "object", "partition_id": "int32", "output_rows": "int64",
+        "checksum": "int64", "run_ts": "int64", "wall_ms": "float64"}
+    assert sorted(set(m["stage"])) == ["again", "spark", "tiles"]
+    assert runner.stage_checksum("tiles") == want
+    assert runner.stage_checksum("spark") == want
+    assert runner.stage_checksum("again") == want
+    # either writer's footer gives the same inferred schema
+    for part in metrics_dir.glob("part-*.parquet"):
+        assert spark.read.parquet(str(part)).schema == METRICS_SCHEMA
 
 
 def test_checksum_stable_across_parallelism(spark, points_df, tmp_path):
@@ -103,8 +224,9 @@ def test_partitioned_resume_string_key(spark, tmp_path):
     out3 = runner.run_partitioned_stage("s", df.unionByName(extra),
                                         "pfx", transform)
     assert out3.count() == 41 and calls == [4, 1]
-    keys = {r[0] for r in runner.completed_keys("s").collect()}
-    assert keys == {"cell0", "cell1", "cell2", "cell3", "cell9"}
+    done = runner.completed_keys("s")
+    assert done.schema["key"].dataType == ST.StringType()
+    assert {r[0] for r in done.collect()} == {"cell0", "cell1", "cell2", "cell3", "cell9"}
 
 
 def test_partitioned_resume(spark, points_df, tmp_path):

@@ -268,6 +268,12 @@ def test_ragged_and_degenerate_polylines():
     assert length[2] == geo.polyline_length(coords[1:], np.array([0, 3]))[0] > 0
     # pairs with segment-less polylines only: no segment, no distance
     assert geo.polyline_min_dist_planar(coords, offsets, [48.0], [11.0], [0])[0] == np.inf
+    # ... also exactly: a 0- or 1-vertex road is on no point, even one
+    # on its only vertex; the 3-vertex road still answers
+    frac, dist = geo.polyline_intercept(coords, offsets, [48.0, 48.0, 48.0],
+                                        [11.0, 11.0, 11.0], poly_for_point=[0, 1, 2])
+    assert dist[:2].tolist() == [np.inf, np.inf] and frac[:2].tolist() == [0.0, 0.0]
+    assert dist[2] == geo.polyline_intercept(coords[1:], np.array([0, 3]), [48.0], [11.0])[1][0] < 1e-6
 
     # a road without vertices, first by gid, gets length 0, no query hit
     # and no codegen-join part; the other roads answer as in an index

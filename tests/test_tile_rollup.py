@@ -112,6 +112,13 @@ def test_tile_pyramid_reliable_mode_resumes(spark, tmp_path):
             .toPandas().sort_values(["res", "cell"])
             .reset_index(drop=True))
     pd.testing.assert_frame_equal(rel, rel2)
+    # every committed stage resumes with the schema inference would find
+    stages = sorted((tmp_path / "pyr").glob("pyramid:*"))
+    assert len(stages) == 6
+    for stage in stages:
+        resumed = runner2.run_stage(stage.name, lambda: pytest.fail("rebuilt"))
+        assert (resumed.schema
+                == spark.read.parquet(str(stage)).schema)
 
 
 def test_tile_pyramid_crash_mid_dag_resumes(spark, tmp_path):

@@ -77,6 +77,7 @@ def test_match_digest_independent_of_partitions(spark, grid, traces,
         out = runner.run_stage(
             stage, lambda: M.match_traces(traces, bc,
                                           num_partitions=num_partitions))
+        assert out.schema == spark.read.parquet(str(tmp_path / stage)).schema
         row = out.agg(F.count(F.lit(1)).alias("n"),
                       F.expr("bit_xor(xxhash64(*))").alias("x")).first()
         return row["n"], row["x"]
